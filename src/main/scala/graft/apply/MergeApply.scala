@@ -206,25 +206,15 @@ object MergeApply {
     }
   }
 
-  /** set GRAFT_PHASE_TIMING=1 to print per-phase timings to stderr */
-  private val phaseTiming = sys.props.get("graft.phase.timing").contains("1") ||
-    sys.env.get("GRAFT_PHASE_TIMING").contains("1")
-  /** Labels the phase's jobs in the UI (thread-local, guide §1.5 — one
-    * setProperty call, negligible) and optionally times it to stderr. */
+  /** Labels the phase's jobs `merge: <label>` in the UI and to listeners
+    * (thread-local, guide §1.5 — one setProperty call, negligible); job
+    * attribution by phase keys on this label. */
   @inline private def timed[T](label: String)(f: => T): T = {
     val sc = org.apache.spark.sql.SparkSession.active.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(s"merge: $label")
-    try {
-      if (!phaseTiming) f
-      else {
-        val t0 = System.nanoTime()
-        val r = f
-        System.err.println(f"[phase] $label ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"end=${System.currentTimeMillis()}")
-        r
-      }
-    } finally sc.setJobDescription(prev)
+    try f
+    finally sc.setJobDescription(prev)
   }
 
   /** Deterministic per-batch "now" (replaces the reference's wall-clock NOW(),
@@ -541,122 +531,13 @@ object MergeApply {
         (observed.filter(!nullKey), resolve)
       }
 
-    // Observe-free twin of the merge input for the LWW winner pre-pass
-    // (lwwPrefilter): the pre-pass projects ONLY (keys, lsn), but a
-    // CollectMetrics node forces every column its metric expressions touch
-    // (tokens, for the payload invariant) to be read — the twin keeps the
-    // pre-pass scan column-pruned. Predicates/transforms are the exact same
-    // Column expressions, so the two lineages can never disagree on a row.
-    lazy val mergeInputLean: DataFrame = {
-      val goodLean = batch.filter(invariantOk)
-      val filteredLean =
-        if (cfg.filters.isEmpty) goodLean
-        else goodLean.filter(FilterCompiler.cdcPredicate(cfg.filters, good.schema, opCol))
-      val transformedLean = compiled.apply(filteredLean)
-      if (introduced.isEmpty) transformedLean
-      else transformedLean.filter(!(introduced.map(col(_).isNull).reduce(_ || _) &&
-        opCol =!= ChangeEvent.DELETE))
-    }
-
     cfg.mode match {
       case CdcMode.Scd2 =>
         applyScd2(spark, lake, mergeInput, epoch, cfg, keys, onStats,
           postStats() ++ extraMetrics)
       case _ =>
-        applyLww(spark, lake, mergeInput, mergeInputLean, epoch, cfg, keys, onStats,
+        applyLww(spark, lake, mergeInput, epoch, cfg, keys, onStats,
           postStats() ++ extraMetrics)
-    }
-  }
-
-  /** Input-size floor for the LWW winner pre-pass
-    * (-Dgraft.lww.prefilter.minInputBytes=N; <=0 disables — the DEFAULT).
-    *
-    * OFF by default, deliberately: the pre-pass is a measured 1.7–2× ingest
-    * win here (MoR 25.4→16–19 s at 32M events; results hash-identical) and
-    * its whole point — shuffled payload bytes cut from O(events) to O(keys),
-    * ~7× at the bench shape — is THE lever guide §2.2–2.3 prescribes for
-    * network-shuffle clusters, where it should be enabled (≥256 MB is a
-    * sensible floor). But it reads the batch twice, and whether the second
-    * full scan is cheaper than the payload shuffle it replaces depends on
-    * storage the engine cannot observe (page-cache/tmpfs: yes, measured;
-    * cold object store: not necessarily). The conservative default keeps
-    * the one-pass plan; the knob, the spec pinning equality
-    * (LwwPrefilterSpec), and the measurements ship with it. */
-  private def lwwPrefilterMinBytes: Long =
-    sys.props.get("graft.lww.prefilter.minInputBytes").map(_.toLong)
-      .getOrElse(0L)
-
-  /**
-   * Winner pre-filter for bulk LWW batches (guide §8 "decide with small
-   * rows, move big rows once" + §3.2 bloom pre-filtering). The per-key
-   * max_by reduction carries the whole payload as its aggregation buffer —
-   * a struct, which HashAggregateExec cannot hold, so the reduction plans
-   * as SortAggregate: BOTH sides of the shuffle SORT every event row with
-   * its payload (measured: the sort is ~20 s of the 25 s reduce phase at
-   * 32M events / 8 cores). Instead:
-   *
-   *   1. decide winners on narrow rows: groupBy(keys).max(lsn) — primitive
-   *      buffer, codegen'd HashAggregate, column-pruned scan of (keys, lsn)
-   *      only (4.4 s measured for the same 32M);
-   *   2. bloom the winner (keys, lsn) hashes (~1 byte/key, exact count from
-   *      the cached winner set — no false negatives by construction);
-   *   3. re-scan the batch keeping only rows that MIGHT be winners, and run
-   *      the original max_by over that ~keyspace-sized survivor set.
-   *
-   * Results are identical: the true winner row always probes true (its
-   * exact hash is in the set) and carries its key's maximal LSN, so the
-   * final max_by picks it regardless of which false positives rode along;
-   * LSN ties keep the same arbitrary-pick semantics because every row of a
-   * tied (key, lsn) shares one hash and is admitted together. Shuffle bytes
-   * drop from O(events × payload) to O(events × ~24B) + O(keys × payload).
-   */
-  /** Returns (frame, fired): `fired` tells the caller the frame is the
-    * bloom-filtered survivor set, whose final reduction should use the
-    * hash-aggregable [[graft.functions.LwwWinner]] (measured better there;
-    * measured WORSE as the top-level aggregate over raw bulk rows, where
-    * per-row object-buffer churn loses to the declarative sort). */
-  private def lwwPrefilter(
-      spark: SparkSession, lean: => DataFrame, observed: DataFrame,
-      keys: Seq[String]): (DataFrame, Boolean) = {
-    val minBytes = lwwPrefilterMinBytes
-    if (minBytes <= 0) return (observed, false)
-    // Batch size from the best available evidence: exact file bytes when the
-    // frame is file-backed, otherwise the optimizer's own size estimate —
-    // a foreachBatch frame is a LogicalRDD (inputFiles empty) whose stats
-    // Spark 4 seeds from the source batch, so streaming bulk loads gate
-    // correctly too. Estimates can only mis-gate the SHAPE (both shapes are
-    // exact), and the floor keeps micro-batches on the one-pass plan.
-    val fileBytes = scala.util.Try {
-      observed.inputFiles.map { f =>
-        val (fs, p) = graft.runner.CdcRunner.hadoopFs(spark, f)
-        fs.getFileStatus(p).getLen
-      }.sum
-    }.getOrElse(0L)
-    val statBytes = scala.util.Try(
-      observed.queryExecution.optimizedPlan.stats.sizeInBytes
-        .min(BigInt(Long.MaxValue)).toLong).getOrElse(0L)
-    // a stats DEFAULT (no real estimate) is the huge defaultSizeInBytes
-    // sentinel — treat it as unknown, not as a bulk batch
-    val defaultSize = spark.sessionState.conf.defaultSizeInBytes
-    val bytes = math.max(fileBytes,
-      if (statBytes >= defaultSize) 0L else statBytes)
-    // gate BEFORE touching `lean`: the micro-batch steady state must not
-    // even pay the twin lineage's plan construction
-    if (bytes < minBytes) return (observed, false)
-    timed("lww-prefilter") {
-      prefilterFired.incrementAndGet(): Unit
-      val lsnC = col(ChangeEvent.LSN)
-      val winners = lean.groupBy(keys.map(col): _*)
-        .agg(max(lsnC).as("_w_lsn"))
-        .select(xxhash64(keys.map(col) :+ col("_w_lsn"): _*).as("_kh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val n = math.max(1L, winners.count())
-        val bf = winners.stat.bloomFilter("_kh", n, 0.02)
-        val bc = spark.sparkContext.broadcast(bf)
-        (observed.filter(graft.functions.BloomProbe.bloom_key_might_contain(
-          xxhash64(keys.map(col) :+ lsnC: _*), bc)), true)
-      } finally { winners.unpersist(); () } // bloom already built eagerly
     }
   }
 
@@ -739,7 +620,6 @@ object MergeApply {
       spark: SparkSession,
       lake: LakeTable,
       events: DataFrame,
-      eventsLean: => DataFrame,
       epoch: Long,
       cfg: JobConfig,
       keys: Seq[String],
@@ -754,36 +634,16 @@ object MergeApply {
     val nonKeyPayload = payloadCols.filterNot(keys.contains)
     val alignSchema =
       GraftSchema(m.currentSchemaId, m.currentSchema.fields.filterNot(_.name.startsWith("_")))
-    val aligned0 = alignToSchema(events, alignSchema)
-    // bulk batches (opt-in): decide winners on narrow rows first
-    // (HashAggregate over (keys, lsn)), bloom-prefilter the payload scan —
-    // see lwwPrefilter. Alignment runs on BOTH lineages so a widened key
-    // hashes identically; lean is by-name, so below the gate the twin
-    // lineage is never even constructed.
-    val (aligned, prefiltered) = lwwPrefilter(spark,
-      alignToSchema(eventsLean, alignSchema), aligned0, keys)
+    val aligned = alignToSchema(events, alignSchema)
 
     // ── per-key LWW reduction: dedup by (key, lsn), keep max-lsn record ──
     // groupBy does map-side partial aggregation: a hot key contributes at
     // most one row per map task to the shuffle (skew-safe without salting).
-    // Over the bloom-filtered survivor set the reduction runs as the
-    // hash-aggregable lww_winner (≡ max_by value-for-value — see
-    // graft.functions.LwwWinner); over a raw bulk batch the declarative
-    // max_by stays: its SortAggregate beat lww_winner's per-row object
-    // buffers there (measured 69–84 s vs 24 s at 32M events / 8 cores).
-    // -Dgraft.lww.agg=maxby|winner overrides for comparison.
     val packed = struct((Seq(ChangeEvent.OP, ChangeEvent.LSN, ChangeEvent.TS) ++
       nonKeyPayload).map(col): _*)
-    val winner = sys.props.get("graft.lww.agg") match {
-      case Some("maxby")  => max_by(packed, col(ChangeEvent.LSN))
-      case Some("winner") => graft.functions.LwwWinner.lww_winner(packed, col(ChangeEvent.LSN))
-      case _ =>
-        if (prefiltered) graft.functions.LwwWinner.lww_winner(packed, col(ChangeEvent.LSN))
-        else max_by(packed, col(ChangeEvent.LSN))
-    }
     val reduced = aligned
       .groupBy(keys.map(col): _*)
-      .agg(winner.as("_r"))
+      .agg(max_by(packed, col(ChangeEvent.LSN)).as("_r"))
       .select(keys.map(col) :+ col("_r.*"): _*)
       .withColumn("_bucket", lake.bucketExpr(keys, buckets))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -943,12 +803,6 @@ object MergeApply {
     * commit deterministically. No-op in production. */
   private[graft] var beforeCowCommit: () => Unit = () => ()
 
-  /** Test/diagnostic seam: how many times the LWW winner pre-filter actually
-    * fired (gate passed AND the bloom was built) — a spec asserting the
-    * prefiltered path's equality must also prove the path RAN, or it
-    * compares the default path against itself. */
-  private[graft] val prefilterFired = new java.util.concurrent.atomic.AtomicLong(0)
-
   /**
    * SCD2 mode: every change produces/closes a version row
    * (reference: CDCOperationsHandler.py:216-277).
@@ -1092,11 +946,12 @@ object MergeApply {
     * (Long.MaxValue) keeps the conservative full salt: the full load — the
     * biggest write of a table's life — stays maximally spread. */
   private val WRITE_SALT = 4
-  /** Rows one write task is allowed before the salt splits its bucket —
-    * settable for tests/ops (`-Dgraft.write.salt.rows.per.task=`). */
-  private def writeSaltRowsPerTask: Long =
-    sys.props.get("graft.write.salt.rows.per.task").map(_.toLong)
-      .getOrElse(2000000L)
+  /** Rows one write task is allowed before the salt splits its bucket. */
+  private val WRITE_SALT_ROWS_PER_TASK = 2000000L
+  /** Test seam: the threshold [[writeEpoch]] salts against — specs lower it
+    * so a tiny batch still fans out to the full salt. Always
+    * [[WRITE_SALT_ROWS_PER_TASK]] in production. */
+  private[graft] var writeSaltRowsPerTask: Long = WRITE_SALT_ROWS_PER_TASK
   private[graft] def writeEpoch(
       spark: SparkSession,
       lake: LakeTable,

@@ -410,11 +410,10 @@ object LakeTable {
     * balanced-union Catalyst plan; above it, the read drops the union below
     * Catalyst — per-group plans analyzed independently (linear driver work),
     * RDD-layer `sc.union` preserving one bucket-complete partition per group.
-    * BOTH sides are zero-shuffle; the knob trades Catalyst analysis cost
+    * BOTH sides are zero-shuffle; the cap trades Catalyst analysis cost
     * (quadratic in branches) against leaving whole-stage codegen's view of
-    * the union, nothing else. Override: -Dgraft.lake.maxFoldBranches=N. */
-  def maxFoldBranches: Int =
-    sys.props.get("graft.lake.maxFoldBranches").map(_.toInt).getOrElse(512)
+    * the union, nothing else. */
+  private[lake] val MaxFoldBranches = 512
 
   /** Row-level untouched-base prune (the refinement under the file-level
     * [[LakeTable.pruneUntouchedBase]]): when the base rows of the
@@ -425,17 +424,14 @@ object LakeTable {
     * at full parallelism instead. Hash-random key workloads, which the
     * file-level (footer key-range) prune can never touch, prune here.
     * Below the ratio the extra base scan outweighs the sort saved; the
-    * fold-everything path is used unchanged. 0 disables.
-    * Override: -Dgraft.lake.rowPruneMinRatio=N. */
-  def rowPruneMinRatio: Long =
-    sys.props.get("graft.lake.rowPruneMinRatio").map(_.toLong).getOrElse(8L)
+    * fold-everything path is used unchanged. */
+  private[lake] val RowPruneMinRatio = 8L
 
   /** Delta-row cap for the row-level prune's bloom (≈1 byte/key at the 3%
     * fpp used): past it the filter would be too large to ship comfortably
     * with the plan, and a delta that big is overdue for compaction anyway —
     * the read falls back to the plain fold. */
-  def rowPruneMaxDeltaKeys: Long =
-    sys.props.get("graft.lake.rowPruneMaxDeltaKeys").map(_.toLong).getOrElse(1L << 25)
+  private[lake] val RowPruneMaxDeltaKeys = 1L << 25
 
   private[lake] val rowPruneFpp = 0.03
 
@@ -1332,8 +1328,9 @@ class LakeTable(val dir: String) {
    * is the same contract the write/compaction path already has (a bucket is
    * sized to one task).
    */
-  private def readResolved(spark: SparkSession, m: Manifest, files: Seq[DataFile],
-      rowPrune: Boolean = false): DataFrame = {
+  private[graft] def readResolved(spark: SparkSession, m: Manifest, files: Seq[DataFile],
+      rowPrune: Boolean = false,
+      maxFoldBranches: Int = LakeTable.MaxFoldBranches): DataFrame = {
     if (!files.exists(_.isDelta)) return readFiles(spark, m, files)
     val (gran, hot0, cold0) = hotFileSplit(files)
     def g(f: DataFile): Int = f.bucket % gran
@@ -1368,7 +1365,7 @@ class LakeTable(val dir: String) {
       else resolveLwwLocal(df, m.keyCols)
     val hotGroupCount = hot0.iterator.map(g).toSet.size
     val resolved =
-      if (hotGroupCount <= LakeTable.maxFoldBranches) {
+      if (hotGroupCount <= maxFoldBranches) {
         // one coalesced scan branch per group (bucket-complete partition, zero
         // Exchange); balanced union keeps Catalyst analysis O(N log N) instead
         // of the quadratic left-deep chain
@@ -1427,25 +1424,26 @@ class LakeTable(val dir: String) {
   }
 
   /** Memo of the broadcast delta-key bloom. The filter is a pure function
-    * of the HOT FILE SET it was built from (plus the gate knobs, which
-    * tests/operators flip between reads of one snapshot and must see take
-    * effect), and callers commonly construct several reads of the SAME
-    * snapshot — a sync bootstrap plus its equality audit, time-travel
-    * comparisons, an EXPLAIN before execution — each of which would
-    * otherwise pay the blocking delta-scan build job again. A small LRU
-    * keyed on a fingerprint of the hot set (not just the version): a
-    * mixed-version read pattern — alternating time-travel comparisons, the
-    * very case the memo exists for — reuses each snapshot's filter instead
-    * of thrashing one slot, and a private[graft] caller passing a different
-    * hot subset at the same version gets its own filter instead of one
-    * silently gated against a different base/delta ratio. Superseded
-    * broadcasts are unpersisted by the context cleaner once their plans are
-    * gone. */
+    * of the HOT FILE SET it was built from, and callers commonly construct
+    * several reads of the SAME snapshot — a sync bootstrap plus its
+    * equality audit, time-travel comparisons, an EXPLAIN before execution —
+    * each of which would otherwise pay the blocking delta-scan build job
+    * again. A small LRU keyed on a fingerprint of the hot set (not just
+    * the version): a mixed-version read pattern — alternating time-travel
+    * comparisons, the very case the memo exists for — reuses each
+    * snapshot's filter instead of thrashing one slot, and a private[graft]
+    * caller passing a different hot subset at the same version gets its own
+    * filter instead of one silently gated against a different base/delta
+    * ratio. The key omits
+    * the key columns and schema on purpose: a live table's key set changes
+    * only by `evolve(RenameColumn)`, which keeps key VALUES and so their
+    * hashes, and key widening is refused — so one hot file set always
+    * hashes to the same filter. Superseded broadcasts are unpersisted by
+    * the context cleaner once their plans are gone. */
   @transient private lazy val bloomMemo =
-    new java.util.LinkedHashMap[(Long, Long, Long), Option[Broadcast[BloomFilter]]](
-      8, 0.75f, true) {
+    new java.util.LinkedHashMap[Long, Option[Broadcast[BloomFilter]]](8, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(Long, Long, Long), Option[Broadcast[BloomFilter]]]): Boolean =
+          e: java.util.Map.Entry[Long, Option[Broadcast[BloomFilter]]]): Boolean =
         size() > 4
     }
 
@@ -1458,13 +1456,12 @@ class LakeTable(val dir: String) {
       fp ^= scala.util.hashing.MurmurHash3.stringHash(f.path).toLong * 31 +
         f.rows + (if (f.isDelta) 1L << 62 else 0L)
     }
-    val key = (fp, LakeTable.rowPruneMinRatio, LakeTable.rowPruneMaxDeltaKeys)
-    val cached = bloomMemo.get(key)
-    if (cached != null || bloomMemo.containsKey(key)) cached
+    val cached = bloomMemo.get(fp)
+    if (cached != null || bloomMemo.containsKey(fp)) cached
     else {
       val bc = buildDeltaKeyBloom(spark, m, hot)
         .map(spark.sparkContext.broadcast(_))
-      bloomMemo.put(key, bc): Unit
+      bloomMemo.put(fp, bc): Unit
       bc
     }
   }
@@ -1472,20 +1469,21 @@ class LakeTable(val dir: String) {
   /**
    * Build the bloom filter of delta key hashes for [[readResolved]]'s
    * row-level untouched-base prune, or None when the split cannot pay:
-   *  - base rows must outnumber delta rows by [[LakeTable.rowPruneMinRatio]]
+   *  - base rows must outnumber delta rows by [[LakeTable.RowPruneMinRatio]]
    *    (the fold keeps at most ~deltaRows/baseRows + fpp of the base, so the
    *    ratio bounds both the sort saved and the double-scan wasted);
-   *  - delta rows are capped ([[LakeTable.rowPruneMaxDeltaKeys]]) so the
-   *    filter stays small enough to ride the plan (~1 byte/key at 3% fpp);
+   *  - delta rows are capped (`maxDeltaKeys`, default
+   *    [[LakeTable.RowPruneMaxDeltaKeys]]) so the filter stays small enough
+   *    to ride the plan (~1 byte/key at 3% fpp);
    *    a delta past the cap is overdue for compaction, not for cleverness.
    * The build itself is one aggregate job over ONLY the delta files' key
    * columns — the small side, by the gate above. Row counts come from the
    * manifest (exact, recorded at commit), so gating is metadata-only.
    */
   private[graft] def buildDeltaKeyBloom(
-      spark: SparkSession, m: Manifest, hot: Seq[DataFile]): Option[BloomFilter] = {
-    val ratio = LakeTable.rowPruneMinRatio
-    if (ratio <= 0 || m.keyCols.isEmpty) return None
+      spark: SparkSession, m: Manifest, hot: Seq[DataFile],
+      maxDeltaKeys: Long = LakeTable.RowPruneMaxDeltaKeys): Option[BloomFilter] = {
+    if (m.keyCols.isEmpty) return None
     // a footer-stats failure records rows = -1; summing the sentinel would
     // mis-gate (deltaRows underflow disables the prune silently) and
     // under-size the filter (over-saturation = probe that stops pruning).
@@ -1494,8 +1492,8 @@ class LakeTable(val dir: String) {
     val (deltas, bases) = hot.partition(_.isDelta)
     val deltaRows = deltas.map(_.rows).sum
     val baseRows = bases.map(_.rows).sum
-    if (deltaRows <= 0 || deltaRows > LakeTable.rowPruneMaxDeltaKeys ||
-        baseRows < deltaRows * ratio) return None
+    if (deltaRows <= 0 || deltaRows > maxDeltaKeys ||
+        baseRows < deltaRows * LakeTable.RowPruneMinRatio) return None
     val hashed = readFiles(spark, m, deltas)
       .select(xxhash64(m.keyCols.map(col): _*).as("_kh"))
     Some(hashed.stat.bloomFilter("_kh", deltaRows, LakeTable.rowPruneFpp))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.apply.MergeApply
 import graft.feed.ChangeFeed
 import graft.model._
 import graft.runner.{CdcRunner, RunnerConfig}
@@ -25,11 +26,12 @@ class MaintenanceSpec extends SparkSpec {
     // both so the fixture actually produces the small files compaction is
     // being tested on
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    sys.props("graft.write.salt.rows.per.task") = "1"
+    val saltRows = MergeApply.writeSaltRowsPerTask
+    MergeApply.writeSaltRowsPerTask = 1L
     try CdcRunner.runAvailableNow(spark, cfg)
     finally {
       spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      sys.props.remove("graft.write.salt.rows.per.task"): Unit
+      MergeApply.writeSaltRowsPerTask = saltRows
     }
 
     val before = lake.manifest

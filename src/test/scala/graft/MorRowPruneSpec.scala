@@ -15,7 +15,8 @@ import graft.runner.{CdcRunner, RunnerConfig}
  * provable no-op. Each test pins that no-op (so the row split is the ONLY
  * prune under test), pins that the bloom actually built and landed in the
  * executed plan (a vacuous pass would test nothing), and asserts exact read
- * equality — including against the same read with the prune disabled.
+ * equality — including against the same snapshot read without the prune
+ * (readResolved with rowPrune off, the path every group-local read takes).
  */
 class MorRowPruneSpec extends SparkSpec {
 
@@ -66,15 +67,13 @@ class MorRowPruneSpec extends SparkSpec {
     (lake, cfg)
   }
 
-  private def withRowPruneDisabled[A](body: => A): A = {
-    val key = "graft.lake.rowPruneMinRatio"
-    val prev = sys.props.get(key)
-    sys.props(key) = "0"
-    try body
-    finally prev match {
-      case Some(v) => sys.props(key) = v
-      case None    => sys.props.remove(key); ()
-    }
+  /** The current snapshot resolved WITHOUT the row-level prune (tombstones
+    * included, like readState). */
+  private def unprunedState(lake: LakeTable): org.apache.spark.sql.DataFrame = {
+    val m = lake.manifest
+    val df = lake.readResolved(spark, m, m.files)
+    assert(!df.queryExecution.executedPlan.toString.contains("bloom_key_might_contain"))
+    df
   }
 
   test("LWW aged table, hash-random touches: bloom split == unpruned fold " +
@@ -100,13 +99,9 @@ class MorRowPruneSpec extends SparkSpec {
       .map(r => r.getAs[String]("doc_id") ->
         r.getAs[scala.collection.Seq[Int]]("tokens").head).toMap
     assert(actual == expected)
-    val unpruned = withRowPruneDisabled {
-      val plain = lake.read(spark)
-      assert(!plain.queryExecution.executedPlan.toString
-        .contains("bloom_key_might_contain"))
-      plain.collect().map(r => r.getAs[String]("doc_id") ->
+    val unpruned = unprunedState(lake).where("NOT coalesce(_deleted, false)").collect()
+      .map(r => r.getAs[String]("doc_id") ->
         r.getAs[scala.collection.Seq[Int]]("tokens").head).toMap
-    }
     assert(actual == unpruned)
   }
 
@@ -126,8 +121,7 @@ class MorRowPruneSpec extends SparkSpec {
     assert(pruned.queryExecution.executedPlan.toString
       .contains("bloom_key_might_contain"))
     val a = hist(pruned)
-    val b = withRowPruneDisabled(
-      hist(lake.readState(spark, lake.currentVersion)))
+    val b = hist(unprunedState(lake))
     assert(a == b)
     // touched keys gained a current v2 row; untouched kept their single row
     val rows = lake.read(spark).collect()
@@ -189,27 +183,21 @@ class MorRowPruneSpec extends SparkSpec {
       d.collect().map(r => r.getAs[String]("document_id") ->
         r.getAs[scala.collection.Seq[Int]]("tokens").head).toMap
     assert(state(df) == expected)
-    assert(withRowPruneDisabled(state(lake.read(spark))) == expected)
+    assert(state(unprunedState(lake).where("NOT coalesce(_deleted, false)")) == expected)
     // physical migration to the doubled spec must not disturb the state
     lake.splitBuckets(spark)
     assert(lake.manifest.files.forall(_.spec == 8))
     assert(state(lake.read(spark)) == expected)
   }
 
-  test("gates: no bloom when deltas outgrow the cap, when the base/delta " +
-    "ratio is thin, or when row pruning is disabled") {
+  test("gates: no bloom when deltas outgrow the cap or when the base/delta " +
+    "ratio is thin") {
     val (lake, _) = age(CdcMode.Upsert, tmpDir("graft-rowprune-gate"), 400,
       Seq(1 -> "UPDATE", 400 -> "UPDATE"))
     val m = lake.manifest
     assert(lake.buildDeltaKeyBloom(spark, m, m.files).nonEmpty)
-    withRowPruneDisabled {
-      assert(lake.buildDeltaKeyBloom(spark, m, m.files).isEmpty)
-    }
-    val capKey = "graft.lake.rowPruneMaxDeltaKeys"
-    sys.props(capKey) = "1"
-    try assert(lake.buildDeltaKeyBloom(spark, m, m.files).isEmpty,
+    assert(lake.buildDeltaKeyBloom(spark, m, m.files, maxDeltaKeys = 1).isEmpty,
       "2 delta rows over a cap of 1 must fall back to the plain fold")
-    finally { sys.props.remove(capKey); () }
     // thin ratio: delta rows within a factor 8 of base rows
     val (thin, _) = age(CdcMode.Upsert, tmpDir("graft-rowprune-thin"), 40,
       (1 to 10).map(k => k * 4 -> "UPDATE"))
@@ -220,8 +208,8 @@ class MorRowPruneSpec extends SparkSpec {
       .contains("bloom_key_might_contain"))
   }
 
-  test("delta-key bloom is built once per (snapshot, gate config) as one " +
-    "broadcast; a gate flip or a new commit re-keys the memo") {
+  test("delta-key bloom is built once per snapshot as one broadcast; a new " +
+    "commit re-keys the memo") {
     val (lake, cfg) = age(CdcMode.Upsert, tmpDir("graft-rowprune-memo"), 400,
       Seq(1 -> "UPDATE", 400 -> "UPDATE"))
     val m = lake.manifest
@@ -230,12 +218,7 @@ class MorRowPruneSpec extends SparkSpec {
     val b = lake.deltaKeyBloom(spark, m, hot)
     assert(a.nonEmpty)
     assert(a.get eq b.get,
-      "same snapshot + same gates must reuse the broadcast, not re-scan")
-    withRowPruneDisabled {
-      assert(lake.deltaKeyBloom(spark, m, hot).isEmpty,
-        "a gate flip between two reads of one snapshot must take effect")
-    }
-    assert(lake.deltaKeyBloom(spark, m, hot).nonEmpty, "and flip back")
+      "same snapshot must reuse the broadcast, not re-scan")
     // a new commit moves the version: the memo follows — no stale filter
     // missing the fresh delta's keys (which would falsely pass them)
     apply(lake, cfg, 2L, Seq(mkRow(9000L, 7, "UPDATE", v = 42)))

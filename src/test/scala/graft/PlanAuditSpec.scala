@@ -129,25 +129,26 @@ class PlanAuditSpec extends SparkSpec {
         "the per-group subtree")
     assert(planWallS < 600.0, s"plan build took $planWallS s for ${deltaBuckets.size} buckets")
     assert(!hasShuffle(rdd), "tree-union path is still zero-shuffle")
-    val treeState = reading.collect().map(_.toString).sorted
     // beyond the cap: the union moves BELOW Catalyst (per-group plans
     // analyzed independently, sc.union of their RDDs) — O(1) final plan,
-    // linear driver work, and STILL zero shuffle at any group count
-    System.setProperty("graft.lake.maxFoldBranches", "8")
-    try {
-      val t1 = System.nanoTime()
-      val fb = lake.read(spark)
-      val fbRdd = fb.queryExecution.toRdd
-      val fbWallS = (System.nanoTime() - t1) / 1e9
-      info(f"RDD-union plan build: $fbWallS%.1f s")
-      // beyond the cap the per-group plans are tiny and the union is below
-      // Catalyst entirely — same generous backstop, shape asserted by the
-      // zero-shuffle + equality checks below
-      assert(fbWallS < 600.0, s"RDD-union plan build took $fbWallS s")
-      assert(!hasShuffle(fbRdd), "RDD-layer union is zero-shuffle too")
-      assert(fb.collect().map(_.toString).sorted.sameElements(treeState),
-        "RDD-union resolution == tree-union resolution")
-    } finally System.clearProperty("graft.lake.maxFoldBranches")
+    // linear driver work, and STILL zero shuffle at any group count. The cap
+    // is lowered through readResolved's parameter (the same resolution
+    // lake.read runs, tombstones still in) so 256+ groups cross it.
+    val m = lake.manifest
+    val treeState = lake.readResolved(spark, m, m.files, rowPrune = true)
+      .collect().map(_.toString).sorted
+    val t1 = System.nanoTime()
+    val fb = lake.readResolved(spark, m, m.files, rowPrune = true, maxFoldBranches = 8)
+    val fbRdd = fb.queryExecution.toRdd
+    val fbWallS = (System.nanoTime() - t1) / 1e9
+    info(f"RDD-union plan build: $fbWallS%.1f s")
+    // beyond the cap the per-group plans are tiny and the union is below
+    // Catalyst entirely — same generous backstop, shape asserted by the
+    // zero-shuffle + equality checks below
+    assert(fbWallS < 600.0, s"RDD-union plan build took $fbWallS s")
+    assert(!hasShuffle(fbRdd), "RDD-layer union is zero-shuffle too")
+    assert(fb.collect().map(_.toString).sorted.sameElements(treeState),
+      "RDD-union resolution == tree-union resolution")
   }
 
   test("changeLog is a pure pruned scan: no Exchange, no fold, no aggregation") {
