@@ -1,7 +1,6 @@
 package graft.apply
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -442,9 +441,7 @@ object MergeApply {
         // (the key set can hold null: corrupt rows group under op = NULL)
         val unknownOps = (badByOp.keySet -- ChangeEvent.OPS)
           .filterNot(op => op != null && op.startsWith(ORPHANED_OP_PREFIX))
-        if (unknownOps.nonEmpty &&
-            (p.stopOnInsertError || p.stopOnUpdateError || p.stopOnDeleteError ||
-              p.stopOnUpsertError || p.stopOnScd2Error))
+        if (unknownOps.nonEmpty && p.stopsOnAnyError)
           throw new IllegalStateException(
             s"stop_if_error: unknown op(s) $unknownOps in epoch $epoch")
       }
@@ -555,17 +552,17 @@ object MergeApply {
       epoch: Long,
       cfg: JobConfig,
       m: Manifest,
-      affected: Set[Int],
       opCounts: Map[String, Long],
+      /** change rows per bucket (see [[statsByOpAndBucket]]): its keys are
+        * the affected buckets, its largest value sizes the delta write's
+        * adaptive salt */
+      changeRowsByBucket: Map[Int, Long],
       onStats: () => (Long, Long, Long),
       /** by-name: carries the post-transform quarantine resolution, which may
         * only run AFTER the mode's first action (its observation completes
         * with it) and must run pre-commit; evaluated exactly once, here */
       extraMetrics: => Map[String, Long],
-      deltaRows: => DataFrame,
-      /** largest per-bucket row count of `deltaRows` (known exactly from the
-        * stats collect) — sizes the delta write's adaptive salt. */
-      maxDeltaRowsPerBucket: Long = Long.MaxValue): (() => Map[String, Long], Option[BatchResult]) = {
+      deltaRows: => DataFrame): (() => Map[String, Long], Option[BatchResult]) = {
     // LAZY, evaluated once, always PRE-commit: onStats blocks on the
     // observation listener, and the shared listener bus lags behind the
     // thousands of task events a bulk epoch just posted — resolving it
@@ -587,7 +584,7 @@ object MergeApply {
          else Map.empty[String, Long]) ++
         extra
     }
-    if (affected.isEmpty) {
+    if (changeRowsByBucket.isEmpty) {
       // an empty batch still commits (and still carries extraMetrics): a
       // sync window whose changes all reduce away must advance its cursor.
       // A feed-recording CoW table still plants the durable `changes/_feed`
@@ -607,11 +604,46 @@ object MergeApply {
       // return the SAME map (delta_commits included).
       val files = timed("delta-write")(
         writeEpoch(spark, lake, deltaRows, epoch, m, kind = DataFile.DELTA,
-          maxRowsPerBucket = maxDeltaRowsPerBucket))
+          maxRowsPerBucket = changeRowsByBucket.values.max))
       val morMetrics = metrics + ("delta_commits" -> 1L)
       timed("commit")(lake.commit(epoch, files, Set.empty, morMetrics))
       (() => morMetrics, Some(BatchResult(epoch, skipped = false, morMetrics)))
-    } else (() => metrics, None)
+    } else {
+      // a stop_if_*_error flag can fail the batch from its stats: resolve
+      // them now, so a poisoned batch throws before the copy-on-write
+      // merge+write, the epoch's most expensive job (see `metrics` for why
+      // a clean run resolves them only after that write)
+      if (cfg.errorPolicy.stopsOnAnyError) metrics
+      (() => metrics, None)
+    }
+  }
+
+  /** The (bucket, op, count) stats collect, summed per op (the applied_*
+    * metrics) and per bucket (the affected buckets and their change rows,
+    * which size the adaptive write salt). */
+  private def statsByOpAndBucket(
+      stats: Array[Row]): (Map[String, Long], Map[Int, Long]) = {
+    def sums[K](key: Row => K): Map[K, Long] =
+      stats.groupBy(key).map { case (k, rows) => k -> rows.map(_.getLong(2)).sum }
+    (sums(_.getString(1)), sums(_.getInt(0)))
+  }
+
+  /** Adaptive-salt sizing for a copy-on-write rewrite of `affectedC`: merged
+    * rows per bucket ≤ base rows (exact manifest footer counts) + change
+    * rows (the stats collect); a stats-less file (rows = -1) degrades to
+    * unknown = full salt. */
+  private def mergedMaxRows(mAt: Manifest, affectedC: Set[Int],
+      changeRowsByBucket: Map[Int, Long]): Long = {
+    val fs = mAt.files.filter(f => affectedC.exists(b => b % f.spec == f.bucket))
+    if (fs.exists(_.rows < 0)) Long.MaxValue
+    else {
+      val baseRows = scala.collection.mutable.Map.empty[Int, Long]
+        .withDefaultValue(0L)
+      fs.foreach(f => f.coveredBuckets(mAt.buckets).foreach { b =>
+        if (affectedC.contains(b)) baseRows(b) += f.rows })
+      affectedC.iterator
+        .map(b => baseRows(b) + changeRowsByBucket.getOrElse(b, 0L)).max
+    }
   }
 
   /** default/upsert modes: final state ≡ last-writer-wins fold (reference's literal
@@ -658,13 +690,8 @@ object MergeApply {
       // plans over the compiled reduction instead of re-analyzing the whole
       // source→parse→rules tree per action
       val changes = planOnce(spark, reduced)
-      val affected = opByBucket.map(_.getInt(0)).toSet
-      val opCounts = opByBucket.groupBy(_.getString(1))
-        .map { case (op, rows) => op -> rows.map(_.getLong(2)).sum }
-      // per-bucket change rows — already collected above; sizes the adaptive
-      // write salt (small epochs write one file per bucket, not WRITE_SALT)
-      val changeRowsByBucket = opByBucket.groupBy(_.getInt(0))
-        .map { case (b, rows) => b -> rows.map(_.getLong(2)).sum }
+      val (opCounts, changeRowsByBucket) = statsByOpAndBucket(opByBucket)
+      val affected = changeRowsByBucket.keySet
       // the reduced change set in delta-row shape — the MoR commit itself, and
       // the CoW change sidecar when the table records a change feed
       def deltaRows = {
@@ -680,9 +707,7 @@ object MergeApply {
       }
 
       val (baseMetricsFn, early) = commitCommon(spark, lake, epoch, cfg, m,
-        affected, opCounts, onStats, extraMetrics, deltaRows,
-        maxDeltaRowsPerBucket =
-          if (changeRowsByBucket.isEmpty) 0L else changeRowsByBucket.values.max)
+        opCounts, changeRowsByBucket, onStats, extraMetrics, deltaRows)
       early.foreach(r => return r)
 
       // CoW change sidecar (LakeTable.changeLog's CDC-out source for CoW
@@ -734,23 +759,8 @@ object MergeApply {
               .otherwise(coalesce(col("_deleted"), lit(false))).as("_deleted")): _*)
           .withColumn("_bucket", lake.bucketExpr(keys, buckets))
 
-        // adaptive-salt sizing: merged rows per bucket ≤ base rows (exact
-        // manifest footer counts) + change rows (the stats collect); a
-        // stats-less file (rows = -1) degrades to unknown = full salt
-        val mergedMax: Long = {
-          val fs = mAt.files.filter(f => affectedC.exists(b => b % f.spec == f.bucket))
-          if (fs.exists(_.rows < 0)) Long.MaxValue
-          else {
-            val baseRows = scala.collection.mutable.Map.empty[Int, Long]
-              .withDefaultValue(0L)
-            fs.foreach(f => f.coveredBuckets(mAt.buckets).foreach { b =>
-              if (affectedC.contains(b)) baseRows(b) += f.rows })
-            affectedC.iterator
-              .map(b => baseRows(b) + changeRowsByBucket.getOrElse(b, 0L)).max
-          }
-        }
         val files = timed("merge+write")(writeEpoch(spark, lake, merged, epoch, mAt,
-          maxRowsPerBucket = mergedMax))
+          maxRowsPerBucket = mergedMaxRows(mAt, affectedC, changeRowsByBucket)))
         // metrics resolve HERE, after the epoch's write job — the observe
         // listener lag drains in the shadow of the write (see commitCommon)
         val baseMetrics = baseMetricsFn()
@@ -845,11 +855,8 @@ object MergeApply {
       // consumers plan over the compiled reduction — see applyLww
       val stats = withBucket.groupBy("_bucket", ChangeEvent.OP).count().collect()
       val changes = planOnce(spark, withBucket)
-      val affected = stats.map(_.getInt(0)).toSet
-      val opCounts = stats.groupBy(_.getString(1))
-        .map { case (op, rows) => op -> rows.map(_.getLong(2)).sum }
-      val changeRowsByBucket = stats.groupBy(_.getInt(0))
-        .map { case (b, rows) => b -> rows.map(_.getLong(2)).sum }
+      val (opCounts, changeRowsByBucket) = statsByOpAndBucket(stats)
+      val affected = changeRowsByBucket.keySet
       // incoming events as version rows; DELETEs become hidden marker rows
       def evRows = changes.select(
         (payloadCols.map(col) :+
@@ -865,9 +872,7 @@ object MergeApply {
       // (end_date/current) is rebuilt at read time / folded by compaction,
       // so history ingest never rewrites the hot buckets either)
       val (metricsFn, early) = commitCommon(spark, lake, epoch, cfg, m,
-        affected, opCounts, onStats, extraMetrics, evRows,
-        maxDeltaRowsPerBucket =
-          if (changeRowsByBucket.isEmpty) 0L else changeRowsByBucket.values.max)
+        opCounts, changeRowsByBucket, onStats, extraMetrics, evRows)
       early.foreach(r => return r)
 
       // CoW change sidecar: scd2's change set is its version rows (same shape
@@ -883,36 +888,14 @@ object MergeApply {
         val base = lake.readBuckets(spark, affectedC, Some(mAt))
           .withColumn("_bucket", lake.bucketExpr(naturalKeys, buckets))
 
-        // rebuild every affected key's chain from ALL its versions, LSN-ordered;
-        // dropDuplicates tolerates upstream at-least-once re-delivery
-        val all = base.unionByName(evRows)
-          .dropDuplicates(naturalKeys :+ "_lsn")
-        val w = Window.partitionBy(naturalKeys.map(col): _*).orderBy(col("_lsn"))
-        val nextStart = lead(col(scd.startDate), 1).over(w)
-        // current = no next ROW (marker lead), matching the bucket-local fold:
-        // a null next-start must not leave two current versions of one key
-        val hasNext = lead(lit(1), 1).over(w).isNotNull
-        val rebuilt = all
-          .withColumn(scd.endDate, nextStart)
-          .withColumn(scd.current,
-            when(!hasNext && !col("_deleted"), lit(1)).otherwise(lit(0)))
-
-        // same adaptive-salt sizing as the LWW path: versions per bucket ≤
-        // base rows (manifest footer counts) + this batch's version rows
-        val mergedMax: Long = {
-          val fs = mAt.files.filter(f => affectedC.exists(b => b % f.spec == f.bucket))
-          if (fs.exists(_.rows < 0)) Long.MaxValue
-          else {
-            val baseRows = scala.collection.mutable.Map.empty[Int, Long]
-              .withDefaultValue(0L)
-            fs.foreach(f => f.coveredBuckets(mAt.buckets).foreach { b =>
-              if (affectedC.contains(b)) baseRows(b) += f.rows })
-            affectedC.iterator
-              .map(b => baseRows(b) + changeRowsByBucket.getOrElse(b, 0L)).max
-          }
-        }
+        // rebuild every affected key's chain from ALL its versions with the
+        // read path's own fold (LSN-ordered, re-delivered versions dropped):
+        // the new version rows are not bucketed, so one hash exchange on the
+        // keys makes every partition key-complete first
+        val rebuilt = lake.rebuildScd2Local(
+          base.unionByName(evRows).repartition(mAt.keyCols.map(col): _*), mAt)
         val files = writeEpoch(spark, lake, rebuilt, epoch, mAt,
-          maxRowsPerBucket = mergedMax)
+          maxRowsPerBucket = mergedMaxRows(mAt, affectedC, changeRowsByBucket))
         val metrics = metricsFn() // after the write — see commitCommon
         beforeCowCommit()
         lake.commit(epoch, files, affectedC, metrics,

@@ -283,10 +283,10 @@ object LakeSync {
     val fromMeta = source.snapshotMeta(from)
     val headMeta = source.snapshotMeta(head)
     def reloads(m: Manifest) = m.metrics.getOrElse(LakeTable.ReloadMetric, 0L)
-    val reloadInWindow =
+    val reloadInRange =
       (headMeta.isCommittedEpoch(-1L) && !fromMeta.isCommittedEpoch(-1L)) ||
         reloads(headMeta) > reloads(fromMeta)
-    if (reloadInWindow) {
+    if (reloadInRange) {
       val epoch = math.max(target.manifest.epochWatermark, -1L) + 1
       val rows = mirrorState(spark, source, target, head, epoch,
         _ => Map(OFFSET_METRIC -> (head - from).toLong,

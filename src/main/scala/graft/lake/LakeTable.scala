@@ -405,16 +405,6 @@ object LakeTable {
     * reload is detectable as `at(to) > at(from)` from the two end metas. */
   val ReloadMetric = "reload_count"
 
-  /** Cap on per-group CATALYST scan branches in a merge-on-read read plan.
-    * Below it, each delta-bearing group is its own coalesced branch in one
-    * balanced-union Catalyst plan; above it, the read drops the union below
-    * Catalyst — per-group plans analyzed independently (linear driver work),
-    * RDD-layer `sc.union` preserving one bucket-complete partition per group.
-    * BOTH sides are zero-shuffle; the cap trades Catalyst analysis cost
-    * (quadratic in branches) against leaving whole-stage codegen's view of
-    * the union, nothing else. */
-  private[lake] val MaxFoldBranches = 512
-
   /** Row-level untouched-base prune (the refinement under the file-level
     * [[LakeTable.pruneUntouchedBase]]): when the base rows of the
     * delta-bearing groups outnumber their delta rows by at least this
@@ -1119,51 +1109,17 @@ class LakeTable(val dir: String) {
     else df
 
   /**
-   * Merge-on-read resolution (single-bucket file sets, e.g. point lookups):
-   * collapse base + delta rows to the per-key latest-LSN record. Map-side
-   * partial max_by bounds the shuffle. Whole-table reads use the bucket-local
-   * zero-shuffle path in [[readResolved]] instead.
-   */
-  private def resolveLww(df: DataFrame, keys: Seq[String]): DataFrame = {
-    require(keys.nonEmpty, s"lake table at $dir has delta files but no key_cols")
-    val others = df.columns.filterNot(keys.contains).toSeq
-    df.groupBy(keys.map(col): _*)
-      .agg(max_by(struct(others.map(col): _*), col("_lsn")).as("_r"))
-      .select(keys.map(col) ++ others.map(c => col(s"_r.$c").as(c)): _*)
-  }
-
-  /**
-   * SCD2 resolution (single-bucket file sets, e.g. point lookups): rebuild
-   * every key's version chain from base + delta version rows — the same
-   * LSN-ordered window the write path uses, so folding is read-equivalent.
-   * Idempotent over already-chained base rows.
-   */
-  private def rebuildScd2(df: DataFrame, m: Manifest): DataFrame = {
-    require(m.scdCols.size == 3, s"lake table at $dir has scd2 deltas but no scd_cols")
-    val Seq(start, end, cur) = m.scdCols
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(m.keyCols.map(col): _*).orderBy(col("_lsn"))
-    val nextStart = lead(col(start), 1).over(w)
-    // "current" = no NEXT ROW (lead over a constant marker), not "next start
-    // is null" — a version row with a null start date would otherwise leave
-    // TWO current rows here while the bucket-local fold (rebuildScd2Local)
-    // correctly marks only the last one
-    val hasNext = lead(lit(1), 1).over(w).isNotNull
-    df.dropDuplicates(m.keyCols :+ "_lsn")
-      .withColumn(end, nextStart)
-      .withColumn(cur, when(!hasNext && !coalesce(col("_deleted"), lit(false)),
-        lit(1)).otherwise(lit(0)))
-  }
-
-  /**
    * Sort each partition by (keys, _lsn) and fold it with one streaming pass
    * at the INTERNAL-row layer (the external Row codec's per-element array
    * conversion costs ~4× on token-array tables; measured 105s vs ~30s on the
    * 20M-event compaction fold). Callers guarantee every partition is
-   * bucket-complete (all of a bucket's files in exactly one partition), so
-   * all of a key's rows are present and, after the in-partition sort,
-   * adjacent — no Exchange is needed anywhere. Memory is bounded by Spark's
-   * spillable sort plus a one-row lookahead, not by a per-bucket hash map.
+   * key-complete, so all of a key's rows are present and, after the
+   * in-partition sort, adjacent: reads and compaction coalesce each bucket's
+   * files into one partition and point lookups their key-filtered scan (no
+   * Exchange anywhere); the SCD2 copy-on-write merge, whose incoming version
+   * rows are not bucketed, hash-exchanges once on the keys. Memory is
+   * bounded by Spark's spillable sort plus a one-row lookahead, not by a
+   * per-bucket hash map.
    *
    * Fold contract: scan/sort iterators REUSE row buffers — a fold must
    * `copy()` any row it retains past the next `next()`/`head` advance.
@@ -1185,8 +1141,15 @@ class LakeTable(val dir: String) {
   import LakeTable.sameKey
   import org.apache.spark.sql.catalyst.InternalRow
 
+  /** The one resolution of stored rows (base + delta) to table state, for
+    * reads, compaction and point lookups: the chain rebuild for SCD2
+    * tables, the per-key max-`_lsn` winner otherwise. */
+  private def resolveStored(df: DataFrame, m: Manifest): DataFrame =
+    if (m.tableMode == Manifest.SCD2) rebuildScd2Local(df, m)
+    else resolveLwwLocal(df, m.keyCols)
+
   /** Bucket-local LWW fold: per key (consecutive after the sort) keep the
-    * last = max-`_lsn` row. Equal to [[resolveLww]] without its shuffle. */
+    * last = max-`_lsn` row. */
   private def resolveLwwLocal(df: DataFrame, keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, s"lake table at $dir has delta files but no key_cols")
     foldSortedPartitions(df, keys) { (keyIdx, keyTypes) => it0 =>
@@ -1206,8 +1169,9 @@ class LakeTable(val dir: String) {
   /** Bucket-local SCD2 chain rebuild: per key (consecutive after the sort,
     * LSN-ordered) set end_date = next version's start and flag the last
     * non-deleted version current; re-delivered (key, _lsn) duplicates are
-    * dropped. Equal to [[rebuildScd2]] without its shuffle. */
-  private def rebuildScd2Local(df: DataFrame, m: Manifest): DataFrame = {
+    * dropped. Also the SCD2 copy-on-write merge's chain rule
+    * (`MergeApply.applyScd2`), so reads and writes cannot drift apart. */
+  private[graft] def rebuildScd2Local(df: DataFrame, m: Manifest): DataFrame = {
     require(m.scdCols.size == 3, s"lake table at $dir has scd2 deltas but no scd_cols")
     val schema = df.schema
     val Seq(startC, endC, curC) = m.scdCols
@@ -1321,16 +1285,15 @@ class LakeTable(val dir: String) {
    * base + deltas — live in one bucket's file set: each delta-bearing
    * bucket's files are read as ONE Spark partition (narrow coalesce, no
    * shuffle) and folded inside the partition. The read plan of a 100 TB MoR
-   * table therefore contains ZERO Exchange — the previous groupBy/Window
-   * resolution re-shuffled every row by key on every read. Buckets without
+   * table therefore contains ZERO Exchange, where a key-grouped aggregate or
+   * window would re-shuffle every row by key on every read. Buckets without
    * deltas skip the fold entirely (plain multi-file scan); a pure-CoW
    * snapshot reads with zero overhead. The one-task-per-bucket granularity
    * is the same contract the write/compaction path already has (a bucket is
    * sized to one task).
    */
   private[graft] def readResolved(spark: SparkSession, m: Manifest, files: Seq[DataFile],
-      rowPrune: Boolean = false,
-      maxFoldBranches: Int = LakeTable.MaxFoldBranches): DataFrame = {
+      rowPrune: Boolean = false): DataFrame = {
     if (!files.exists(_.isDelta)) return readFiles(spark, m, files)
     val (gran, hot0, cold0) = hotFileSplit(files)
     def g(f: DataFile): Int = f.bucket % gran
@@ -1360,36 +1323,12 @@ class LakeTable(val dir: String) {
       case None => identity
       case Some(p) => df => df.filter(p)
     }
-    def fold(df: DataFrame): DataFrame =
-      if (m.tableMode == Manifest.SCD2) rebuildScd2Local(df, m)
-      else resolveLwwLocal(df, m.keyCols)
-    val hotGroupCount = hot0.iterator.map(g).toSet.size
-    val resolved =
-      if (hotGroupCount <= maxFoldBranches) {
-        // one coalesced scan branch per group (bucket-complete partition, zero
-        // Exchange); balanced union keeps Catalyst analysis O(N log N) instead
-        // of the quadratic left-deep chain
-        LakeTable.unionBalanced(
-          hot.groupBy(g).values.map(fs =>
-            probe(readFiles(spark, m, fs)).coalesce(1)).toSeq)
-          .transform(fold)
-      } else {
-        // thousands of delta-bearing groups: a single Catalyst plan over that
-        // many union branches costs the driver quadratic analysis. Drop the
-        // union BELOW Catalyst instead: each group's small scan plan is
-        // analyzed independently (linear driver work, constant per group),
-        // materialized to its RDD, and sc.union preserves every input's
-        // partitions — one bucket-complete partition per group, O(1) final
-        // plan size, and STILL zero shuffle at any group count. (The fold
-        // drops to the RDD layer immediately anyway, so nothing is lost by
-        // leaving Catalyst early.)
-        val branches = hot.groupBy(g).values
-          .map(fs => probe(readFiles(spark, m, fs)).coalesce(1)).toSeq
-        val schema = branches.head.schema
-        val union = spark.sparkContext.union(branches.map(_.queryExecution.toRdd))
-        fold(org.apache.spark.sql.graftbridge.Bridge
-          .internalCreateDataFrame(spark, union, schema))
-      }
+    // one coalesced scan branch per group (bucket-complete partition, zero
+    // Exchange); balanced union keeps Catalyst analysis O(N log N) instead
+    // of the quadratic left-deep chain
+    val resolved = resolveStored(LakeTable.unionBalanced(
+      hot.groupBy(g).values.map(fs =>
+        probe(readFiles(spark, m, fs)).coalesce(1)).toSeq), m)
     // bloom-passed base rows: provably untouched, read at full parallelism
     // beside the cold files (their bytes ARE scanned twice — once filtered
     // into the fold, once negated here — which is what the build gate's
@@ -2314,11 +2253,10 @@ class LakeTable(val dir: String) {
     val pred = m.keyCols.zip(values)
       .map { case (k, v) => col(k) === lit(v) }.reduce(_ && _)
     val df = readFiles(spark, m, files).filter(pred)
-    val resolved =
-      if (!files.exists(_.isDelta)) df
-      else if (m.tableMode == Manifest.SCD2) rebuildScd2(df, m)
-      else resolveLww(df, m.keyCols)
-    withoutTombstones(resolved)
+    // the key's rows all land in one partition, so the read path's fold
+    // resolves them without a shuffle
+    withoutTombstones(
+      if (files.exists(_.isDelta)) resolveStored(df.coalesce(1), m) else df)
   }
 
   /** Point lookup of one (possibly composite) key's current row (empty if

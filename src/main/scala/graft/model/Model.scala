@@ -101,7 +101,12 @@ case class ErrorPolicy(
     stopOnUpdateError: Boolean = false,
     stopOnDeleteError: Boolean = false,
     stopOnUpsertError: Boolean = false,
-    stopOnScd2Error: Boolean = false)
+    stopOnScd2Error: Boolean = false) {
+  /** Any stop_if_*_error flag is set: a bad row can fail the batch. */
+  def stopsOnAnyError: Boolean =
+    stopOnInsertError || stopOnUpdateError || stopOnDeleteError ||
+      stopOnUpsertError || stopOnScd2Error
+}
 
 /** SCD2 engine-managed column names —
   * reference: trempy/Replication/Strategies/ReplicationStrategy.py:125-216. */

@@ -331,17 +331,34 @@ object Dedup {
     * NULL (length mismatch, null element, zero norm) or NaN (NaN element)
     * fail the `>=` exactly like [[aboveThreshold]]. Falls back to the join
     * formulation when the id column is not LongType or the corpus exceeds
-    * the broadcast-sized bound — this op is inherently O(n²); past that
-    * size the LSH variant is the tool. */
+    * the broadcast-sized bound [[LocalScanMaxCells]] — this op is inherently
+    * O(n²); past that size the LSH variant is the tool. */
   def embeddingNearDupsExact(
       df: DataFrame, threshold: Double = 0.95,
-      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
+      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame =
+    exactPairs(df, threshold, vecCol, idCol)
+
+  /** Cap on rows × longest vector that [[allPairsCosineLocal]] collects to
+    * the driver — the same cap philosophy as Spark's own broadcast limits. */
+  private val LocalScanMaxCells = 1L << 28
+
+  /** [[embeddingNearDupsExact]]; specs lower `maxCells` to cross the bound. */
+  private[graft] def exactPairs(
+      df: DataFrame, threshold: Double, vecCol: String, idCol: String,
+      maxCells: Long = LocalScanMaxCells): DataFrame = {
     val idIsLong = df.schema(idCol).dataType == LongType
     val elemOk = df.schema(vecCol).dataType match {
       case ArrayType(FloatType | DoubleType | IntegerType | LongType | ShortType, _) => true
       case _ => false
     }
-    if (idIsLong && elemOk) allPairsCosineLocal(df, threshold, vecCol, idCol)
+    // sized BEFORE anything is collected: rows that can pair × the LONGEST
+    // vector (a short first row must not under-count the corpus)
+    def fitsLocal: Boolean = {
+      val r = df.agg(count(col(idCol)), max(size(col(vecCol)))).head()
+      val dim = if (r.isNullAt(1)) 0 else r.getInt(1)
+      r.getLong(0) * math.max(1, dim) < maxCells
+    }
+    if (idIsLong && elemOk && fitsLocal) allPairsCosineLocal(df, threshold, vecCol, idCol)
     else {
       val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
       val a = v.as("a"); val b = v.as("b")
@@ -353,7 +370,8 @@ object Dedup {
   }
 
   /** One side of the all-pairs scan collected (same bytes a broadcast
-    * nested-loop join ships to every executor) and probed in a fused
+    * nested-loop join ships to every executor; its size is gated by the
+    * caller before the collect) and probed in a fused
     * per-pair loop; the other side streams partition-local below the row
     * codec. Returns (id_a, id_b, cosine) with id_a < id_b and cosine ≥
     * threshold — the exact output of the join formulation. */
@@ -380,13 +398,6 @@ object Dedup {
         Some((r.getLong(0), vec))
       }
     }.sortBy(_._1)
-    // inherently O(n²): past broadcast-sized corpora the join fallback (and
-    // realistically the LSH variant) is the shape — same cap philosophy as
-    // Spark's own broadcast limits
-    require(side.length.toLong * math.max(1,
-      side.headOption.map(s => Option(s._2).map(_.length).getOrElse(0)).getOrElse(0)) < (1L << 28),
-      s"embeddingNearDupsExact: corpus too large for the all-pairs scan " +
-        s"(${side.length} rows) — use embeddingNearDups (LSH) at this scale")
     val bc = spark.sparkContext.broadcast(side)
     val outSchema = StructType(Seq(
       StructField("id_a", LongType, nullable = false),

@@ -7,6 +7,8 @@ import graft.apply.MergeApply
 import graft.model._
 import graft.runner.{CdcRunner, RunnerConfig}
 
+import scala.jdk.CollectionConverters._
+
 /** Per-op stop-or-continue error flags — reference: stop_if_*_error
   * (trempy/Tasks/Task.py:43-99; CDCOperationsHandler.py:25-30,783-801).
   * continue → bad rows quarantined, good rows commit; stop → batch fails. */
@@ -407,6 +409,18 @@ class ErrorPolicySpec extends SparkSpec {
     assert(ex.getMessage.contains("stop_if_error"))
     assert(!lake.isCommitted(0L))
     assert(lake.read(spark).count() == 0)
+    // a copy-on-write batch (the default) throws from its stats BEFORE the
+    // merge+write job: the epoch's data dir never receives a file
+    assert(job.merge == MergeStrategy.CopyOnWrite)
+    val dataDir = java.nio.file.Paths.get(lake.dataDir(0L))
+    val written =
+      if (!java.nio.file.Files.exists(dataDir)) Nil
+      else {
+        val walk = java.nio.file.Files.walk(dataDir)
+        try walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+        finally walk.close()
+      }
+    assert(written.isEmpty, s"merge wrote before the stop flag fired: $written")
   }
 
   test("quarantine=false: invariant violations fail the batch, never merge silently") {

@@ -16,6 +16,14 @@ class PlanAuditSpec extends SparkSpec {
     SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan.toString
   }
 
+  /** Any ShuffleDependency in the FULL physical RDD lineage, including inside
+    * the fold's pre-executed pipeline. */
+  private def hasShuffle(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
+    rdd.dependencies.exists {
+      case _: org.apache.spark.ShuffleDependency[_, _, _] => true
+      case d => hasShuffle(d.rdd)
+    }
+
   test("filter queries push predicates into the parquet scan") {
     val p = planOf("q_filter_compare")
     assert(p.contains("PushedFilters: [") && p.contains("IsNotNull(l_quantity)"),
@@ -60,11 +68,6 @@ class PlanAuditSpec extends SparkSpec {
     // 100 TB scale. Hard proof: walk the ENTIRE physical RDD lineage of the
     // resolved read (including inside the fold's pre-executed pipeline) and
     // assert no ShuffleDependency exists anywhere.
-    def hasShuffle(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
-      rdd.dependencies.exists {
-        case _: org.apache.spark.ShuffleDependency[_, _, _] => true
-        case d => hasShuffle(d.rdd)
-      }
     val reading = lake.read(spark)
     assert(!hasShuffle(reading.queryExecution.toRdd),
       "no ShuffleDependency in the full lineage of a delta-bearing read")
@@ -80,8 +83,8 @@ class PlanAuditSpec extends SparkSpec {
     assert(!hasShuffle(cowQe.toRdd))
   }
 
-  test("many-bucket MoR read: bounded plan-build wall at 256+ delta-bearing " +
-    "buckets (balanced tree), zero-shuffle RDD-layer union beyond the cap") {
+  test("many-bucket MoR read: bounded plan depth and plan-build wall at 256+ " +
+    "delta-bearing buckets (balanced tree), zero shuffle") {
     import graft.feed.ChangeFeed
     import graft.model._
     import graft.runner.{CdcRunner, RunnerConfig}
@@ -98,12 +101,7 @@ class PlanAuditSpec extends SparkSpec {
     CdcRunner.runAvailableNow(spark, cfg)
     val deltaBuckets = lake.manifest.files.filter(_.isDelta).map(_.bucket).toSet
     assert(deltaBuckets.size >= 256, s"fixture: ${deltaBuckets.size} delta-bearing buckets")
-    def hasShuffle(rdd: org.apache.spark.rdd.RDD[_]): Boolean =
-      rdd.dependencies.exists {
-        case _: org.apache.spark.ShuffleDependency[_, _, _] => true
-        case d => hasShuffle(d.rdd)
-      }
-    // balanced-tree union path (within the branch cap): plan build — analysis,
+    // balanced-tree union: plan build — analysis,
     // optimization, physical planning, toRdd — must stay bounded; a left-deep
     // union chain over hundreds of separate parquet relations is where the
     // driver would otherwise pay quadratic Catalyst work
@@ -129,26 +127,38 @@ class PlanAuditSpec extends SparkSpec {
         "the per-group subtree")
     assert(planWallS < 600.0, s"plan build took $planWallS s for ${deltaBuckets.size} buckets")
     assert(!hasShuffle(rdd), "tree-union path is still zero-shuffle")
-    // beyond the cap: the union moves BELOW Catalyst (per-group plans
-    // analyzed independently, sc.union of their RDDs) — O(1) final plan,
-    // linear driver work, and STILL zero shuffle at any group count. The cap
-    // is lowered through readResolved's parameter (the same resolution
-    // lake.read runs, tombstones still in) so 256+ groups cross it.
-    val m = lake.manifest
-    val treeState = lake.readResolved(spark, m, m.files, rowPrune = true)
-      .collect().map(_.toString).sorted
-    val t1 = System.nanoTime()
-    val fb = lake.readResolved(spark, m, m.files, rowPrune = true, maxFoldBranches = 8)
-    val fbRdd = fb.queryExecution.toRdd
-    val fbWallS = (System.nanoTime() - t1) / 1e9
-    info(f"RDD-union plan build: $fbWallS%.1f s")
-    // beyond the cap the per-group plans are tiny and the union is below
-    // Catalyst entirely — same generous backstop, shape asserted by the
-    // zero-shuffle + equality checks below
-    assert(fbWallS < 600.0, s"RDD-union plan build took $fbWallS s")
-    assert(!hasShuffle(fbRdd), "RDD-layer union is zero-shuffle too")
-    assert(fb.collect().map(_.toString).sorted.sameElements(treeState),
-      "RDD-union resolution == tree-union resolution")
+  }
+
+  test("delta-bearing point lookups fold bucket-locally: no ShuffleDependency " +
+    "in the lookup lineage (LWW and SCD2)") {
+    import graft.feed.ChangeFeed
+    import graft.model._
+    import graft.runner.{CdcRunner, RunnerConfig}
+    for (mode <- Seq(CdcMode.Upsert, CdcMode.Scd2)) {
+      val root = tmpDir("graft-plan-lookup")
+      val cfg = RunnerConfig(
+        feedDir = s"$root/feed", tableDir = s"$root/table", checkpointDir = s"$root/cp",
+        job = JobConfig(mode = mode, merge = MergeStrategy.MergeOnRead, buckets = 4))
+      ChangeFeed.writeFeed(
+        ChangeFeed.events(spark, ChangeFeed.FeedSpec(nEvents = 200, nDocs = 40)),
+        cfg.feedDir, nFiles = 2)
+      val lake = CdcRunner.ensureTable(spark, cfg)
+      CdcRunner.fullLoad(spark, lake, ChangeFeed.seedSnapshot(spark, 20), cfg)
+      CdcRunner.runAvailableNow(spark, cfg)
+      // a key whose lookup file set holds live deltas: the resolution runs
+      val key = lake.manifest.files.filter(_.isDelta).iterator
+        .flatMap(f => spark.read.parquet(f.path).select("doc_id").collect()
+          .map(_.getString(0)))
+        .find(k => lake.lookupFiles(k).exists(_.isDelta))
+      assert(key.nonEmpty, s"$mode fixture: some lookup meets a delta file")
+      val looked = lake.lookup(spark, key.get)
+      assert(!hasShuffle(looked.queryExecution.toRdd),
+        s"$mode: no ShuffleDependency in the lineage of a delta-bearing lookup")
+      assert(looked.collect().map(_.toString).sorted.sameElements(
+        lake.read(spark).filter(org.apache.spark.sql.functions.col("doc_id") === key.get)
+          .collect().map(_.toString).sorted),
+        s"$mode: lookup == filtered read")
+    }
   }
 
   test("changeLog is a pure pruned scan: no Exchange, no fold, no aggregation") {

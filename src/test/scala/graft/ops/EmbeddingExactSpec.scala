@@ -55,4 +55,26 @@ class EmbeddingExactSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     assert(f2 == j2 && f2.nonEmpty)
   }
+
+  test("past the all-pairs bound the exact scan takes the join formulation; " +
+    "the bound counts the LONGEST vector, output unchanged") {
+    // the lowest id carries a 1-element vector: sizing from the first row
+    // would count 300 cells, the longest vector makes it 300 × 16
+    val corpus = spark.range(300).select(col("id").as("vec_id"),
+      transform(sequence(lit(1), when(col("id") === 0, lit(1)).otherwise(lit(16))),
+        i => (pmod(xxhash64(col("id"), i), lit(97)) / lit(48.5) - 1.0).cast(FloatType))
+        .as("embedding"))
+    def joins(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.collectFirst {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+      }.nonEmpty
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val local = Dedup.exactPairs(corpus, 0.4, "embedding", "vec_id")
+    val over = Dedup.exactPairs(corpus, 0.4, "embedding", "vec_id", maxCells = 300L * 8)
+    assert(!joins(local), "within the bound: the fused local scan")
+    assert(joins(over), "past the bound: the join formulation, not a throw")
+    val expected = pairs(local)
+    assert(expected.nonEmpty && pairs(over) == expected)
+  }
 }
