@@ -894,12 +894,12 @@ object MergeApply {
         // keys makes every partition key-complete first
         val rebuilt = lake.rebuildScd2Local(
           base.unionByName(evRows).repartition(mAt.keyCols.map(col): _*), mAt)
-        val files = writeEpoch(spark, lake, rebuilt, epoch, mAt,
-          maxRowsPerBucket = mergedMaxRows(mAt, affectedC, changeRowsByBucket))
+        val files = timed("merge+write")(writeEpoch(spark, lake, rebuilt, epoch, mAt,
+          maxRowsPerBucket = mergedMaxRows(mAt, affectedC, changeRowsByBucket)))
         val metrics = metricsFn() // after the write — see commitCommon
         beforeCowCommit()
-        lake.commit(epoch, files, affectedC, metrics,
-          readVersion = Some(mAt.version))
+        timed("commit")(lake.commit(epoch, files, affectedC, metrics,
+          readVersion = Some(mAt.version)))
         BatchResult(epoch, skipped = false, metrics)
       }
       retryCow(lake, m, epoch)(cowAttempt)

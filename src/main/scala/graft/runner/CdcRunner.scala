@@ -81,9 +81,6 @@ object CdcRunner {
       compiled.outSpec.keyCols)
   }
 
-  def outputPayloadSchema(cfg: RunnerConfig): StructType =
-    outputPayloadSchemaAndKeys(cfg)._1
-
   /** Create the lake table if absent; `reload` start mode drops and recreates
     * (reference: ReplicationStrategy.reload_task, ReplicationStrategy.py:248-270). */
   def ensureTable(spark: SparkSession, cfg: RunnerConfig, reload: Boolean = false): LakeTable = {
@@ -355,17 +352,40 @@ object CdcRunner {
       case (ks, _)                      => ks
     }
 
-  /** Runtime config for a wire-format stream AFTER [[applyRegistryEagerly]]:
-    * key names follow the registry's renames, and the per-batch registry scan
-    * is dropped (every version is already applied, so the extra
-    * distinct(schema_ver) pass — a full re-parse of the batch — would buy
-    * nothing). The PARSE keeps reading the original registry separately. */
-  private def wireRuntimeCfg(cfg: RunnerConfig): RunnerConfig =
-    if (cfg.schemaRegistry.isEmpty) cfg
-    else cfg.copy(
-      job = cfg.job.copy(
-        keyCols = registryRenamedKeys(cfg.job.keyCols, cfg.schemaRegistry)),
-      schemaRegistry = Map.empty)
+  /** Merge keys of a PARQUET-feed stream (single- and multi-table; the wire
+    * paths rename unconditionally in [[wirePrelude]]): this feed declares its
+    * schema explicitly, so a key follows its registry rename exactly when the
+    * declared payload schema already carries the NEW name — the
+    * restarted-with-evolved-schema contract the per-batch registry guard
+    * instructs. Without this, following that very instruction wedged the
+    * merge on the stale key name (the lake column is renamed by
+    * applySchemaRegistry, the groupBy/DELETE-key filter still references the
+    * old one). */
+  private[runner] def declaredRenamedKeys(keys: Seq[String],
+      registry: Map[Int, Seq[SchemaChange]], payload: StructType): Seq[String] =
+    keys.zip(registryRenamedKeys(keys, registry)).map { case (o, n) =>
+      if (n != o && payload.fieldNames.contains(n)) n else o
+    }
+
+  /** The prelude every wire-format variant (envelope, Kafka, WAL) shares:
+    * create the table, apply the registry eagerly ([[applyRegistryEagerly]]),
+    * and derive the runtime config — key names follow the registry's renames,
+    * and the per-batch registry scan is dropped (every version is already
+    * applied, so the extra distinct(schema_ver) pass — a full re-parse of the
+    * batch — would buy nothing). The PARSE keeps reading the original
+    * registry separately. */
+  private def wirePrelude(spark: SparkSession, cfg: RunnerConfig)
+      : (LakeTable, RunnerConfig) = {
+    val lake = ensureTable(spark, cfg)
+    applyRegistryEagerly(lake, cfg.schemaRegistry)
+    val runCfg =
+      if (cfg.schemaRegistry.isEmpty) cfg
+      else cfg.copy(
+        job = cfg.job.copy(
+          keyCols = registryRenamedKeys(cfg.job.keyCols, cfg.schemaRegistry)),
+        schemaRegistry = Map.empty)
+    (lake, runCfg)
+  }
 
   /** The foreachBatch body: schema-registry evolution, then merge-apply. */
   def processBatch(spark: SparkSession, lake: LakeTable, cfg: RunnerConfig)(
@@ -419,76 +439,29 @@ object CdcRunner {
     }
   }
 
-  /**
-   * Per-batch progress metrics listener — the reference's stats sink
-   * (stats_cdc/stats_message, trempy/Metadata/MetadataConnectionManager.py:99-228)
-   * as JSON files next to the lake's lineage.
-   */
-  private class MetricsListener(
-      streams: org.apache.spark.sql.streaming.StreamingQueryManager,
-      tableDir: String, queryName: String)
-      extends org.apache.spark.sql.streaming.StreamingQueryListener {
-    import org.apache.spark.sql.streaming.StreamingQueryListener._
-    @volatile private var myId: java.util.UUID = null
-    override def onQueryStarted(e: QueryStartedEvent): Unit =
-      if (e.name == queryName) myId = e.id
-    // self-deregister when the watched query ends: a long-lived session that
-    // starts many queries would otherwise accumulate one forever-scanning
-    // listener per start
-    override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-      if (myId != null && e.id == myId) streams.removeListener(this)
-    override def onQueryProgress(e: QueryProgressEvent): Unit = {
-      if (e.progress.name == queryName) {
-        val dir = java.nio.file.Paths.get(tableDir, "metrics")
-        java.nio.file.Files.createDirectories(dir)
-        java.nio.file.Files.writeString(
-          dir.resolve(s"progress-${e.progress.batchId}.json"), e.progress.json)
-      }
-    }
-  }
-
-  /** Per-batch progress-metrics sink for one named query — registered by
-    * EVERY source variant (parquet, wal, envelope, kafka), removed when the
-    * query terminates. */
-  private[runner] def registerMetrics(spark: SparkSession, tableDir: String,
-      qName: String): org.apache.spark.sql.streaming.StreamingQueryListener = {
-    val l = new MetricsListener(spark.streams, tableDir, qName)
-    spark.streams.addListener(l)
-    l
-  }
-
-  /** Start with listener-leak protection: a query that FAILS to start never
-    * fires onQueryTerminated, so its listener would outlive it and be
-    * invoked on every progress event of every other query in the session —
-    * one leaked scanner per supervisor retry, forever. */
-  private[runner] def startGuarded(
-      spark: SparkSession,
-      listeners: Seq[org.apache.spark.sql.streaming.StreamingQueryListener])(
-      f: => StreamingQuery): StreamingQuery =
-    try f catch {
-      case e: Throwable =>
-        listeners.foreach(spark.streams.removeListener)
-        throw e
-    }
-
-  /** The launch tail every streaming entry ends with: trigger choice
-    * (AvailableNow drain vs the reference's `interval_seconds` cadence as a
-    * ProcessingTime trigger) + the listener-leak-guarded start. ONE
-    * definition — four hand-kept copies of this tail were exactly the drift
-    * class that once lost the rescale policy on the multi-table path. */
-  private def launchStream(spark: SparkSession,
-      writer: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row],
-      metricsL: org.apache.spark.sql.streaming.StreamingQueryListener,
-      availableNow: Boolean, intervalSeconds: Int): StreamingQuery =
-    startGuarded(spark, Seq(metricsL))(
-      (if (availableNow) writer.trigger(Trigger.AvailableNow())
-       else writer.trigger(Trigger.ProcessingTime(s"$intervalSeconds seconds"))).start())
+  /** The ONE code that starts a stream: every source variant and the
+    * multi-table runner build their source frame and per-batch body, then
+    * call this. It owns the query name (`graft-<kind>-<uuid8>`), the
+    * checkpoint, `foreachBatch` and the trigger choice (AvailableNow drain vs
+    * the reference's `interval_seconds` cadence as a ProcessingTime trigger).
+    * Live progress is Spark's own `StreamingQuery.recentProgress`; the
+    * per-epoch stats are the lineage record every commit writes. */
+  private[runner] def launch(kind: String, source: DataFrame, checkpointDir: String,
+      availableNow: Boolean, intervalSeconds: Int)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    source.writeStream
+      .queryName(s"graft-$kind-${java.util.UUID.randomUUID().toString.take(8)}")
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(body)
+      .trigger(if (availableNow) Trigger.AvailableNow()
+               else Trigger.ProcessingTime(s"$intervalSeconds seconds"))
+      .start()
 
   /** Registry-vs-plain envelope parse routing, shared by the JSON-lines bus
     * and the Kafka reader (identical message format — only the source line
     * differs): with a registry, every payload version parses in one stream
     * (column names ride in each message), same as startFromWal. ONE
-    * definition, same drift argument as [[launchStream]]. */
+    * definition, so the two readers cannot drift apart. */
   private def parseEnvelopeFeed(raw: DataFrame, cfg: RunnerConfig,
       schemaName: String, tableName: String): DataFrame = {
     import graft.feed.EnvelopeSource
@@ -503,16 +476,8 @@ object CdcRunner {
     * CDCStrategy.py:75-101) — honored as the ProcessingTime trigger. */
   def start(spark: SparkSession, cfg: RunnerConfig, availableNow: Boolean = true,
       intervalSeconds: Int = 5): StreamingQuery = {
-    // registry key renames on the PARQUET path (the wire paths fold them in
-    // wireRuntimeCfg): this feed declares its schema explicitly, so a key
-    // follows its rename exactly when the configured payload schema already
-    // carries the NEW name — the restarted-with-evolved-schema contract the
-    // per-batch registry guard instructs. Without this, following that very
-    // instruction wedged the merge on the stale key name.
-    val renamed = registryRenamedKeys(cfg.job.keyCols, cfg.schemaRegistry)
-    val effKeys = cfg.job.keyCols.zip(renamed).map { case (o, n) =>
-      if (n != o && cfg.payloadSchema.fieldNames.contains(n)) n else o
-    }
+    val effKeys = declaredRenamedKeys(cfg.job.keyCols, cfg.schemaRegistry,
+      cfg.payloadSchema)
     val runCfg =
       if (effKeys == cfg.job.keyCols) cfg
       else cfg.copy(job = cfg.job.copy(keyCols = effKeys))
@@ -521,13 +486,8 @@ object CdcRunner {
       .schema(eventSchema(runCfg))
       .option("maxFilesPerTrigger", runCfg.maxFilesPerTrigger)
       .parquet(runCfg.feedDir)
-    val qName = s"graft-cdc-${java.util.UUID.randomUUID().toString.take(8)}"
-    val l = registerMetrics(spark, runCfg.tableDir, qName)
-    val writer = stream.writeStream
-      .queryName(qName)
-      .option("checkpointLocation", runCfg.checkpointDir)
-      .foreachBatch(processBatch(spark, lake, runCfg) _)
-    launchStream(spark, writer, l, availableNow, intervalSeconds)
+    launch("cdc", stream, runCfg.checkpointDir, availableNow, intervalSeconds)(
+      processBatch(spark, lake, runCfg))
   }
 
   /** Drain everything currently in the feed and stop (test/bench entry). */
@@ -546,23 +506,15 @@ object CdcRunner {
       spark: SparkSession, cfg: RunnerConfig,
       schemaName: String, tableName: String,
       availableNow: Boolean = true, intervalSeconds: Int = 5): StreamingQuery = {
-    import graft.feed.EnvelopeSource
-    val lake = ensureTable(spark, cfg)
-    applyRegistryEagerly(lake, cfg.schemaRegistry)
-    val runCfg = wireRuntimeCfg(cfg)
+    val (lake, runCfg) = wirePrelude(spark, cfg)
     val stream = spark.readStream
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
       .text(cfg.feedDir)
-    val qName = s"graft-env-${java.util.UUID.randomUUID().toString.take(8)}"
-    val metricsL = registerMetrics(spark, cfg.tableDir, qName)
-    val writer = stream.writeStream
-      .queryName(qName)
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (raw: DataFrame, epoch: Long) =>
+    launch("env", stream, cfg.checkpointDir, availableNow, intervalSeconds) {
+      (raw, epoch) =>
         processBatch(spark, lake, runCfg)(
           parseEnvelopeFeed(raw, cfg, schemaName, tableName), epoch)
-      }
-    launchStream(spark, writer, metricsL, availableNow, intervalSeconds)
+    }
   }
 
   /** True when the spark-sql-kafka connector is on the classpath (NOT bundled
@@ -597,10 +549,7 @@ object CdcRunner {
     require(kafkaConnectorPresent,
       "startFromKafka needs the spark-sql-kafka-0-10 connector on the classpath " +
         "(spark-submit --packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>)")
-    import graft.feed.EnvelopeSource
-    val lake = ensureTable(spark, cfg)
-    applyRegistryEagerly(lake, cfg.schemaRegistry)
-    val runCfg = wireRuntimeCfg(cfg)
+    val (lake, runCfg) = wirePrelude(spark, cfg)
     val stream0 = spark.readStream
       .format("kafka")
       .option("kafka.bootstrap.servers", brokers)
@@ -609,17 +558,12 @@ object CdcRunner {
     val stream = (if (maxOffsetsPerTrigger > 0)
       stream0.option("maxOffsetsPerTrigger", maxOffsetsPerTrigger)
     else stream0).load()
-    val qName = s"graft-kafka-${java.util.UUID.randomUUID().toString.take(8)}"
-    val metricsL = registerMetrics(spark, cfg.tableDir, qName)
-    val writer = stream.writeStream
-      .queryName(qName)
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (raw: DataFrame, epoch: Long) =>
+    launch("kafka", stream, cfg.checkpointDir, availableNow, intervalSeconds) {
+      (raw, epoch) =>
         val value = raw.select(col("value").cast("string").as("value"))
         processBatch(spark, lake, runCfg)(
           parseEnvelopeFeed(value, cfg, schemaName, tableName), epoch)
-      }
-    launchStream(spark, writer, metricsL, availableNow, intervalSeconds)
+    }
   }
 
   /**
@@ -647,20 +591,14 @@ object CdcRunner {
       schemaName: String, tableName: String,
       availableNow: Boolean = true, intervalSeconds: Int = 5): StreamingQuery = {
     import graft.feed.WalParser
-    val lake = ensureTable(spark, cfg)
-    applyRegistryEagerly(lake, cfg.schemaRegistry)
-    val runCfg = wireRuntimeCfg(cfg)
+    val (lake, runCfg) = wirePrelude(spark, cfg)
     val stream = spark.readStream
       .schema(WalParser.rawSchema)
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
       .parquet(cfg.feedDir)
-    val qName = s"graft-wal-${java.util.UUID.randomUUID().toString.take(8)}"
-    val metricsL = registerMetrics(spark, cfg.tableDir, qName)
     val stashRoot = s"${cfg.checkpointDir}/wal-pending"
-    val writer = stream.writeStream
-      .queryName(qName)
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (raw0: DataFrame, epoch: Long) =>
+    launch("wal", stream, cfg.checkpointDir, availableNow, intervalSeconds) {
+      (raw0: DataFrame, epoch: Long) =>
         // The WAL parse is CPU-heavy (regex tokenizer per line) and its scan
         // stage's parallelism is the batch's FILE count — with
         // maxFilesPerTrigger in the single digits most cores sit idle for
@@ -893,17 +831,9 @@ object CdcRunner {
             stashFs.delete(st.getPath, true): Unit
           }
         }
-      }
-    launchStream(spark, writer, metricsL, availableNow, intervalSeconds)
+    }
   }
 
-
-  /** Read the evicted-xid ledger carried under the WAL pending stash:
-    * a plain text file of `xid evictedAtEpoch` lines ([[writeEvictionLedger]]).
-    * A ledger left by a pre-retention checkpoint is a parquet DIRECTORY of
-    * bare xids: read it once via Spark and stamp every entry as evicted at
-    * `fallbackEpoch` (the newest possible time — it then lives a full
-    * retention window, the safe direction). */
   /** The Hadoop FileSystem owning `path` (plus the parsed Path): checkpoint
     * state must be probed through the path's own scheme — a java.io.File
     * probe on an hdfs://s3a:// checkpoint is always false, silently
@@ -925,6 +855,12 @@ object CdcRunner {
     * job for zero rows; the carry-in probe treats such a dir as absent. */
   private val EMPTY_STASH = "_EMPTY_STASH"
 
+  /** Read the evicted-xid ledger carried under the WAL pending stash:
+    * a plain text file of `xid evictedAtEpoch` lines ([[writeEvictionLedger]]).
+    * A ledger left by a pre-retention checkpoint is a parquet DIRECTORY of
+    * bare xids: read it once via Spark and stamp every entry as evicted at
+    * `fallbackEpoch` (the newest possible time — it then lives a full
+    * retention window, the safe direction). */
   private[graft] def readEvictionLedger(
       spark: SparkSession, path: String, fallbackEpoch: Long): Seq[(Long, Long)] = {
     val (fs, p) = hadoopFs(spark, path)

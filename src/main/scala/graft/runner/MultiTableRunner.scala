@@ -2,7 +2,7 @@ package graft.runner
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 import graft.apply.MergeApply
@@ -72,22 +72,11 @@ object MultiTableRunner {
     val jobs = cfg.settings.tables.map { rules =>
       val payload = cfg.payloads.getOrElse(rules.id,
         throw new IllegalArgumentException(s"no payload declared for table ${rules.id}"))
-      // registry key renames — the single-table start() contract
-      // (CdcRunner.registryRenamedKeys): a merge key follows its rename
-      // exactly when the declared payload schema already carries the NEW
-      // name. Without this, a registry renaming a key column wedges every
-      // batch of the restarted-with-evolved-payload stream on the stale key
-      // name (the lake column is renamed by applySchemaRegistry, the job's
-      // groupBy/DELETE-key filter still references the old one).
-      val renamedKeys = CdcRunner.registryRenamedKeys(
-        payload.keyCols, cfg.settings.schemaRegistry)
-      val effKeys = payload.keyCols.zip(renamedKeys).map { case (o, n) =>
-        if (n != o && payload.schema.fieldNames.contains(n)) n else o
-      }
       val job = JobConfig(
         mode = cfg.settings.cdcMode,
         merge = cfg.settings.mergeStrategy,
-        keyCols = effKeys,
+        keyCols = CdcRunner.declaredRenamedKeys(
+          payload.keyCols, cfg.settings.schemaRegistry, payload.schema),
         buckets = if (cfg.buckets > 0) cfg.buckets else cfg.settings.buckets,
         filters = rules.filters,
         transforms = rules.transforms,
@@ -190,48 +179,26 @@ object MultiTableRunner {
       CdcRunner.fullLoad(spark, tj.lake, sub, tj.job)
     }
 
-  def start(spark: SparkSession, cfg: Config, availableNow: Boolean = true): StreamingQuery =
-    startWithJobs(spark, cfg, ensureTables(spark, cfg), availableNow)
-
   /** Start the stream over jobs the caller already built (so a composite
-    * full load can commit against the same TableJob set first). */
+    * full load can commit against the same TableJob set first). The
+    * settings' interval_seconds — the reference's producer cadence — is the
+    * ProcessingTime trigger. */
   def startJobs(spark: SparkSession, cfg: Config, jobs: Seq[TableJob],
-      availableNow: Boolean): StreamingQuery =
-    startWithJobs(spark, cfg, jobs, availableNow)
-
-  /** `intervalSeconds` defaults to the settings' interval_seconds — the
-    * reference's producer cadence becomes the ProcessingTime trigger. */
-  private def startWithJobs(
-      spark: SparkSession, cfg: Config, jobs: Seq[TableJob],
       availableNow: Boolean): StreamingQuery = {
     val stream = spark.readStream
       .schema(feedSchema(cfg))
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
       .parquet(cfg.feedDir)
-    val qName = s"graft-multi-${java.util.UUID.randomUUID().toString.take(8)}"
-    // same progress-metrics sink as every single-table source variant, but
-    // ONE listener at the RUN root, not one per routed table: the progress
-    // JSON is QUERY-scoped (numInputRows counts the whole union feed), and a
-    // copy in each lake's metrics dir read as that table's throughput would
-    // overstate it N-fold. Per-table truth lives where it always does — each
-    // lake's manifest metrics and per-epoch lineage (events_received etc.).
-    val listeners = Seq(CdcRunner.registerMetrics(spark, cfg.lakeRoot, qName))
-    val writer = stream.writeStream
-      .queryName(qName)
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch(processBatch(spark, jobs, cfg.settings.schemaRegistry,
+    CdcRunner.launch("multi", stream, cfg.checkpointDir, availableNow,
+      cfg.settings.intervalSeconds)(
+      processBatch(spark, jobs, cfg.settings.schemaRegistry,
         cfg.settings.autoCompactEveryEpochs, cfg.settings.autoCompactMaxDeltaFiles,
-        cfg.settings.autoRescaleBytesPerBucket, cfg.settings.autoRescaleMaxGroups) _)
-    CdcRunner.startGuarded(spark, listeners)(
-      (if (availableNow) writer.trigger(Trigger.AvailableNow())
-       else writer.trigger(
-         Trigger.ProcessingTime(s"${cfg.settings.intervalSeconds} seconds"))).start())
+        cfg.settings.autoRescaleBytesPerBucket, cfg.settings.autoRescaleMaxGroups))
   }
 
   def runAvailableNow(spark: SparkSession, cfg: Config): Seq[TableJob] = {
     val jobs = ensureTables(spark, cfg)
-    val q = startWithJobs(spark, cfg, jobs, availableNow = true)
-    q.awaitTermination()
+    startJobs(spark, cfg, jobs, availableNow = true).awaitTermination()
     jobs
   }
 }

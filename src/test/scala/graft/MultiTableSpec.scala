@@ -210,8 +210,15 @@ class MultiTableSpec extends SparkSpec {
     // write via the LSN-ordered feed writer (binlog arrival contract)
     graft.feed.ChangeFeed.writeFeed(df, cfg.feedDir, 2)
 
+    val listeners = spark.streams.listListeners().toSeq
     val jobs = MultiTableRunner.runAvailableNow(spark, cfg)
     assert(jobs.map(_.targetId) == Seq("hr.employee_f", "hr.department"))
+    // the launch registers no session listener and writes no progress files,
+    // neither at the run root nor in any routed table
+    assert(spark.streams.listListeners().toSeq == listeners)
+    (cfg.lakeRoot +: jobs.map(_.lake.dir)).foreach { d =>
+      assert(!new java.io.File(s"$d/metrics").exists(), d)
+    }
 
     val empState = jobs.head.lake.read(spark)
       .select("emp_id", "name", "gender", "updated_by")

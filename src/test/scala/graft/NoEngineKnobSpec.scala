@@ -24,15 +24,26 @@ class NoEngineKnobSpec extends AnyFunSuite {
       """\s*(?:\.\s*(?:get|getOrElse|contains|apply)\s*)?\(\s*(\S)""").r
   private val engineKey = """"(?:graft\.|GRAFT_)""".r
 
+  /** `file:line: snippet` of the source line holding offset `at`. */
+  private def located(file: Path, text: String, at: Int): String = {
+    val line = text.substring(0, at).count(_ == '\n') + 1
+    val end = text.indexOf('\n', at) match { case -1 => text.length; case e => e }
+    s"${root.relativize(file)}:$line: ${text.substring(at, end).trim}"
+  }
+
   /** `file:line: snippet` of every forbidden read in `text`. */
   private def offending(file: Path, text: String): Seq[String] =
     readCall.findAllMatchIn(text).toSeq.collect {
       case m if m.group(1) != "\"" ||
           engineKey.findPrefixOf(text.substring(m.start(1))).nonEmpty =>
-        val line = text.substring(0, m.start).count(_ == '\n') + 1
-        val end = text.indexOf('\n', m.start) match { case -1 => text.length; case e => e }
-        s"${root.relativize(file)}:$line: ${text.substring(m.start, end).trim}"
+        located(file, text, m.start)
     }
+
+  private def scalaFiles(dir: Path): Seq[Path] =
+    Files.walk(dir).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .sortBy(_.toString)
+
+  private def read(f: Path): String = new String(Files.readAllBytes(f), "UTF-8")
 
   test("engine packages read no graft.* system property and no GRAFT_* env var") {
     assert(Files.isDirectory(root), s"run from the repository root: $root not found")
@@ -40,13 +51,39 @@ class NoEngineKnobSpec extends AnyFunSuite {
     val names = packages.map(_.getFileName.toString).toSet
     val engine = Set("apply", "lake", "runner", "feed", "rules", "functions", "model", "ops")
     assert(engine.subsetOf(names), s"engine packages missing from the scan: ${engine -- names}")
-    val sources = packages.flatMap(p =>
-      Files.walk(p).iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq)
+    val sources = packages.flatMap(scalaFiles)
     assert(sources.nonEmpty)
-    val hits = sources.sortBy(_.toString)
-      .flatMap(f => offending(f, new String(Files.readAllBytes(f), "UTF-8")))
+    val hits = sources.sortBy(_.toString).flatMap(f => offending(f, read(f)))
     assert(hits.isEmpty,
       s"${hits.size} engine knob read(s) — make it a constant, a config field or a " +
         s"private[graft] seam:\n${hits.mkString("\n")}")
+  }
+
+  /** One launch path: a stream is started only by `CdcRunner.launch` (query
+    * name, checkpoint, foreachBatch, trigger), and no code registers a
+    * session-wide listener. Scans every file under `src/main/scala/graft/`,
+    * the entry-point mains included. */
+  test("streams start only through CdcRunner.launch; no session listener is registered") {
+    val launchFile = root.resolve("runner/CdcRunner.scala")
+    val launchText = read(launchFile)
+    val defAt = launchText.indexOf("def launch(")
+    assert(defAt >= 0, s"no launch function in $launchFile")
+    // the function ends where the next member of the object begins
+    val defEnd = """\n  (?:/\*\*|def |private|val |\})""".r
+      .findFirstMatchIn(launchText.substring(defAt)).map(defAt + _.start)
+      .getOrElse(launchText.length)
+    val token = """\bwriteStream\b|\bTrigger\.|\baddListener\b""".r
+    val outside = scalaFiles(root).flatMap { f =>
+      val text = read(f)
+      token.findAllMatchIn(text).toSeq.collect {
+        case m if m.matched == "addListener" || f != launchFile ||
+            m.start < defAt || m.start >= defEnd =>
+          located(f, text, m.start)
+      }
+    }
+    assert(outside.isEmpty,
+      s"${outside.size} stream launch or listener site(s) outside CdcRunner.launch:\n" +
+        outside.mkString("\n"))
+    assert("""\bwriteStream\b""".r.findAllMatchIn(launchText).size == 1)
   }
 }

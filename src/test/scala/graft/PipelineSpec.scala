@@ -76,11 +76,15 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("e2e upsert: streamed merge final state == replay oracle (token-array equality)") {
-    val (_, expected, actual) = runPipeline(nDocs = 200, nEvents = 1000)
+    val listeners = spark.streams.listListeners().toSeq
+    val (lake, expected, actual) = runPipeline(nDocs = 200, nEvents = 1000)
     assert(actual.keySet == expected.keySet)
     actual.foreach { case (id, doc) =>
       assert(doc == expected(id), s"mismatch for $id")
     }
+    // the launch registers no session listener and writes no progress files
+    assert(spark.streams.listListeners().toSeq == listeners)
+    assert(!new java.io.File(s"${lake.dir}/metrics").exists())
   }
 
   test("e2e upsert with zipf hot keys and quarantined rows") {

@@ -77,4 +77,49 @@ class Scd2Spec extends SparkSpec {
       .map { case (_, vs) => vs.count(_.getAs[Int]("scd_current") == 1) }
     assert(multiCurrent.forall(_ <= 1))
   }
+
+  test("scd2 copy-on-write epoch carries the merge+write and commit phase labels") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import graft.lake.{DataFile, LakeTable, Manifest, SchemaChange}
+
+    val root = tmpDir("graft-scd2-labels")
+    val cfg = RunnerConfig(
+      feedDir = s"$root/feed", tableDir = s"$root/table", checkpointDir = s"$root/cp",
+      job = JobConfig(mode = CdcMode.Scd2, buckets = 4))
+    CdcRunner.ensureTable(spark, cfg)
+    val sc = spark.sparkContext
+    // the commit runs no Spark job: its label is the job description active
+    // on the committing thread
+    val commitLabels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val lake = new LakeTable(cfg.tableDir) {
+      override def commit(epoch: Long, newFiles: Seq[DataFile],
+          replacedBuckets: Set[Int], metricsDelta: Map[String, Long],
+          changes: Seq[SchemaChange], consolidate: Boolean,
+          readVersion: Option[Int]): Manifest = {
+        Option(sc.getLocalProperty("spark.job.description")).foreach(commitLabels.add)
+        super.commit(epoch, newFiles, replacedBuckets, metricsDelta, changes,
+          consolidate, readVersion)
+      }
+    }
+    val jobLabels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(jobLabels.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      MergeApply.applyBatch(spark, lake,
+        spark.createDataFrame(sc.parallelize(
+          Seq(ev(1, "INSERT", "A", 1), ev(2, "UPDATE", "A", 2)), 2), ChangeEvent.schema()),
+        0, cfg.job)
+      eventually(timeout(30.seconds)) {
+        assert(jobLabels.contains("merge: merge+write"), jobLabels.toString)
+      }
+    } finally sc.removeSparkListener(listener)
+    assert(commitLabels.contains("merge: commit"), commitLabels.toString)
+    assert(lake.read(spark).count() == 2)
+  }
 }

@@ -178,7 +178,11 @@ class EnvelopeSpec extends SparkSpec {
       feedDir = s"$root/bus", tableDir = s"$root/table", checkpointDir = s"$root/cp",
       job = JobConfig(mode = CdcMode.Upsert, buckets = 4),
       payloadSchema = payload)
+    val listeners = spark.streams.listListeners().toSeq
     CdcRunner.startFromEnvelopes(spark, cfg, "corpus", "documents").awaitTermination()
+    // the launch registers no session listener and writes no progress files
+    assert(spark.streams.listListeners().toSeq == listeners)
+    assert(!new java.io.File(s"${cfg.tableDir}/metrics").exists())
 
     val state = new graft.lake.LakeTable(cfg.tableDir).read(spark)
       .select("doc_id", "n_tok", "source").collect().map(_.toString).sorted

@@ -255,7 +255,11 @@ class WalParserSpec extends SparkSpec {
       feedDir = s"$root/feed", tableDir = s"$root/table", checkpointDir = s"$root/cp",
       job = JobConfig(mode = CdcMode.Upsert, buckets = 4),
       payloadSchema = payload)
+    val listeners = spark.streams.listListeners().toSeq
     CdcRunner.startFromWal(spark, cfg, "corpus", "documents").awaitTermination()
+    // the launch registers no session listener and writes no progress files
+    assert(spark.streams.listListeners().toSeq == listeners)
+    assert(!new java.io.File(s"${cfg.tableDir}/metrics").exists())
     val lake = new graft.lake.LakeTable(cfg.tableDir)
     val state = lake.read(spark).collect()
     assert(state.length == 1, s"d-2 deleted, no-tuple DELETE dropped: ${state.toSeq}")
