@@ -21,17 +21,19 @@ import graft.rules._
  *                                       partial aggregation bounds hot-key fan-in:
  *                                       each map task emits ≤1 row per key)
  *     → manifest-pruned read of affected buckets only
- *     → full-outer equi-join on the key (AQE picks broadcast when the reduced
- *       change set is small; skew-join handles hot buckets)
+ *     → union with the change rows → ONE exchange on (bucket, salt)
+ *     → per-partition stored-row fold (the read path's: max-_lsn winner, or
+ *       the SCD2 chain rebuild)
  *     → bucket-partitioned write + atomic manifest commit (exactly-once per epoch)
  * }}}
  *
  * Scale notes (100 TB / 10^10 events): the base table is never fully scanned —
  * reads prune to `O(affected buckets)` via the manifest; the reduction shuffles
  * only the batch (with map-side partial max_by, a hot key contributes at most one
- * row per map task to the shuffle); the join shuffles only batch + affected
- * buckets; the write re-shuffles merged rows by bucket so each bucket is written
- * by one task (bounded file counts).
+ * row per map task to the shuffle); the merge shuffles batch + affected buckets
+ * ONCE — the write's (bucket, salt) exchange, whose salt splits a hot bucket
+ * over a bounded set of tasks and, hashing the merge keys, makes every
+ * partition key-complete for the fold.
  */
 object MergeApply {
 
@@ -336,10 +338,9 @@ object MergeApply {
     // (a corrupt envelope whose message-level fields nulled out, a hand-made
     // parquet feed missing the column) and quarantines like the rest
     val lsnOk = col(ChangeEvent.LSN).isNotNull
-    // a NULL merge key can never equi-match: the CoW full-outer join would
-    // insert a fresh null-key row EVERY epoch (unbounded, undeletable —
-    // tombstones don't match either) while the MoR fold's sameKey dedupes
-    // them — divergent results per storage strategy. Quarantine instead.
+    // a NULL merge key names no row: an INSERT/UPDATE carrying one is
+    // malformed input, and its rows would land in the table as a key no
+    // lookup can address and no well-formed DELETE can remove. Quarantine.
     // Only the SURVIVING keys (checkedKeys) are checked; when the pipeline
     // replaces the whole key set the raw split has nothing to check.
     val keyOk =
@@ -460,10 +461,8 @@ object MergeApply {
     // which can only check the PRE-transform key set; (b) a SURVIVING key
     // whose VALUE a modifier nulled (math_expression 1/0 under non-ANSI
     // Divide, a format miss) escapes it too — "renames preserve values"
-    // covers renames only. A null key on INSERT/UPDATE makes the CoW
-    // full-outer join insert a FRESH row every epoch (never matched, never
-    // deletable) while MoR's fold groups nulls together — the exact
-    // per-strategy divergence the raw null_merge_key guard exists to stop.
+    // covers renames only. A null key on INSERT/UPDATE is malformed input
+    // for the same reason as the raw null_merge_key guard: it names no row.
     // DELETEs keep flowing: the routing contract folds key-only DELETEs by
     // whatever key they carry, and a null-key tombstone is invisible to
     // public reads on every storage strategy (driver-oracled by
@@ -477,7 +476,7 @@ object MergeApply {
     // pipeline once per epoch just to learn n==0 in the common clean case.
     // The filter always applies (fused into the same scan); only a non-zero
     // count pays the quarantine re-scan. Resolution happens pre-commit via
-    // the by-name extraMetrics the modes thread into commitCommon.
+    // the by-name extraMetrics the modes thread into mergeChanges.
     val (mergeInput, postStats) =
       if (introduced.isEmpty)
         (transformed, () => Map.empty[String, Long])
@@ -538,96 +537,6 @@ object MergeApply {
     }
   }
 
-  /** Shared commit scaffolding for BOTH modes: metrics assembly (op counts +
-    * quarantine/received/skipped accounting), the empty-batch feed-marker
-    * commit, and the merge-on-read delta commit — ONE definition. The two
-    * hand-kept copies had already drifted twice (a committed map smaller
-    * than the returned one; delta_commits in the manifest but not the
-    * BatchResult). Returns (metrics, Some(result)) when the epoch is fully
-    * handled here; (metrics, None) hands the caller on to its copy-on-write
-    * path with the assembled base metrics. */
-  private def commitCommon(
-      spark: SparkSession,
-      lake: LakeTable,
-      epoch: Long,
-      cfg: JobConfig,
-      m: Manifest,
-      opCounts: Map[String, Long],
-      /** change rows per bucket (see [[statsByOpAndBucket]]): its keys are
-        * the affected buckets, its largest value sizes the delta write's
-        * adaptive salt */
-      changeRowsByBucket: Map[Int, Long],
-      onStats: () => (Long, Long, Long),
-      /** by-name: carries the post-transform quarantine resolution, which may
-        * only run AFTER the mode's first action (its observation completes
-        * with it) and must run pre-commit; evaluated exactly once, here */
-      extraMetrics: => Map[String, Long],
-      deltaRows: => DataFrame): (() => Map[String, Long], Option[BatchResult]) = {
-    // LAZY, evaluated once, always PRE-commit: onStats blocks on the
-    // observation listener, and the shared listener bus lags behind the
-    // thousands of task events a bulk epoch just posted — resolving it
-    // AFTER the epoch's write job lets the bus drain in the shadow of real
-    // work instead of stalling the driver between jobs (a fixed cost that
-    // taxes exactly the high-core wall the scaling pair divides by).
-    lazy val metrics: Map[String, Long] = timed("stats-resolve") {
-      val (nQuarantined, nReceived, nSkipped) = onStats()
-      val extra = extraMetrics
-      Map(
-        "batches" -> 1L,
-        "events_quarantined" -> nQuarantined,
-        "events_received" -> receivedDelta(epoch, nReceived),
-        "applied_inserts" -> opCounts.getOrElse(ChangeEvent.INSERT, 0L),
-        "applied_updates" -> opCounts.getOrElse(ChangeEvent.UPDATE, 0L),
-        "applied_deletes" -> opCounts.getOrElse(ChangeEvent.DELETE, 0L)) ++
-        // key present only when non-zero: a clean feed's manifests stay lean
-        (if (nSkipped > 0) Map("skipped_keyless_deletes" -> nSkipped)
-         else Map.empty[String, Long]) ++
-        extra
-    }
-    if (changeRowsByBucket.isEmpty) {
-      // an empty batch still commits (and still carries extraMetrics): a
-      // sync window whose changes all reduce away must advance its cursor.
-      // A feed-recording CoW table still plants the durable `changes/_feed`
-      // marker — it must exist from the FIRST feed-enabled epoch, or an
-      // all-quarantined first batch leaves recordsChangeFeed false and the
-      // later drain defaults to a sidecar-less commit that wedges every
-      // changeLog window spanning it. Marker only, no sidecar: changeLog
-      // never demands a sidecar from a file-less commit.
-      if (cfg.changeFeed && cfg.merge != MergeStrategy.MergeOnRead)
-        lake.enableChangeFeed()
-      lake.commit(epoch, Nil, Set.empty, metrics)
-      (() => metrics, Some(BatchResult(epoch, skipped = false, metrics)))
-    } else if (cfg.merge == MergeStrategy.MergeOnRead) {
-      // merge-on-read: the change set IS the commit — per-bucket delta
-      // files, no base read, no join, no bucket rewrite; O(batch) bytes per
-      // epoch regardless of how many buckets the batch touches. Commit and
-      // return the SAME map (delta_commits included).
-      val files = timed("delta-write")(
-        writeEpoch(spark, lake, deltaRows, epoch, m, kind = DataFile.DELTA,
-          maxRowsPerBucket = changeRowsByBucket.values.max))
-      val morMetrics = metrics + ("delta_commits" -> 1L)
-      timed("commit")(lake.commit(epoch, files, Set.empty, morMetrics))
-      (() => morMetrics, Some(BatchResult(epoch, skipped = false, morMetrics)))
-    } else {
-      // a stop_if_*_error flag can fail the batch from its stats: resolve
-      // them now, so a poisoned batch throws before the copy-on-write
-      // merge+write, the epoch's most expensive job (see `metrics` for why
-      // a clean run resolves them only after that write)
-      if (cfg.errorPolicy.stopsOnAnyError) metrics
-      (() => metrics, None)
-    }
-  }
-
-  /** The (bucket, op, count) stats collect, summed per op (the applied_*
-    * metrics) and per bucket (the affected buckets and their change rows,
-    * which size the adaptive write salt). */
-  private def statsByOpAndBucket(
-      stats: Array[Row]): (Map[String, Long], Map[Int, Long]) = {
-    def sums[K](key: Row => K): Map[K, Long] =
-      stats.groupBy(key).map { case (k, rows) => k -> rows.map(_.getLong(2)).sum }
-    (sums(_.getString(1)), sums(_.getInt(0)))
-  }
-
   /** Adaptive-salt sizing for a copy-on-write rewrite of `affectedC`: merged
     * rows per bucket ≤ base rows (exact manifest footer counts) + change
     * rows (the stats collect); a stats-less file (rows = -1) degrades to
@@ -659,7 +568,6 @@ object MergeApply {
       extraMetrics: => Map[String, Long]): BatchResult = {
 
     val m = lake.manifest
-    val buckets = m.buckets
     // engine-internal columns (leading underscore, e.g. the stored per-row _lsn)
     // are never payload — FIXTURES F1
     val payloadCols = m.currentSchema.fields.map(_.name).filterNot(_.startsWith("_"))
@@ -677,24 +585,12 @@ object MergeApply {
       .groupBy(keys.map(col): _*)
       .agg(max_by(packed, col(ChangeEvent.LSN)).as("_r"))
       .select(keys.map(col) :+ col("_r.*"): _*)
-      .withColumn("_bucket", lake.bucketExpr(keys, buckets))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .withColumn("_bucket", lake.bucketExpr(keys, m.buckets))
 
-    try {
-      // one small job on the cached reduction yields op metrics AND affected
-      // buckets — the FIRST action, on the original frame, so the fused
-      // observe() metrics resolve here
-      val opByBucket = timed("reduce+stats")(
-        reduced.groupBy("_bucket", ChangeEvent.OP).count().collect())
-      // every FURTHER consumer (delta/sidecar write, the CoW change side)
-      // plans over the compiled reduction instead of re-analyzing the whole
-      // source→parse→rules tree per action
-      val changes = planOnce(spark, reduced)
-      val (opCounts, changeRowsByBucket) = statsByOpAndBucket(opByBucket)
-      val affected = changeRowsByBucket.keySet
-      // the reduced change set in delta-row shape — the MoR commit itself, and
-      // the CoW change sidecar when the table records a change feed
-      def deltaRows = {
+    // the reduced change set in delta-row shape (a DELETE keeps only its key:
+    // a tombstone's payload is null on every storage strategy)
+    mergeChanges(spark, lake, m, reduced, epoch, cfg, keys, onStats, extraMetrics) {
+      changes =>
         val cOp = col(ChangeEvent.OP)
         changes.select(
           (payloadCols.map { c =>
@@ -704,11 +600,169 @@ object MergeApply {
             col(ChangeEvent.LSN).as("_lsn") :+
             (cOp === ChangeEvent.DELETE).as("_deleted") :+
             col("_bucket")): _*)
-      }
+    }
+  }
 
-      val (baseMetricsFn, early) = commitCommon(spark, lake, epoch, cfg, m,
-        opCounts, changeRowsByBucket, onStats, extraMetrics, deltaRows)
-      early.foreach(r => return r)
+  /**
+   * SCD2 mode: every change produces/closes a version row
+   * (reference: CDCOperationsHandler.py:216-277).
+   *
+   * Out-of-order-safe by construction: every version row stores its event's
+   * `_lsn`, DELETEs persist as hidden marker rows (`_deleted`, filtered from
+   * public reads), and each batch REBUILDS the chain of every key in the
+   * affected buckets from the union of existing rows + new events — end_date =
+   * next version's start, current = last-by-LSN unless it is a delete marker.
+   * A late event therefore splices into its correct historical position
+   * instead of silently corrupting the chain (the reference's row-serial
+   * close-then-insert assumes ordered arrival). Cost is the same
+   * affected-bucket CoW rewrite the mode already paid; the rebuild adds no I/O.
+   */
+  private def applyScd2(
+      spark: SparkSession,
+      lake: LakeTable,
+      events: DataFrame,
+      epoch: Long,
+      cfg: JobConfig,
+      naturalKeys: Seq[String],
+      onStats: () => (Long, Long, Long),
+      extraMetrics: => Map[String, Long]): BatchResult = {
+
+    val m = lake.manifest
+    val scd = cfg.scdCols
+    val payloadCols = m.currentSchema.fields.map(_.name)
+      .filterNot(c => c == scd.startDate || c == scd.endDate || c == scd.current)
+      .filterNot(_.startsWith("_"))
+
+    val alignSchema = GraftSchema(m.currentSchemaId,
+      m.currentSchema.fields.filter(f => payloadCols.contains(f.name)))
+    val withBucket = alignToSchema(events, alignSchema)
+      .withColumn("_bucket", lake.bucketExpr(naturalKeys, m.buckets))
+
+    // incoming events as version rows; DELETEs become hidden marker rows.
+    // On merge-on-read they are the delta commit itself: the chain
+    // (end_date/current) is rebuilt at read time / folded by compaction, so
+    // history ingest never rewrites the hot buckets either.
+    mergeChanges(spark, lake, m, withBucket, epoch, cfg, naturalKeys, onStats,
+      extraMetrics) { changes =>
+      changes.select(
+        (payloadCols.map(col) :+
+          col(ChangeEvent.TS).cast(TimestampType).as(scd.startDate) :+
+          lit(null).cast(TimestampType).as(scd.endDate) :+
+          lit(0).as(scd.current) :+
+          col(ChangeEvent.LSN).as("_lsn") :+
+          (col(ChangeEvent.OP) === ChangeEvent.DELETE).as("_deleted") :+
+          col("_bucket")): _*)
+    }
+  }
+
+  /**
+   * The tail both modes share after their prefix: `events` is the mode's
+   * bucketed change set (the LWW reduction, or the aligned SCD2 events) and
+   * `toChangeRows` shapes it into stored-row form — the merge-on-read delta
+   * commit, the copy-on-write change sidecar and the copy-on-write merge's
+   * incoming side alike.
+   *
+   * The copy-on-write merge is one rule for both modes: union the pinned
+   * base rows of the affected buckets with the change rows, hash them ONCE
+   * on the write's (bucket, salt) key — both functions of the merge keys, so
+   * every partition is key-complete — fold each partition with the stored-row
+   * fold reads use ([[LakeTable.resolveStored]]: the max-`_lsn` winner, or
+   * the SCD2 chain rebuild), and write. The LSN decides, so re-ordered or
+   * re-delivered batches cannot regress the table to an older version, and a
+   * DELETE's tombstone (`_deleted`) out-ranks a late older INSERT instead of
+   * letting it resurrect the key. Public reads filter tombstones
+   * (LakeTable.read); compaction/vacuum carry them until GC'd.
+   *
+   * OPTIMISTIC AND PINNED: the base is read at the SAME snapshot the commit
+   * declares as its readVersion, so a concurrent DATA commit into an
+   * overlapping bucket (a quarantine drain, a maintenance rewrite, another
+   * sync job from a second JVM) raises ConcurrentCommitException instead of
+   * being silently folded over — [[retryCow]] then recomputes the attempt
+   * from the fresh head (bounded), exactly the published lake formats'
+   * optimistic write loop.
+   */
+  private def mergeChanges(
+      spark: SparkSession,
+      lake: LakeTable,
+      m: Manifest,
+      events: DataFrame,
+      epoch: Long,
+      cfg: JobConfig,
+      keys: Seq[String],
+      onStats: () => (Long, Long, Long),
+      extraMetrics: => Map[String, Long])(
+      toChangeRows: DataFrame => DataFrame): BatchResult = {
+    val cached = events.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // one small job on the cached change set yields op metrics AND affected
+      // buckets — the FIRST action, on the original frame, so the fused
+      // observe() metrics resolve here
+      val stats = timed("reduce+stats")(
+        cached.groupBy("_bucket", ChangeEvent.OP).count().collect())
+      def sums[K](key: Row => K): Map[K, Long] =
+        stats.groupBy(key).map { case (k, rows) => k -> rows.map(_.getLong(2)).sum }
+      val opCounts = sums(_.getString(1))
+      // its keys are the affected buckets; its values size the adaptive salt
+      val changeRowsByBucket = sums(_.getInt(0))
+      // every FURTHER consumer (delta/sidecar write, the CoW merge) plans over
+      // the compiled change set instead of re-analyzing the whole
+      // source→parse→rules tree per action
+      val changes = planOnce(spark, cached)
+      def changeRows = toChangeRows(changes)
+
+      // LAZY, evaluated once, always PRE-commit: onStats blocks on the
+      // observation listener, and the shared listener bus lags behind the
+      // thousands of task events a bulk epoch just posted — resolving it
+      // AFTER the epoch's write job lets the bus drain in the shadow of real
+      // work instead of stalling the driver between jobs (a fixed cost that
+      // taxes exactly the high-core wall the scaling pair divides by).
+      // extraMetrics is by-name: it carries the post-transform quarantine
+      // resolution, which may only run after the first action above.
+      lazy val metrics: Map[String, Long] = timed("stats-resolve") {
+        val (nQuarantined, nReceived, nSkipped) = onStats()
+        val extra = extraMetrics
+        Map(
+          "batches" -> 1L,
+          "events_quarantined" -> nQuarantined,
+          "events_received" -> receivedDelta(epoch, nReceived),
+          "applied_inserts" -> opCounts.getOrElse(ChangeEvent.INSERT, 0L),
+          "applied_updates" -> opCounts.getOrElse(ChangeEvent.UPDATE, 0L),
+          "applied_deletes" -> opCounts.getOrElse(ChangeEvent.DELETE, 0L)) ++
+          // key present only when non-zero: a clean feed's manifests stay lean
+          (if (nSkipped > 0) Map("skipped_keyless_deletes" -> nSkipped)
+           else Map.empty[String, Long]) ++
+          extra
+      }
+      if (changeRowsByBucket.isEmpty) {
+        // an empty batch still commits (and still carries extraMetrics): a
+        // sync window whose changes all reduce away must advance its cursor.
+        // A feed-recording CoW table still plants the durable `changes/_feed`
+        // marker — it must exist from the FIRST feed-enabled epoch, or an
+        // all-quarantined first batch leaves recordsChangeFeed false and the
+        // later drain defaults to a sidecar-less commit that wedges every
+        // changeLog window spanning it. Marker only, no sidecar: changeLog
+        // never demands a sidecar from a file-less commit.
+        if (cfg.changeFeed && cfg.merge != MergeStrategy.MergeOnRead)
+          lake.enableChangeFeed()
+        lake.commit(epoch, Nil, Set.empty, metrics)
+        return BatchResult(epoch, skipped = false, metrics)
+      }
+      if (cfg.merge == MergeStrategy.MergeOnRead) {
+        // merge-on-read: the change rows ARE the commit — per-bucket delta
+        // files, no base read, no fold, no bucket rewrite; O(batch) bytes per
+        // epoch regardless of how many buckets the batch touches
+        val files = timed("delta-write")(
+          writeEpoch(spark, lake, changeRows, epoch, m, kind = DataFile.DELTA,
+            maxRowsPerBucket = changeRowsByBucket.values.max))
+        val morMetrics = metrics + ("delta_commits" -> 1L)
+        timed("commit")(lake.commit(epoch, files, Set.empty, morMetrics))
+        return BatchResult(epoch, skipped = false, morMetrics)
+      }
+      // a stop_if_*_error flag can fail the batch from its stats: resolve
+      // them now, so a poisoned batch throws before the copy-on-write
+      // merge+write, the epoch's most expensive job (see `metrics` for why
+      // a clean run resolves them only after that write)
+      if (cfg.errorPolicy.stopsOnAnyError) metrics
 
       // CoW change sidecar (LakeTable.changeLog's CDC-out source for CoW
       // tables) — written BEFORE the commit so a committed epoch always has
@@ -716,61 +770,29 @@ object MergeApply {
       // retried epoch overwrites
       if (cfg.changeFeed)
         timed("change-sidecar")(
-          lake.writeChangeSet(deltaRows.drop("_bucket"), epoch, m.currentSchemaId))
+          lake.writeChangeSet(changeRows.drop("_bucket"), epoch, m.currentSchemaId))
 
-      // ── copy-on-write: manifest-pruned base read — only affected buckets
-      // (closure-expanded: after a rescale a coarser pre-split file covers
-      // sibling buckets too, which must be read and rewritten together).
-      // OPTIMISTIC AND PINNED: the base is read at the SAME snapshot the
-      // commit declares as its readVersion, so a concurrent DATA commit into
-      // an overlapping bucket (a quarantine drain, a maintenance rewrite,
-      // another sync job from a second JVM) raises ConcurrentCommitException
-      // instead of being silently folded over — the loop then recomputes the
-      // whole merge from the fresh head and retries (bounded), exactly the
-      // published lake formats' optimistic write loop. ──
       def cowAttempt(mAt: Manifest): BatchResult = {
-        val affectedC = lake.bucketClosure(mAt, affected)
+        // closure-expanded: after a rescale a coarser pre-split file covers
+        // sibling buckets too, which must be read and rewritten together
+        val affectedC = lake.bucketClosure(mAt, changeRowsByBucket.keySet)
+        val incoming = changeRows
         val base = lake.readBuckets(spark, affectedC, Some(mAt))
-
-        // ── full-outer merge on the key; AQE broadcasts the reduced side when small ──
-        // True last-writer-wins: the change side wins only if its LSN is newer than
-        // the row's stored _lsn, so re-ordered/re-delivered batches cannot regress
-        // the table to an older version (order-tolerant upsert).
-        val cPrefix = "_c_"
-        val changeSide = changes.select(
-          keys.map(col) ++
-            (Seq(ChangeEvent.OP, ChangeEvent.LSN) ++ nonKeyPayload)
-              .map(c => col(c).as(cPrefix + c)): _*)
-        val joined = base.join(changeSide, keys, "full_outer")
-        val cOp = col(cPrefix + ChangeEvent.OP)
-        val cLsn = col(cPrefix + ChangeEvent.LSN)
-        val changeWins = cOp.isNotNull && (col("_lsn").isNull || cLsn > col("_lsn"))
-        // DELETEs leave a tombstone row (_deleted=true) instead of vanishing, so
-        // an out-of-order older INSERT loses the LSN comparison and cannot
-        // resurrect the key. Public reads filter tombstones (LakeTable.read);
-        // compaction/vacuum carry them until GC'd.
-        val merged = joined
-          .select((payloadCols.map { c =>
-            if (keys.contains(c)) col(c)
-            else when(changeWins, col(cPrefix + c)).otherwise(col(c)).as(c)
-          } :+
-            when(changeWins, cLsn).otherwise(col("_lsn")).as("_lsn") :+
-            when(changeWins, cOp === ChangeEvent.DELETE)
-              .otherwise(coalesce(col("_deleted"), lit(false))).as("_deleted")): _*)
-          .withColumn("_bucket", lake.bucketExpr(keys, buckets))
-
+          .withColumn("_bucket", lake.bucketExpr(keys, m.buckets))
+        val merged = base.select(incoming.columns.map(col): _*).unionByName(incoming)
         val files = timed("merge+write")(writeEpoch(spark, lake, merged, epoch, mAt,
-          maxRowsPerBucket = mergedMaxRows(mAt, affectedC, changeRowsByBucket)))
+          maxRowsPerBucket = mergedMaxRows(mAt, affectedC, changeRowsByBucket),
+          foldKeys = Some(keys)))
         // metrics resolve HERE, after the epoch's write job — the observe
-        // listener lag drains in the shadow of the write (see commitCommon)
-        val baseMetrics = baseMetricsFn()
+        // listener lag drains in the shadow of the write (see `metrics`)
+        val resolved = metrics
         beforeCowCommit()
-        timed("commit")(lake.commit(epoch, files, affectedC, baseMetrics,
+        timed("commit")(lake.commit(epoch, files, affectedC, resolved,
           readVersion = Some(mAt.version)))
-        BatchResult(epoch, skipped = false, baseMetrics)
+        BatchResult(epoch, skipped = false, resolved)
       }
       retryCow(lake, m, epoch)(cowAttempt)
-    } finally reduced.unpersist()
+    } finally cached.unpersist()
   }
 
   /** Bounded optimistic retry around one pinned CoW merge attempt: on
@@ -813,99 +835,6 @@ object MergeApply {
     * commit deterministically. No-op in production. */
   private[graft] var beforeCowCommit: () => Unit = () => ()
 
-  /**
-   * SCD2 mode: every change produces/closes a version row
-   * (reference: CDCOperationsHandler.py:216-277).
-   *
-   * Out-of-order-safe by construction: every version row stores its event's
-   * `_lsn`, DELETEs persist as hidden marker rows (`_deleted`, filtered from
-   * public reads), and each batch REBUILDS the chain of every key in the
-   * affected buckets from the union of existing rows + new events — end_date =
-   * next version's start, current = last-by-LSN unless it is a delete marker.
-   * A late event therefore splices into its correct historical position
-   * instead of silently corrupting the chain (the reference's row-serial
-   * close-then-insert assumes ordered arrival). Cost is the same
-   * affected-bucket CoW rewrite the mode already paid; the window adds no I/O.
-   */
-  private def applyScd2(
-      spark: SparkSession,
-      lake: LakeTable,
-      events: DataFrame,
-      epoch: Long,
-      cfg: JobConfig,
-      naturalKeys: Seq[String],
-      onStats: () => (Long, Long, Long),
-      extraMetrics: => Map[String, Long]): BatchResult = {
-
-    val m = lake.manifest
-    val buckets = m.buckets
-    val scd = cfg.scdCols
-    val payloadCols = m.currentSchema.fields.map(_.name)
-      .filterNot(c => c == scd.startDate || c == scd.endDate || c == scd.current)
-      .filterNot(_.startsWith("_"))
-
-    val alignSchema = GraftSchema(m.currentSchemaId,
-      m.currentSchema.fields.filter(f => payloadCols.contains(f.name)))
-    val withBucket = alignToSchema(events, alignSchema)
-      .withColumn("_bucket", lake.bucketExpr(naturalKeys, buckets))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    try {
-      // first action on the original frame (observe resolves here); further
-      // consumers plan over the compiled reduction — see applyLww
-      val stats = withBucket.groupBy("_bucket", ChangeEvent.OP).count().collect()
-      val changes = planOnce(spark, withBucket)
-      val (opCounts, changeRowsByBucket) = statsByOpAndBucket(stats)
-      val affected = changeRowsByBucket.keySet
-      // incoming events as version rows; DELETEs become hidden marker rows
-      def evRows = changes.select(
-        (payloadCols.map(col) :+
-          col(ChangeEvent.TS).cast(TimestampType).as(scd.startDate) :+
-          lit(null).cast(TimestampType).as(scd.endDate) :+
-          lit(0).as(scd.current) :+
-          col(ChangeEvent.LSN).as("_lsn") :+
-          (col(ChangeEvent.OP) === ChangeEvent.DELETE).as("_deleted") :+
-          col("_bucket")): _*)
-
-      // empty / merge-on-read handled by the shared scaffolding (for scd2
-      // the version rows themselves are the delta commit — the chain
-      // (end_date/current) is rebuilt at read time / folded by compaction,
-      // so history ingest never rewrites the hot buckets either)
-      val (metricsFn, early) = commitCommon(spark, lake, epoch, cfg, m,
-        opCounts, changeRowsByBucket, onStats, extraMetrics, evRows)
-      early.foreach(r => return r)
-
-      // CoW change sidecar: scd2's change set is its version rows (same shape
-      // merge-on-read commits as deltas)
-      if (cfg.changeFeed)
-        timed("change-sidecar")(
-          lake.writeChangeSet(evRows.drop("_bucket"), epoch, m.currentSchemaId))
-
-      // pinned optimistic CoW, same loop as applyLww: base read, rewrite and
-      // commit all speak the one snapshot `mAt` declares as readVersion
-      def cowAttempt(mAt: Manifest): BatchResult = {
-        val affectedC = lake.bucketClosure(mAt, affected)
-        val base = lake.readBuckets(spark, affectedC, Some(mAt))
-          .withColumn("_bucket", lake.bucketExpr(naturalKeys, buckets))
-
-        // rebuild every affected key's chain from ALL its versions with the
-        // read path's own fold (LSN-ordered, re-delivered versions dropped):
-        // the new version rows are not bucketed, so one hash exchange on the
-        // keys makes every partition key-complete first
-        val rebuilt = lake.rebuildScd2Local(
-          base.unionByName(evRows).repartition(mAt.keyCols.map(col): _*), mAt)
-        val files = timed("merge+write")(writeEpoch(spark, lake, rebuilt, epoch, mAt,
-          maxRowsPerBucket = mergedMaxRows(mAt, affectedC, changeRowsByBucket)))
-        val metrics = metricsFn() // after the write — see commitCommon
-        beforeCowCommit()
-        timed("commit")(lake.commit(epoch, files, affectedC, metrics,
-          readVersion = Some(mAt.version)))
-        BatchResult(epoch, skipped = false, metrics)
-      }
-      retryCow(lake, m, epoch)(cowAttempt)
-    } finally withBucket.unpersist()
-  }
-
   /** Bucket-partitioned epoch write. The epoch dir is overwritten wholesale on a
     * task/batch retry, keeping (epoch, partition) file sets idempotent.
     *
@@ -919,6 +848,13 @@ object MergeApply {
     * would collapse the salt whenever that field isn't part of a composite
     * key), plus `_lsn` for scd2 version rows so one hot key's version HISTORY
     * — many rows, same key — spreads across salt tasks too.
+    *
+    * `foldKeys` (the copy-on-write merge) folds each partition with
+    * [[LakeTable.resolveStored]] between the exchange and the write. The
+    * salt then hashes those keys only — never `_lsn` — so every partition
+    * holds all of a key's rows: the exchange that spreads the write is also
+    * the one that groups the fold. Only writes that do not fold (SCD2 delta
+    * writes, a sync mirror) spread a key's history over salt tasks.
     *
     * `maxRowsPerBucket` (when the caller knows it — merge stats + manifest
     * footer counts) sizes the salt ADAPTIVELY: a bucket under
@@ -938,23 +874,24 @@ object MergeApply {
   private[graft] def writeEpoch(
       spark: SparkSession,
       lake: LakeTable,
-      merged: DataFrame,
+      rows: DataFrame,
       epoch: Long,
       m: Manifest,
       kind: String = DataFile.BASE,
-      maxRowsPerBucket: Long = Long.MaxValue): Seq[DataFile] = {
+      maxRowsPerBucket: Long = Long.MaxValue,
+      foldKeys: Option[Seq[String]] = None): Seq[DataFile] = {
     val keyCols =
       if (m.keyCols.nonEmpty) m.keyCols else Seq(m.currentSchema.fields.head.name)
-    val saltCols = keyCols ++
-      (if (m.tableMode == Manifest.SCD2 && merged.columns.contains("_lsn"))
-        Seq("_lsn") else Nil)
+    val saltCols = foldKeys.getOrElse(keyCols ++
+      (if (m.tableMode == Manifest.SCD2 && rows.columns.contains("_lsn"))
+        Seq("_lsn") else Nil))
     val salt =
       if (maxRowsPerBucket >= writeSaltRowsPerTask * WRITE_SALT) WRITE_SALT
       else math.max(1L,
         (maxRowsPerBucket + writeSaltRowsPerTask - 1) / writeSaltRowsPerTask).toInt
     val keyed =
-      if (salt <= 1) merged.repartition(col("_bucket"))
-      else merged
+      if (salt <= 1) rows.repartition(col("_bucket"))
+      else rows
         // extra lit distinguishes the salt hash from the bucket hash (which
         // also hashes the keys — salt would otherwise be a pure function of
         // bucket)
@@ -962,7 +899,7 @@ object MergeApply {
           pmod(xxhash64(saltCols.map(col) :+ lit(7919): _*), lit(salt)))
         .repartition(col("_bucket"), col("_wsalt"))
         .drop("_wsalt")
-    keyed
+    foldKeys.fold(keyed)(lake.resolveStored(keyed, m, _))
       .write.mode("overwrite")
       .options(lake.bloomOptions(m.keyCols))
       .partitionBy("_bucket")

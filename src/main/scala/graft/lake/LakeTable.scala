@@ -1000,14 +1000,21 @@ class LakeTable(val dir: String) {
           s"current bucket count ${old.buckets}")
       require(old.keyCols.nonEmpty,
         "rescale needs merge keys (splitBuckets re-derives buckets from key values)")
-      val newVersion = old.version + 1
-      val fragment = ManifestFragment(newVersion, old.files, (0 until old.buckets).toSet)
-      val fragName = newFragName(newVersion)
-      val m = old.copy(version = newVersion, buckets = newBuckets,
-        fragments = Seq(fragName), epoch = Manifest.NoEpoch)
-      writeManifest(m, Some((fragName, fragment)))
-      m
+      writeConsolidated(old, newBuckets)
     }
+  }
+
+  /** Metadata-only commit of `old`'s live files as ONE fragment (every
+    * file's spec recorded explicitly) under `buckets` — [[rescale]]'s new
+    * count, or the same count for [[rewriteManifests]]. No data file moves. */
+  private def writeConsolidated(old: Manifest, buckets: Int): Manifest = {
+    val newVersion = old.version + 1
+    val fragment = ManifestFragment(newVersion, old.files, (0 until old.buckets).toSet)
+    val fragName = newFragName(newVersion)
+    val m = old.copy(version = newVersion, buckets = buckets,
+      fragments = Seq(fragName), epoch = Manifest.NoEpoch)
+    writeManifest(m, Some((fragName, fragment)))
+    m
   }
 
   /**
@@ -1042,13 +1049,7 @@ class LakeTable(val dir: String) {
     if (cur.fragments.size <= 1) return cur
     retryingCommit("rewriteManifests") {
       val old = manifest
-      val newVersion = old.version + 1
-      val fragment = ManifestFragment(newVersion, old.files, (0 until old.buckets).toSet)
-      val fragName = newFragName(newVersion)
-      val m = old.copy(version = newVersion, fragments = Seq(fragName),
-        epoch = Manifest.NoEpoch)
-      writeManifest(m, Some((fragName, fragment)))
-      m
+      writeConsolidated(old, old.buckets)
     }
   }
 
@@ -1116,8 +1117,8 @@ class LakeTable(val dir: String) {
    * key-complete, so all of a key's rows are present and, after the
    * in-partition sort, adjacent: reads and compaction coalesce each bucket's
    * files into one partition and point lookups their key-filtered scan (no
-   * Exchange anywhere); the SCD2 copy-on-write merge, whose incoming version
-   * rows are not bucketed, hash-exchanges once on the keys. Memory is
+   * Exchange anywhere); the copy-on-write merge folds right after its write
+   * exchange, whose (bucket, salt) key hashes the merge keys. Memory is
    * bounded by Spark's spillable sort plus a one-row lookahead, not by a
    * per-bucket hash map.
    *
@@ -1142,11 +1143,14 @@ class LakeTable(val dir: String) {
   import org.apache.spark.sql.catalyst.InternalRow
 
   /** The one resolution of stored rows (base + delta) to table state, for
-    * reads, compaction and point lookups: the chain rebuild for SCD2
-    * tables, the per-key max-`_lsn` winner otherwise. */
-  private def resolveStored(df: DataFrame, m: Manifest): DataFrame =
-    if (m.tableMode == Manifest.SCD2) rebuildScd2Local(df, m)
-    else resolveLwwLocal(df, m.keyCols)
+    * reads, compaction, point lookups and the copy-on-write merge (which
+    * folds the pinned base with the epoch's change rows): the chain rebuild
+    * for SCD2 tables, the per-key max-`_lsn` winner otherwise. Every
+    * partition of `df` must be key-complete on `keys`. */
+  private[graft] def resolveStored(df: DataFrame, m: Manifest,
+      keys: Seq[String]): DataFrame =
+    if (m.tableMode == Manifest.SCD2) rebuildScd2Local(df, m, keys)
+    else resolveLwwLocal(df, keys)
 
   /** Bucket-local LWW fold: per key (consecutive after the sort) keep the
     * last = max-`_lsn` row. */
@@ -1169,9 +1173,9 @@ class LakeTable(val dir: String) {
   /** Bucket-local SCD2 chain rebuild: per key (consecutive after the sort,
     * LSN-ordered) set end_date = next version's start and flag the last
     * non-deleted version current; re-delivered (key, _lsn) duplicates are
-    * dropped. Also the SCD2 copy-on-write merge's chain rule
-    * (`MergeApply.applyScd2`), so reads and writes cannot drift apart. */
-  private[graft] def rebuildScd2Local(df: DataFrame, m: Manifest): DataFrame = {
+    * dropped. */
+  private def rebuildScd2Local(df: DataFrame, m: Manifest,
+      keys: Seq[String]): DataFrame = {
     require(m.scdCols.size == 3, s"lake table at $dir has scd2 deltas but no scd_cols")
     val schema = df.schema
     val Seq(startC, endC, curC) = m.scdCols
@@ -1182,7 +1186,7 @@ class LakeTable(val dir: String) {
     val li = schema.fieldIndex("_lsn")
     val di = schema.fieldIndex("_deleted")
     val n = schema.size
-    foldSortedPartitions(df, m.keyCols) { (keyIdx, keyTypes) => it0 =>
+    foldSortedPartitions(df, keys) { (keyIdx, keyTypes) => it0 =>
       val it = it0.buffered
       new Iterator[InternalRow] {
         def hasNext: Boolean = it.hasNext
@@ -1227,11 +1231,13 @@ class LakeTable(val dir: String) {
     * table straight through; hash-random keys yield full-range files that
     * never prune, and lose nothing (the check is per-file metadata).
     *
-    * SCD2 guard: a key's version chain spans base files (the write salt
-    * includes `_lsn`), and [[rebuildScd2Local]] re-chains whatever rows reach
-    * it — a chain split between pass-through and fold would be re-chained
-    * from a PARTIAL suffix (the fold would null the end date and re-flag
-    * `current` on an old version it mistakes for the last). A pruned file
+    * SCD2 guard: a key's version chain can span base files (a copy-on-write
+    * merge salts its write on the keys only, but a sync mirror's write, like
+    * an SCD2 delta write, does not fold and salts on `_lsn` too), and
+    * [[rebuildScd2Local]] re-chains whatever rows reach it — a chain split
+    * between pass-through and fold would be re-chained from a PARTIAL
+    * suffix (the fold would null the end date and re-flag `current` on an
+    * old version it mistakes for the last). A pruned file
     * must therefore also be range-disjoint from every base file that STAYS
     * in the fold, so every chain lands wholly on one side; mutually
     * overlapping files may still be pruned TOGETHER (their chains pass
@@ -1328,7 +1334,7 @@ class LakeTable(val dir: String) {
     // of the quadratic left-deep chain
     val resolved = resolveStored(LakeTable.unionBalanced(
       hot.groupBy(g).values.map(fs =>
-        probe(readFiles(spark, m, fs)).coalesce(1)).toSeq), m)
+        probe(readFiles(spark, m, fs)).coalesce(1)).toSeq), m, m.keyCols)
     // bloom-passed base rows: provably untouched, read at full parallelism
     // beside the cold files (their bytes ARE scanned twice — once filtered
     // into the fold, once negated here — which is what the build gate's
@@ -1953,15 +1959,7 @@ class LakeTable(val dir: String) {
           emptied += p.getParent
         }
       }
-    // prune now-empty dirs upward (bucket dir, then its epoch dir)
-    emptied.toSeq.foreach { d =>
-      var p = d
-      while (p != null && p != dataRoot && p.startsWith(dataRoot) &&
-        Files.isDirectory(p) && !scala.util.Using.resource(Files.list(p))(_.iterator().hasNext)) {
-        Files.delete(p)
-        p = p.getParent
-      }
-    }
+    pruneEmptyDirs(emptied, dataRoot)
     // change sidecars of epochs committed at pruned versions are unreachable
     // (their version's manifest goes away below) — GC them with the snapshot.
     // FIRST pin the feed identity: on a pre-marker-era table (sidecars
@@ -2088,8 +2086,15 @@ class LakeTable(val dir: String) {
         emptied += p.getParent
       }
     }
-    // prune now-empty dirs upward (same shape as vacuum's cleanup)
-    emptied.toSeq.foreach { d =>
+    pruneEmptyDirs(emptied, dataRoot)
+    deleted.toSeq
+  }
+
+  /** After [[vacuum]] or [[removeOrphans]] deleted files: prune each
+    * now-empty directory upward (bucket dir, then its epoch dir), never
+    * leaving `dataRoot`. */
+  private def pruneEmptyDirs(dirs: Iterable[Path], dataRoot: Path): Unit =
+    dirs.foreach { d =>
       var p = d
       while (p != null && p != dataRoot && p.startsWith(dataRoot) &&
         Files.isDirectory(p) && !scala.util.Using.resource(Files.list(p))(_.iterator().hasNext)) {
@@ -2097,8 +2102,6 @@ class LakeTable(val dir: String) {
         p = p.getParent
       }
     }
-    deleted.toSeq
-  }
 
   /** List data files physically present under a just-written epoch dir, with bucket
     * parsed from the `_bucket=K` partition dirs. Retried epochs overwrite the same
@@ -2256,7 +2259,7 @@ class LakeTable(val dir: String) {
     // the key's rows all land in one partition, so the read path's fold
     // resolves them without a shuffle
     withoutTombstones(
-      if (files.exists(_.isDelta)) resolveStored(df.coalesce(1), m) else df)
+      if (files.exists(_.isDelta)) resolveStored(df.coalesce(1), m, m.keyCols) else df)
   }
 
   /** Point lookup of one (possibly composite) key's current row (empty if

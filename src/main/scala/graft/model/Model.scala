@@ -71,7 +71,7 @@ object CdcMode {
  * scans, but under zipf skew at 10^10-event scale nearly every bucket is
  * touched every epoch and write amplification approaches a full-table rewrite
  * per batch. MergeOnRead writes the reduced change set as per-bucket DELTA
- * files (O(batch) bytes per commit, no base read, no join) and defers
+ * files (O(batch) bytes per commit, no base read, no bucket rewrite) and defers
  * resolution to read time + background compaction folding (LakeTable.compact).
  * Both CDC modes support both strategies: LWW tables resolve deltas by per-key
  * max-LSN, SCD2 tables commit raw version rows as deltas and rebuild the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
 import graft.apply.MergeApply
+import graft.feed.EnvelopeSource
 import graft.lake._
 import graft.model._
 
@@ -154,11 +155,10 @@ object CdcRunner {
       s"full load: the transform pipeline removed every merge key " +
         s"(pre-transform keys ${job.keyCols.mkString(",")}) — add_primary_key " +
         "a replacement or drop the remove_primary_key rule")
-    // null merge keys in the SNAPSHOT bypass every change-path guard and
-    // would land as base rows the CoW join can never match again
-    // (undeletable, publicly visible forever) while the MoR fold groups
-    // nulls together — the same per-strategy divergence the merge
-    // quarantines. Same routing here: quarantine-and-continue (browsable
+    // null merge keys in the SNAPSHOT bypass every change-path guard: a
+    // row with a null key is malformed input — it names no row a change
+    // could later update or delete — which the merge quarantines too.
+    // Same routing here: quarantine-and-continue (browsable
     // under the full-load epoch) or fail loudly. The pre-count projects
     // ONLY the key columns — a pruned scan, cheap next to the load's write.
     val nullKey = keys.map(col(_).isNull).reduce(_ || _)
@@ -457,20 +457,6 @@ object CdcRunner {
                else Trigger.ProcessingTime(s"$intervalSeconds seconds"))
       .start()
 
-  /** Registry-vs-plain envelope parse routing, shared by the JSON-lines bus
-    * and the Kafka reader (identical message format — only the source line
-    * differs): with a registry, every payload version parses in one stream
-    * (column names ride in each message), same as startFromWal. ONE
-    * definition, so the two readers cannot drift apart. */
-  private def parseEnvelopeFeed(raw: DataFrame, cfg: RunnerConfig,
-      schemaName: String, tableName: String): DataFrame = {
-    import graft.feed.EnvelopeSource
-    if (cfg.schemaRegistry.nonEmpty)
-      EnvelopeSource.parseVersionedForTable(raw, cfg.payloadSchema,
-        cfg.schemaRegistry, schemaName, tableName)
-    else EnvelopeSource.parseForTable(raw, cfg.payloadSchema, schemaName, tableName)
-  }
-
   /** Start the streaming query (continuous tail). `intervalSeconds` is the
     * reference's producer cadence (task/settings.json interval_seconds,
     * CDCStrategy.py:75-101) — honored as the ProcessingTime trigger. */
@@ -500,7 +486,8 @@ object CdcRunner {
    * S4 queue-shaped variant: tail a JSON-lines directory of the reference's
    * RabbitMQ envelope messages (graft.feed.EnvelopeSource). For a real broker
    * use [[startFromKafka]] — the message format and everything downstream are
-   * identical, only the source line differs.
+   * identical, only the source line differs. With a schema registry every
+   * payload version parses in one stream (column names ride in each message).
    */
   def startFromEnvelopes(
       spark: SparkSession, cfg: RunnerConfig,
@@ -512,8 +499,8 @@ object CdcRunner {
       .text(cfg.feedDir)
     launch("env", stream, cfg.checkpointDir, availableNow, intervalSeconds) {
       (raw, epoch) =>
-        processBatch(spark, lake, runCfg)(
-          parseEnvelopeFeed(raw, cfg, schemaName, tableName), epoch)
+        processBatch(spark, lake, runCfg)(EnvelopeSource.parseVersionedForTable(
+          raw, cfg.payloadSchema, cfg.schemaRegistry, schemaName, tableName), epoch)
     }
   }
 
@@ -528,8 +515,8 @@ object CdcRunner {
    * S4 with a real broker: tail a Kafka topic of envelope messages — the
    * reference's RabbitMQ consumer deployment (MessageConsumer.py:33-111),
    * broker-for-broker. The source line is the ONLY difference from
-   * [[startFromEnvelopes]]: same value-column JSON parse
-   * (EnvelopeSource.parseKafkaForTable), same merge; offsets live in the
+   * [[startFromEnvelopes]]: same JSON parse of the value column
+   * (EnvelopeSource.parseVersionedForTable), same merge; offsets live in the
    * checkpoint exactly like file-source offsets, so exactly-once and replay
    * semantics are identical.
    */
@@ -561,8 +548,8 @@ object CdcRunner {
     launch("kafka", stream, cfg.checkpointDir, availableNow, intervalSeconds) {
       (raw, epoch) =>
         val value = raw.select(col("value").cast("string").as("value"))
-        processBatch(spark, lake, runCfg)(
-          parseEnvelopeFeed(value, cfg, schemaName, tableName), epoch)
+        processBatch(spark, lake, runCfg)(EnvelopeSource.parseVersionedForTable(
+          value, cfg.payloadSchema, cfg.schemaRegistry, schemaName, tableName), epoch)
     }
   }
 
@@ -774,12 +761,9 @@ object CdcRunner {
         // version (the wire format carries column names inline): per-row
         // version detection + rename/widen normalization, so a batch mixing
         // v1 and v2 rows needs no restart — cfg.payloadSchema is the BASE
-        // (version-1) payload in that case
-        def parseFeed(df: DataFrame) =
-          if (cfg.schemaRegistry.nonEmpty)
-            WalParser.parseVersionedForTable(df, cfg.payloadSchema,
-              cfg.schemaRegistry, schemaName, tableName)
-          else WalParser.parseForTable(df, cfg.payloadSchema, schemaName, tableName)
+        // (version-1) payload in that case. Without one it is the plain parse.
+        def parseFeed(df: DataFrame) = WalParser.parseVersionedForTable(df,
+          cfg.payloadSchema, cfg.schemaRegistry, schemaName, tableName)
         // ORPHAN EVICTION: every line of an evicted txn in this batch (aged
         // out of the stash, or a late arrival matching the ledger) re-parses
         // with a synthesized COMMIT (so the same parse decodes its payload)

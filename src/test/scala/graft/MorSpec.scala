@@ -32,6 +32,14 @@ class MorSpec extends SparkSpec {
     (lake, LwwOracle.finalState(seedDf.collect().toSeq, eventsDf.collect().toSeq))
   }
 
+  /** Engine state at the head, `_lsn`, `_deleted` and tombstones included,
+    * as sorted row strings over name-sorted columns. */
+  private def engineState(lake: LakeTable): Array[String] = {
+    val df = lake.readState(spark, lake.currentVersion)
+    df.select(df.columns.sorted.map(org.apache.spark.sql.functions.col): _*)
+      .collect().map(_.toString).sorted
+  }
+
   test("MoR final state == replay oracle == CoW final state; commits are delta-only") {
     val morRoot = tmpDir("graft-mor")
     val (mor, expected) = runPipeline(MergeStrategy.MergeOnRead, morRoot)
@@ -39,6 +47,11 @@ class MorSpec extends SparkSpec {
 
     val (cow, _) = runPipeline(MergeStrategy.CopyOnWrite, tmpDir("graft-mor-cow"))
     assert(LwwOracle.fromTable(cow.read(spark)) == LwwOracle.fromTable(mor.read(spark)))
+    // one merge rule on both storage strategies: the engine states agree too
+    val cowState = engineState(cow)
+    // `_deleted` sorts first
+    assert(cowState.exists(_.startsWith("[true,")), "fixture: some tombstone survives")
+    assert(cowState.sameElements(engineState(mor)), "CoW engine state == MoR engine state")
 
     // every streaming epoch appended deltas and replaced nothing: the full-load
     // base files are still live alongside the deltas
@@ -144,6 +157,8 @@ class MorSpec extends SparkSpec {
     val morHist = history(mor)
     assert(mor.manifest.hasDeltas, "scd2 delta commits")
     assert(morHist.sameElements(history(cow)), "read-time rebuild == CoW history")
+    assert(engineState(mor).sameElements(engineState(cow)),
+      "MoR engine state (delete markers, _lsn) == CoW engine state")
     // fold is read-equivalent; no tombstone GC for scd2 (markers anchor ends)
     mor.compact(spark, maxFilesPerBucket = Int.MaxValue, maxDeltaFiles = 1,
       dropTombstonesBelow = Some(Long.MaxValue))

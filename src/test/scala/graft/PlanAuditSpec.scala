@@ -183,6 +183,64 @@ class PlanAuditSpec extends SparkSpec {
       s"changeLog plan is scan+project only:\n$plan")
   }
 
+  test("a copy-on-write merge epoch shuffles once: the write's exchange " +
+    "also groups the fold (upsert and SCD2)") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+      SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerStageSubmitted}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import graft.apply.MergeApply
+    import graft.feed.ChangeFeed
+    import graft.model._
+    import graft.runner.{CdcRunner, RunnerConfig}
+    val sc = spark.sparkContext
+    for (mode <- Seq(CdcMode.Upsert, CdcMode.Scd2)) {
+      val root = tmpDir("graft-plan-cow")
+      val cfg = RunnerConfig(
+        feedDir = s"$root/feed", tableDir = s"$root/table", checkpointDir = s"$root/cp",
+        job = JobConfig(mode = mode, buckets = 4))
+      val lake = CdcRunner.ensureTable(spark, cfg)
+      CdcRunner.fullLoad(spark, lake, ChangeFeed.seedSnapshot(spark, 40), cfg)
+      val events = ChangeFeed.events(spark,
+        ChangeFeed.FeedSpec(nEvents = 200, nDocs = 80))
+      val marker = s"plan-audit-marker-$mode"
+      // a shuffle map stage is one that writes shuffle output
+      val labelled = new ConcurrentLinkedQueue[Int]()
+      val shuffleStages = new ConcurrentLinkedQueue[Int]()
+      val markerJobs = new ConcurrentLinkedQueue[Int]()
+      @volatile var markerDone = false
+      val listener = new SparkListener {
+        override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+          if (Option(e.properties)
+              .exists(_.getProperty("spark.job.description") == "merge: merge+write"))
+            labelled.add(e.stageInfo.stageId)
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          if (labelled.contains(e.stageInfo.stageId) &&
+              e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+            shuffleStages.add(e.stageInfo.stageId)
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties)
+              .exists(_.getProperty("spark.job.description") == marker))
+            markerJobs.add(e.jobId)
+        override def onJobEnd(e: SparkListenerJobEnd): Unit =
+          if (markerJobs.contains(e.jobId)) markerDone = true
+      }
+      sc.addSparkListener(listener)
+      try {
+        MergeApply.applyBatch(spark, lake, events, 0L, cfg.job)
+        // the listener sees events in order: once the marker job posted its
+        // end, every stage the merge submitted has been counted
+        sc.setJobDescription(marker)
+        try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+        eventually(timeout(30.seconds))(assert(markerDone))
+      } finally sc.removeSparkListener(listener)
+      assert(shuffleStages.size == 1,
+        s"$mode: shuffle map stages under merge+write: $shuffleStages")
+      assert(lake.read(spark).count() > 0)
+    }
+  }
+
   test("LWW reduction uses partial aggregation (map-side combine)") {
     val feed = graft.queries.Queries.feedFromEvents(spark, "/root/testdata/sf0.001")
     import org.apache.spark.sql.functions._
