@@ -67,18 +67,8 @@ object MergeApply {
     * and from replay epochs (≥ 2^40), browsable via LakeTable.quarantine. */
   private[graft] val POST_TRANSFORM_EPOCH_BASE = 1L << 39
 
-  /** Marker file dropped in a quarantine dir whose rows are POST-transform
-    * (the rule pipeline already ran on them): [[replayQuarantine]] must not
-    * run it again — filters they already passed, modifiers that would
-    * double-apply (a `price*2` math_expression run twice corrupts silently).
-    * Underscore-prefixed so parquet readers ignore it. */
-  private[graft] val POST_TRANSFORM_MARKER = "_post_transform"
-
-  private def markPostTransform(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir, POST_TRANSFORM_MARKER)
-    if (!java.nio.file.Files.exists(p))
-      java.nio.file.Files.write(p, Array.emptyByteArray): Unit
-  }
+  /** See [[LakeTable.PostTransformMarker]]. */
+  private[graft] val POST_TRANSFORM_MARKER = LakeTable.PostTransformMarker
 
   /** `events_received` counts each event's ORIGINAL delivery only: a replay
     * epoch re-drives rows the original epoch already counted (quarantined ⊂
@@ -140,8 +130,8 @@ object MergeApply {
     // replay epoch — the step-2b dir written during a replay): composites
     // overlap the replay value range at depth ≥ 2, so no arithmetic can
     // separate them — instead step-2b writes those dirs MARKER-FIRST
-    // (delete, marker, append-mode parquet), leaving no unmarked-data crash
-    // window to recover from. Depth-bounded — each replay level multiplies
+    // (LakeTable.writeQuarantine), leaving no unmarked-data crash window to
+    // recover from. Depth-bounded — each replay level multiplies
     // the epoch by 64, so 8 levels is already beyond Long range.
     def postTransformLineage(e: Long): Boolean = {
       var cur = e
@@ -160,8 +150,7 @@ object MergeApply {
     // its key check — recognized by its sentinel epoch (covers dirs written
     // before any marker existed).
     val postTransform = sourceEpoch == FULL_LOAD_EPOCH ||
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, POST_TRANSFORM_MARKER)) ||
-        postTransformLineage(sourceEpoch)
+      lake.isPostTransform(sourceEpoch) || postTransformLineage(sourceEpoch)
     val effCfg =
       if (!postTransform) cfg
       else {
@@ -172,7 +161,7 @@ object MergeApply {
         cfg.copy(filters = Nil, transforms = Nil,
           keyCols = lake.manifest.keyCols, validatePayload = false)
       }
-    val rows0 = fix(spark.read.parquet(dir).drop(QUARANTINE_REASON))
+    val rows0 = fix(lake.readQuarantine(spark, sourceEpoch).drop(QUARANTINE_REASON))
     // Full-load quarantine rows are SNAPSHOT-shaped (no change envelope) —
     // applyBatch would fail on the missing op/lsn columns. Re-drive them as
     // the INSERTs the original snapshot would have written: lsn 0 and the
@@ -201,9 +190,7 @@ object MergeApply {
       // best-effort (Try): an IO failure here must not SUPERSEDE the real
       // batch exception in flight — the lineage derivation above still
       // recovers the unmarked dir on the next drain
-      if (postTransform &&
-          new java.io.File(lake.quarantineDir(replayEpoch)).isDirectory)
-        scala.util.Try(markPostTransform(lake.quarantineDir(replayEpoch))): Unit
+      if (postTransform) scala.util.Try(lake.markPostTransform(replayEpoch)): Unit
     }
   }
 
@@ -424,8 +411,7 @@ object MergeApply {
           .when(!keyOk, lit("null_merge_key: " +
             s"key column(s) ${checkedKeys.mkString(",")} must be non-null"))
           .otherwise(lit("payload_invariant: tokens null or n_tok != size(tokens)"))
-        bad.withColumn(QUARANTINE_REASON, reason)
-          .write.mode("overwrite").parquet(lake.quarantineDir(epoch))
+        lake.writeQuarantine(bad.withColumn(QUARANTINE_REASON, reason), epoch)
         // per-op stop-or-continue flags — reference: stop_if_*_error
         // (trempy/Tasks/Task.py:43-99, CDCOperationsHandler.py:783-801)
         val p = cfg.errorPolicy
@@ -503,24 +489,17 @@ object MergeApply {
                   "is disabled")
             // POST-transform rows can't share the raw quarantine dir (different
             // schema); a marker-offset epoch keeps them browsable + drainable,
-            // and the marker file tells the drain NOT to re-run the rules.
-            // MARKER-FIRST (delete for retry idempotence, marker, then
-            // append-mode parquet — overwrite mode would wipe the marker):
-            // data never exists without the marker, so a crash at ANY point
-            // cannot leave pipeline OUTPUT that the next drain would treat
-            // as raw input. During a replay, `epoch` here is a replay epoch
-            // and this composite value is arithmetically ambiguous — the
-            // marker is the ONLY signal for these dirs (see
-            // postTransformLineage in replayQuarantine).
-            val qDir = lake.quarantineDir(POST_TRANSFORM_EPOCH_BASE + epoch)
-            graft.runner.CdcRunner.deleteRecursively(new java.io.File(qDir))
-            java.nio.file.Files.createDirectories(java.nio.file.Paths.get(qDir))
-            markPostTransform(qDir)
-            transformed.filter(nullKey)
+            // and the marker file (written marker-first, see
+            // LakeTable.writeQuarantine) tells the drain NOT to re-run the
+            // rules. During a replay, `epoch` here is a replay epoch and this
+            // composite value is arithmetically ambiguous — the marker is the
+            // ONLY signal for these dirs (see postTransformLineage in
+            // replayQuarantine).
+            lake.writeQuarantine(transformed.filter(nullKey)
               .withColumn(QUARANTINE_REASON, lit("null_merge_key: " +
                 s"post-transform key(s) ${introduced.mkString(",")} must " +
-                "be non-null for INSERT/UPDATE (rows are POST-transform)"))
-              .write.mode("append").parquet(qDir)
+                "be non-null for INSERT/UPDATE (rows are POST-transform)")),
+              POST_TRANSFORM_EPOCH_BASE + epoch, postTransform = true)
             Map("events_quarantined_post_transform" -> n)
           }
         }
@@ -899,11 +878,6 @@ object MergeApply {
           pmod(xxhash64(saltCols.map(col) :+ lit(7919): _*), lit(salt)))
         .repartition(col("_bucket"), col("_wsalt"))
         .drop("_wsalt")
-    foldKeys.fold(keyed)(lake.resolveStored(keyed, m, _))
-      .write.mode("overwrite")
-      .options(lake.bloomOptions(m.keyCols))
-      .partitionBy("_bucket")
-      .parquet(lake.dataDir(epoch))
-    lake.listEpochFiles(epoch, m, Map.empty, kind)
+    lake.writeEpochFiles(foldKeys.fold(keyed)(lake.resolveStored(keyed, m, _)), epoch, m, kind)
   }
 }

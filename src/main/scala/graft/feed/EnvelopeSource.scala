@@ -280,22 +280,18 @@ object EnvelopeSource {
       val stats = ProducerStats(pages, ops)
       val p = java.nio.file.Paths.get(feedDir,
         s"_stats-$schemaName.$tableName-${System.nanoTime()}.json")
-      // tmp + atomic rename (the LakeTable metadata pattern): a crash
-      // mid-write would otherwise leave truncated JSON that breaks EVERY
-      // later deliveryGap call — the audit killed by the crash class it
-      // exists to detect
-      val tmp = java.nio.file.Paths.get(feedDir, s".${p.getFileName}.tmp")
-      // rendered, not string-interpolated: a table name carrying a quote or
+      // atomic publish (LakeTable.publish): a crash mid-write would
+      // otherwise leave truncated JSON that breaks EVERY later deliveryGap
+      // call — the audit killed by the crash class it exists to detect.
+      // Rendered, not string-interpolated: a table name carrying a quote or
       // backslash would otherwise write invalid JSON that breaks every later
       // producerStats/deliveryGap parse — the audit broken by its own writer
-      java.nio.file.Files.writeString(tmp, {
+      graft.lake.LakeTable.publish(p, {
         import org.json4s.JsonDSL._
         org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(
           ("table" -> s"$schemaName.$tableName") ~ ("pages" -> pages) ~
             ("ops" -> ops) ~ ("created_at" -> created)))
-      })
-      java.nio.file.Files.move(tmp, p,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      }.getBytes("UTF-8"))
       // AFTER the message files land: the marker must never claim a capture
       // second whose pages aren't on the bus yet (a crash between marker and
       // publish would make the next derivation skip a value — harmless — but
@@ -386,8 +382,8 @@ object EnvelopeSource {
       (hwm.map(_._1).toSeq ++ files.flatMap(readFirstLineCreatedAt)).maxOption)
   }
 
-  /** Advance (never regress) the [[HWM_MARKER]]; atomic tmp+move like every
-    * other metadata write. Same single-publisher caveat as the derivation. */
+  /** Advance (never regress) the [[HWM_MARKER]] through the atomic publish
+    * (`LakeTable.publish`). Same single-publisher caveat as the derivation. */
   private def recordCreatedAt(feedDir: String, created: Long): Unit = {
     val dir = java.nio.file.Paths.get(feedDir)
     if (!java.nio.file.Files.isDirectory(dir)) return
@@ -400,12 +396,8 @@ object EnvelopeSource {
       // one or two first-line reads per derivation, by design
       val cutoff = System.currentTimeMillis() - 2000L
       val old = listMessageFiles(dir).filter(mtimeMs(_) < cutoff)
-      val tmp = dir.resolve(s".$HWM_MARKER.tmp-${System.nanoTime()}")
-      java.nio.file.Files.writeString(tmp,
-        s"$created ${old.size} $cutoff ${nameHash(old)}")
-      java.nio.file.Files.move(tmp, marker,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
+      graft.lake.LakeTable.publish(marker,
+        s"$created ${old.size} $cutoff ${nameHash(old)}".getBytes("UTF-8"))
     }
   }
 

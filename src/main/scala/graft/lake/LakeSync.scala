@@ -1,6 +1,6 @@
 package graft.lake
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -247,11 +247,7 @@ object LakeSync {
     val state = source.readState(spark, head)
       .withColumn("_bucket", target.bucketExpr(tm.keyCols, tm.buckets))
     val files = MergeApply.writeEpoch(spark, target, state, epoch, tm)
-    // a footer-stat failure leaves rows = -1; recount rather than report a
-    // corrupted row metric (same guard as CdcRunner.fullLoad)
-    val rows =
-      if (files.forall(_.rows >= 0)) files.map(_.rows).sum
-      else spark.read.parquet(target.dataDir(epoch)).count()
+    val rows = files.map(_.rows).sum
     target.commit(epoch, files, (0 until tm.buckets).toSet, metricsFor(rows),
       readVersion = Some(tm.version))
     rows
@@ -417,18 +413,12 @@ object LakeSync {
 
   private def writeMarker(targetDir: String, sourceDir: String,
       merge: MergeStrategy, sourceTableId: String): Unit = {
-    val tmp = Paths.get(targetDir, s".sync_source.json.tmp-${System.nanoTime()}")
-    try {
-      Files.write(tmp, JsonMethods.compact(JsonMethods.render(JObject(
-        "source_dir" -> JString(sourceDir),
-        "merge" -> JString(MergeStrategy.name(merge)),
-        "source_table_id" -> JString(sourceTableId)))).getBytes("UTF-8"))
-      // ATOMIC_MOVE, like every manifest writer: without it Files.move may
-      // fall back to copy+delete, and a crash mid-copy leaves a truncated
-      // marker that wedges every future sync at checkMarker's parse
-      Files.move(tmp, markerPath(targetDir), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    } finally { Files.deleteIfExists(tmp); () }
+    // atomic publish: a torn marker would wedge every future sync at
+    // checkMarker's parse
+    LakeTable.publish(markerPath(targetDir), JsonMethods.compact(JsonMethods.render(JObject(
+      "source_dir" -> JString(sourceDir),
+      "merge" -> JString(MergeStrategy.name(merge)),
+      "source_table_id" -> JString(sourceTableId)))).getBytes("UTF-8"))
   }
 
   /** Validates the source binding and the PINNED merge strategy. The merge

@@ -30,13 +30,19 @@ import org.json4s.jackson.JsonMethods
  *     the reference's per-envelope ack);
  *   - per-epoch lineage + metrics JSON alongside the manifests.
  *
- * Layout:
+ * Layout (each file kind has ONE writer here: `publish` for metadata files,
+ * `writeEpochFiles` for data, `writeQuarantine` for quarantine dirs):
  * {{{
  *   dir/manifests/v%06d.json       — snapshots (append-only)
+ *   dir/manifests/mf-…json         — manifest fragments (file adds/replaces)
  *   dir/manifests/_current         — latest version pointer
+ *   dir/manifests/_vacuum_floor    — lowest version vacuum has not swept
  *   dir/data/epoch=N/_bucket=K/…   — data files (immutable once committed)
  *   dir/quarantine/epoch=N/…       — DLX analogue (trempy/Messages/MessageDlx.py:57-83)
  *   dir/lineage/epoch=N.json       — per-partition lineage + metrics
+ *   dir/changes/epoch=N/…          — CoW change sidecars + _meta.json; changes/_feed
+ *   dir/sync_source.json           — LakeSync's source binding (mirror tables)
+ *   …/.<name>.tmp-<nonce>          — staging file of an atomic publish
  * }}}
  */
 final case class GraftField(id: Int, name: String, dataType: DataType, nullable: Boolean = true)
@@ -405,6 +411,33 @@ object LakeTable {
     * reload is detectable as `at(to) > at(from)` from the two end metas. */
   val ReloadMetric = "reload_count"
 
+  /** Marker file in a quarantine dir whose rows are POST-transform: the
+    * drain must not re-run the rules on them (a `price*2` run twice corrupts
+    * silently). Underscore-prefixed so parquet readers ignore it. */
+  private[graft] val PostTransformMarker = "_post_transform"
+
+  /** Staging sibling of `target` for an atomic publish: the dot-prefixed
+    * `.<name>.tmp-<nonce>`, which [[isTmp]] recognizes. */
+  private[graft] def tmpFor(target: Path): Path =
+    target.resolveSibling(s".${target.getFileName}.tmp-${System.nanoTime()}")
+
+  private[graft] def isTmp(p: Path): Boolean =
+    p.getFileName.toString.startsWith(".") && p.getFileName.toString.contains(".tmp-")
+
+  /** THE metadata-file writer: stage `bytes` in [[tmpFor]], then replace
+    * `target` by `ATOMIC_MOVE`. Readers see the old or the whole new file;
+    * a crash leaves only the staging file, which `removeOrphans` sweeps.
+    * Atomic visibility, NOT durability: nothing is fsynced, so after a
+    * power loss `target` may still hold its previous content. */
+  private[graft] def publish(target: Path, bytes: Array[Byte]): Unit = {
+    val tmp = tmpFor(target)
+    try {
+      Files.write(tmp, bytes)
+      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } finally { Files.deleteIfExists(tmp); () }
+  }
+
   /** Row-level untouched-base prune (the refinement under the file-level
     * [[LakeTable.pruneUntouchedBase]]): when the base rows of the
     * delta-bearing groups outnumber their delta rows by at least this
@@ -529,10 +562,10 @@ class LakeTable(val dir: String) {
     * id, like any other file group. */
   def writeChangeSet(changes: DataFrame, epoch: Long, schemaId: Int): Unit = {
     changes.write.mode("overwrite").parquet(changesDir(epoch))
-    Files.writeString(Paths.get(changesDir(epoch), "_meta.json"),
-      s"""{"schema_id":$schemaId}""")
+    LakeTable.publish(Paths.get(changesDir(epoch), "_meta.json"),
+      s"""{"schema_id":$schemaId}""".getBytes("UTF-8"))
     // durable feed marker (see recordsChangeFeed) — outlives vacuumed epochs
-    Files.writeString(Paths.get(dir, "changes", FEED_MARKER), "")
+    enableChangeFeed()
   }
 
   private def changeSetFiles(epoch: Long): Seq[DataFile] = {
@@ -592,6 +625,32 @@ class LakeTable(val dir: String) {
       .reverse.flatMap(p =>
         if (Files.deleteIfExists(p)) Some(p.toString) else None)
   }
+
+  /** THE quarantine writer: `rows` (payload + `_error_reason`) replace
+    * [[quarantineDir]]`(epoch)`. `postTransform` rows go MARKER-FIRST —
+    * delete, marker, then append-mode parquet (overwrite would wipe the
+    * marker) — so no crash leaves pipeline OUTPUT unmarked for the next
+    * drain to treat as raw input. */
+  private[graft] def writeQuarantine(rows: DataFrame, epoch: Long,
+      postTransform: Boolean = false): Unit =
+    if (!postTransform) rows.write.mode("overwrite").parquet(quarantineDir(epoch))
+    else {
+      clearQuarantine(epoch)
+      Files.createDirectories(Paths.get(quarantineDir(epoch)))
+      markPostTransform(epoch)
+      rows.write.mode("append").parquet(quarantineDir(epoch))
+    }
+
+  /** Mark `epoch`'s quarantine dir, if any, post-transform. Idempotent. */
+  private[graft] def markPostTransform(epoch: Long): Unit = {
+    val p = Paths.get(quarantineDir(epoch), LakeTable.PostTransformMarker)
+    if (Files.isDirectory(p.getParent) && !Files.exists(p))
+      Files.write(p, Array.emptyByteArray): Unit
+  }
+
+  /** Whether `epoch`'s quarantined rows carry the post-transform marker. */
+  private[graft] def isPostTransform(epoch: Long): Boolean =
+    Files.exists(Paths.get(quarantineDir(epoch), LakeTable.PostTransformMarker))
 
   /** Browse the dead-letter table: quarantined rows + `_error_reason` +
     * `_epoch`, across all epochs or one — the read half of the DLX surface
@@ -708,7 +767,7 @@ class LakeTable(val dir: String) {
     * filters while writing and keeps the smallest that meets the FPP for the
     * group's ACTUAL key count, so tiny epochs pay KBs and 100-TB row groups
     * still get full-size filters — right-sized at every scale. */
-  def bloomOptions(keyCols: Seq[String]): Map[String, String] =
+  private def bloomOptions(keyCols: Seq[String]): Map[String, String] =
     keyCols.map(k => s"parquet.bloom.filter.enabled#$k" -> "true").toMap +
       ("parquet.bloom.filter.adaptive.enabled" -> "true")
 
@@ -738,26 +797,19 @@ class LakeTable(val dir: String) {
     val m = m0.copy(committedAtMs = System.currentTimeMillis())
     Files.createDirectories(manifestsDir)
     fragment.foreach { case (name, fr) =>
-      val ftmp = manifestsDir.resolve(s".$name.tmp-${System.nanoTime()}")
-      Files.write(ftmp, ManifestJson.writeFragment(fr).getBytes)
-      Files.move(ftmp, manifestsDir.resolve(name), StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      LakeTable.publish(manifestsDir.resolve(name), ManifestJson.writeFragment(fr).getBytes)
     }
-    val tmp = manifestsDir.resolve(s".v${m.version}.json.tmp-${System.nanoTime()}")
-    Files.write(tmp, ManifestJson.write(m).getBytes)
-    try Files.createLink(manifestPath(m.version), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(tmp)
-        throw new CommitRace(m.version)
-    }
-    Files.deleteIfExists(tmp)
-    if (currentVersionHint < m.version) {
-      val ptmp = manifestsDir.resolve(s"._current.tmp-${System.nanoTime()}")
-      Files.write(ptmp, m.version.toString.getBytes)
-      Files.move(ptmp, currentPtr, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
+    // the version file is the CAS, not a replace: staged like every other
+    // metadata file, then linked (fail-if-exists) instead of moved
+    val tmp = LakeTable.tmpFor(manifestPath(m.version))
+    try {
+      Files.write(tmp, ManifestJson.write(m).getBytes)
+      Files.createLink(manifestPath(m.version), tmp)
+    } catch {
+      case _: java.nio.file.FileAlreadyExistsException => throw new CommitRace(m.version)
+    } finally { Files.deleteIfExists(tmp); () }
+    if (currentVersionHint < m.version)
+      LakeTable.publish(currentPtr, m.version.toString.getBytes)
     foldCache = Some((m.version, m.fragments, m.files))
   }
 
@@ -1315,9 +1367,9 @@ class LakeTable(val dir: String) {
     // prune that fires on hash-random keys, where footer key ranges all
     // interleave and the file-level split above is a no-op. Whole-table
     // reads only (rowPrune): the per-group readResolved calls in
-    // compact/splitBuckets and the per-merge readBuckets must not pay a
-    // driver-blocking bloom-build job each — their group-local inputs are
-    // delta-heavy by construction, exactly where the split cannot win.
+    // compact/splitBuckets must not pay a driver-blocking bloom-build job
+    // each — their group-local inputs are delta-heavy by construction,
+    // exactly where the split cannot win.
     // ONE probe column shared by both sides of the split: the fold keeps
     // rows where it is true, the passed side keeps its negation — hoisting
     // it makes fold/passed divergence (rows dropped or duplicated by two
@@ -1590,11 +1642,12 @@ class LakeTable(val dir: String) {
     readFiles(spark, mTo, added.result())
   }
 
-  /** Read only the given CURRENT-spec buckets — file pruning via the manifest
-    * (no dir listing); deltas in those buckets resolved; pre-rescale files
-    * covering any requested bucket included. Tombstones kept (engine-facing
-    * read used by the merge — which must pass a [[bucketClosure]]-expanded set
-    * so the rows a coarser file carries for sibling buckets are not lost). */
+  /** The STORED rows of the given CURRENT-spec buckets — file pruning via
+    * the manifest (no dir listing); pre-rescale files covering any requested
+    * bucket included; base and delta rows UNRESOLVED, tombstones kept. The
+    * copy-on-write merge folds them with its change rows in its write
+    * exchange (one fold, not two), and must pass a [[bucketClosure]]-expanded
+    * set so the rows a coarser file carries for sibling buckets are not lost. */
   def readBuckets(spark: SparkSession, buckets: Set[Int],
       at: Option[Manifest] = None): DataFrame = {
     // `at` pins the read to the snapshot a CoW merge computed its inputs
@@ -1603,8 +1656,7 @@ class LakeTable(val dir: String) {
     // (an unpinned head re-read here could silently fold a concurrent
     // writer's files into a commit that doesn't admit replacing them)
     val m = at.getOrElse(manifest)
-    readResolved(spark, m,
-      m.files.filter(f => buckets.exists(b => b % f.spec == f.bucket)))
+    readFiles(spark, m, m.files.filter(f => buckets.exists(b => b % f.spec == f.bucket)))
   }
 
   private def readFiles(spark: SparkSession, m: Manifest, files: Seq[DataFile]): DataFrame = {
@@ -1638,10 +1690,8 @@ class LakeTable(val dir: String) {
       "files" -> JArray(files.toList.map(f => JObject(
         "path" -> JString(f.path), "bucket" -> JInt(f.bucket), "rows" -> JLong(f.rows)))),
       "metrics" -> JObject(metrics.toList.sortBy(_._1).map { case (k, v) => k -> JLong(v) }))
-    val tmp = dirP.resolve(s".epoch=$epoch.tmp-${System.nanoTime()}")
-    Files.write(tmp, JsonMethods.pretty(JsonMethods.render(j)).getBytes)
-    Files.move(tmp, dirP.resolve(s"epoch=$epoch.json"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    LakeTable.publish(dirP.resolve(s"epoch=$epoch.json"),
+      JsonMethods.pretty(JsonMethods.render(j)).getBytes)
   }
 
   /**
@@ -1764,12 +1814,7 @@ class LakeTable(val dir: String) {
         df.filter(!(coalesce(col("_deleted"), lit(false)) && col("_lsn") < wm))
       case _ => df
     }
-    gced
-      .write.mode("overwrite")
-      .options(bloomOptions(m.keyCols))
-      .partitionBy("_bucket")
-      .parquet(dataDir(epoch))
-    val files = listEpochFiles(epoch, m, Map.empty)
+    val files = writeEpochFiles(gced, epoch, m)
     // replace the full current-spec closure of every rewritten group
     val replaced = (0 until m.buckets).filter(b => oversized.contains(b % gran)).toSet
     // compaction also folds the fragment list down to one (manifest rewrite);
@@ -1812,11 +1857,7 @@ class LakeTable(val dir: String) {
         else readFiles(spark, m, fs)
       }.toSeq)
       .withColumn("_bucket", bucketExpr(m.keyCols, m.buckets))
-    df.write.mode("overwrite")
-      .options(bloomOptions(m.keyCols))
-      .partitionBy("_bucket")
-      .parquet(dataDir(epoch))
-    val files = listEpochFiles(epoch, m, Map.empty)
+    val files = writeEpochFiles(df, epoch, m)
     val replaced = (0 until m.buckets).filter(b => staleGroups.contains(b % gran)).toSet
     // pin the snapshot the rewrite read: an interleaved merge into one of the
     // migrating groups must surface as ConcurrentCommitException, not be
@@ -2012,18 +2053,8 @@ class LakeTable(val dir: String) {
           fragSeq(p.getFileName.toString) <= cur)
         .toSeq
     }.foreach { p => if (Files.deleteIfExists(p)) deleted += p.toString }
-    // advance (never regress) the low-water mark; atomic like every other
-    // metadata write — and nonce-suffixed like every other tmp name: two
-    // concurrent vacuums sharing one fixed tmp would race the move, crashing
-    // the loser with NoSuchFileException AFTER its deletion loop already ran
-    // (losing the deleted-paths report for work that actually happened)
-    if (keepFrom > floor) {
-      val tmp = manifestsDir.resolve(s"._vacuum_floor.tmp-${System.nanoTime()}")
-      Files.writeString(tmp, keepFrom.toString)
-      Files.move(tmp, floorPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-    }
+    // advance (never regress) the low-water mark
+    if (keepFrom > floor) LakeTable.publish(floorPath, keepFrom.toString.getBytes("UTF-8"))
     deleted.toSeq
   }
 
@@ -2047,30 +2078,20 @@ class LakeTable(val dir: String) {
       else resolve(v).files.map(f => Paths.get(f.path).toAbsolutePath.toString)
     }.toSet
     val deleted = scala.collection.mutable.ListBuffer.empty[String]
-    // crash-orphaned temp files: a committer that died between
-    // Files.write(tmp) and the link/rename leaves `.…​.tmp-…` litter nothing
-    // references and no other pass sweeps (vacuum matches only mf-*.json) —
-    // at streaming crash-restart cadence those dirs would grow unboundedly.
-    // Every metadata writer uses the dot-prefixed ".tmp-" naming; the age
-    // cutoff keeps in-flight commits' temps safe. Both metadata dirs have
-    // the same crash window: manifests/ (snapshot, fragment, _current) and
-    // lineage/ (writeLineage's per-epoch record).
-    Seq(manifestsDir, Paths.get(dir, "lineage")).foreach { metaDir =>
-      if (Files.isDirectory(metaDir)) {
-        scala.util.Using.resource(Files.list(metaDir)) { ls =>
-          ls.iterator().asScala
-            .filter(p => Files.isRegularFile(p))
-            .filter { p =>
-              val n = p.getFileName.toString
-              n.startsWith(".") && n.contains(".tmp-")
-            }
-            .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-            .toSeq
-        }.foreach { p =>
-          if (Files.deleteIfExists(p)) deleted += p.toString
-        }
-      }
-    }
+    // crash-orphaned staging files of LakeTable.publish: nothing references
+    // them and no other pass sweeps them (vacuum matches only mf-*.json), so
+    // at crash-restart cadence they would grow unboundedly. Swept in every
+    // dir it publishes into under the table — the root (sync_source.json),
+    // manifests/, lineage/ and each change sidecar (_meta.json); the age
+    // cutoff keeps in-flight commits' temps safe.
+    def children(d: Path): Seq[Path] =
+      if (!Files.isDirectory(d)) Nil
+      else scala.util.Using.resource(Files.list(d))(_.iterator().asScala.toSeq)
+    (Seq(Paths.get(dir), manifestsDir, Paths.get(dir, "lineage")) ++
+        children(Paths.get(dir, "changes"))).flatMap(children)
+      .filter(p => Files.isRegularFile(p) && LakeTable.isTmp(p) &&
+        Files.getLastModifiedTime(p).toMillis < cutoff)
+      .foreach { p => if (Files.deleteIfExists(p)) deleted += p.toString }
     val dataRoot = Paths.get(dir, "data").toAbsolutePath
     if (!Files.isDirectory(dataRoot)) return deleted.toSeq
     val emptied = scala.collection.mutable.LinkedHashSet.empty[Path]
@@ -2103,9 +2124,25 @@ class LakeTable(val dir: String) {
       }
     }
 
+  /** THE data-epoch writer: `rows` (carrying `_bucket`) overwrite
+    * [[dataDir]]`(epoch)`, one `_bucket=K` dir per bucket, so a retried
+    * epoch stays idempotent per (epoch, partition). Returns the written
+    * files, each with an exact row count (a failed footer read is recounted
+    * here), so callers may sum `rows` into audit metrics. `m` is the
+    * manifest the rows were bucketed under (see [[listEpochFiles]]). */
+  private[graft] def writeEpochFiles(rows: DataFrame, epoch: Long, m: Manifest,
+      kind: String = DataFile.BASE): Seq[DataFile] = {
+    rows.write.mode("overwrite")
+      .options(bloomOptions(m.keyCols))
+      .partitionBy("_bucket")
+      .parquet(dataDir(epoch))
+    listEpochFiles(epoch, m, kind).map { f =>
+      if (f.rows >= 0) f else f.copy(rows = rows.sparkSession.read.parquet(f.path).count())
+    }
+  }
+
   /** List data files physically present under a just-written epoch dir, with bucket
-    * parsed from the `_bucket=K` partition dirs. Retried epochs overwrite the same
-    * dir, so file sets stay idempotent per (epoch, partition).
+    * parsed from the `_bucket=K` partition dirs.
     *
     * `m` MUST be the manifest the rows were BUCKETED under, not a fresh head
     * read: an external rescale landing between the write and this listing
@@ -2113,8 +2150,7 @@ class LakeTable(val dir: String) {
     * their rows hash under the old one — and a pure-addition (delta) commit
     * bypasses the rebase guard's spec check, so nothing downstream would
     * catch the mismatch before reads silently lose rows. */
-  def listEpochFiles(epoch: Long, m: Manifest, rowsByBucket: Map[Int, Long],
-      kind: String = DataFile.BASE): Seq[DataFile] = {
+  private def listEpochFiles(epoch: Long, m: Manifest, kind: String): Seq[DataFile] = {
     val root = Paths.get(dataDir(epoch))
     if (!Files.exists(root)) return Nil
     // per-file stats come from the parquet FOOTER (driver-side metadata read,
@@ -2135,7 +2171,7 @@ class LakeTable(val dir: String) {
             case s if s.startsWith("_bucket=") => s.substring("_bucket=".length).toInt
             case _ => -1
           }
-          DataFile(p.toString, bucket, m.currentSchemaId, rowsByBucket.getOrElse(bucket, -1L),
+          DataFile(p.toString, bucket, m.currentSchemaId, -1L,
             kind, spec = writeSpec, bytes = Files.size(p))
         }.toSeq
     }

@@ -181,11 +181,10 @@ object CdcRunner {
           throw new IllegalStateException(
             s"full load: $nBadKeys snapshot row(s) with null merge key(s) " +
               s"${keys.mkString(",")} and quarantine is disabled")
-        staged.filter(nullKey)
+        lake.writeQuarantine(staged.filter(nullKey)
           .withColumn(MergeApply.QUARANTINE_REASON, lit("null_merge_key: " +
             s"key column(s) ${keys.mkString(",")} must be non-null in the " +
-            "full-load snapshot"))
-          .write.mode("overwrite").parquet(lake.quarantineDir(epoch))
+            "full-load snapshot")), epoch)
         staged.filter(!nullKey)
       }
     val withBucket = (job.mode match {
@@ -204,14 +203,9 @@ object CdcRunner {
     // plain bucket-keyed shuffle turns a hot bucket into one straggler task
     // (the exact problem writeEpoch's (bucket, salt) key documents)
     val files = MergeApply.writeEpoch(spark, lake, withBucket, epoch, m)
-    // exact loaded-row count comes free from the parquet footers; a footer
-    // read failure leaves the -1 sentinel — recount rather than sum it into
-    // a corrupted audit metric reconcile() would then treat as ground truth
-    val loaded =
-      if (files.forall(_.rows >= 0)) files.map(_.rows).sum
-      else spark.read.parquet(lake.dataDir(epoch)).count()
+    // exact loaded-row count from the written files (LakeTable.writeEpochFiles)
     lake.commit(epoch, files, (0 until m.buckets).toSet,
-      Map("full_load_rows" -> loaded,
+      Map("full_load_rows" -> files.map(_.rows).sum,
         // truncate-and-load marker: changeLog refuses windows spanning it
         // and LakeSync re-mirrors (see LakeTable.ReloadMetric)
         LakeTable.ReloadMetric -> 1L))
@@ -875,9 +869,11 @@ object CdcRunner {
 
   /** Overwrite the epoch's ledger file — driver-side, no Spark job (the
     * ledger is per-txn xids of a rare wedge event, not row-scale data).
-    * fsync + ATOMIC_MOVE, like every manifest writer: a torn ledger line
-    * would crash [[readEvictionLedger]] on every restart and wedge the
-    * stream — the exact failure class the ledger exists to prevent. The
+    * fsync + ATOMIC_MOVE: a torn ledger line would crash
+    * [[readEvictionLedger]] on every restart and wedge the stream — the
+    * exact failure class the ledger exists to prevent. The ledger lives in
+    * the streaming checkpoint (possibly remote), so it keeps this writer
+    * rather than `LakeTable.publish`, which fsyncs nothing. The
     * process-crash ordering argument (torn ledger ⇒ uncommitted batch ⇒
     * retry rewrites it) does not cover power loss, where the checkpoint
     * commit can reach disk while an unforced ledger page does not. */

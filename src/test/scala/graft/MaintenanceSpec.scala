@@ -448,11 +448,18 @@ class MaintenanceSpec extends SparkSpec {
     Files.writeString(lstale, "{}")
     Files.setLastModifiedTime(lstale, java.nio.file.attribute.FileTime.fromMillis(
       System.currentTimeMillis() - 10L * 86400 * 1000))
+    // LakeSync publishes its sync_source.json marker into the table ROOT —
+    // a crash mid-publish leaves its temp there, beside data/ and manifests/
+    val rstale = Paths.get(cfg.tableDir).resolve(".sync_source.json.tmp-444")
+    Files.writeString(rstale, "{}")
+    Files.setLastModifiedTime(rstale, java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - 10L * 86400 * 1000))
     val deleted = lake.removeOrphans(olderThanMs = 3600L * 1000)
     assert(deleted.exists(_.endsWith(".v99.json.tmp-111")), deleted.mkString(","))
     assert(deleted.exists(_.endsWith(".epoch=7.tmp-333")), deleted.mkString(","))
-    assert(!Files.exists(stale) && !Files.exists(lstale) && Files.exists(fresh),
-      "age cutoff keeps in-flight temps")
+    assert(deleted.exists(_.endsWith(".sync_source.json.tmp-444")), deleted.mkString(","))
+    assert(!Files.exists(stale) && !Files.exists(lstale) && !Files.exists(rstale) &&
+      Files.exists(fresh), "age cutoff keeps in-flight temps")
     assert(Files.exists(ldir.resolve("epoch=-1.json")), "real lineage records untouched")
     assert(Files.exists(mdir.resolve("v000001.json")), "real manifests untouched")
     assert(lake.read(spark).count() == 10, "table unaffected")

@@ -45,6 +45,21 @@ class NoEngineKnobSpec extends AnyFunSuite {
 
   private def read(f: Path): String = new String(Files.readAllBytes(f), "UTF-8")
 
+  /** End offset of the object member whose definition starts at `defAt`:
+    * where the next member of the object begins. */
+  private def memberEnd(text: String, defAt: Int): Int =
+    """\n  (?:/\*\*|def |private|val |\})""".r
+      .findFirstMatchIn(text.substring(defAt)).map(defAt + _.start)
+      .getOrElse(text.length)
+
+  /** `text` with every comment line blanked to spaces of the same length, so
+    * offsets into it still locate the original line. */
+  private def codeOnly(text: String): String =
+    text.split("\n", -1).map { l =>
+      val t = l.trim
+      if (t.startsWith("//") || t.startsWith("/*") || t.startsWith("*")) " " * l.length else l
+    }.mkString("\n")
+
   test("engine packages read no graft.* system property and no GRAFT_* env var") {
     assert(Files.isDirectory(root), s"run from the repository root: $root not found")
     val packages = Files.list(root).iterator().asScala.filter(Files.isDirectory(_)).toSeq
@@ -68,10 +83,7 @@ class NoEngineKnobSpec extends AnyFunSuite {
     val launchText = read(launchFile)
     val defAt = launchText.indexOf("def launch(")
     assert(defAt >= 0, s"no launch function in $launchFile")
-    // the function ends where the next member of the object begins
-    val defEnd = """\n  (?:/\*\*|def |private|val |\})""".r
-      .findFirstMatchIn(launchText.substring(defAt)).map(defAt + _.start)
-      .getOrElse(launchText.length)
+    val defEnd = memberEnd(launchText, defAt)
     val token = """\bwriteStream\b|\bTrigger\.|\baddListener\b""".r
     val outside = scalaFiles(root).flatMap { f =>
       val text = read(f)
@@ -85,5 +97,45 @@ class NoEngineKnobSpec extends AnyFunSuite {
       s"${outside.size} stream launch or listener site(s) outside CdcRunner.launch:\n" +
         outside.mkString("\n"))
     assert("""\bwriteStream\b""".r.findAllMatchIn(launchText).size == 1)
+  }
+
+  /** One writer per lake file kind: outside `graft.lake`, no code publishes a
+    * file by atomic move or link, writes parquet into a table's data or
+    * quarantine dir, or writes into a quarantine dir (the post-transform
+    * marker included) — `LakeTable` owns each of those writes, and
+    * `LakeTable.publish` holds the one `ATOMIC_MOVE` inside `lake/`. Two
+    * atomic moves write no table and are exempt: the WAL eviction ledger
+    * (streaming checkpoint) and the feed writer's staged-file renames.
+    * Comment lines are not scanned. */
+  test("table files are written only inside graft.lake; lake/ holds one ATOMIC_MOVE") {
+    val lakeDir = root.resolve("lake")
+    val exempt = Map(
+      root.resolve("runner/CdcRunner.scala") -> "def writeEvictionLedger(",
+      root.resolve("feed/ChangeFeed.scala") -> "def writeFeed(")
+    val atomicMove = """StandardCopyOption\.ATOMIC_MOVE""".r
+    val publishes = """StandardCopyOption\.ATOMIC_MOVE|Files\.createLink\b""".r
+    val tableWrite = ("""\.parquet\([^\n]*(?:dataDir|quarantineDir)\(|""" +
+      """\bdef\s+markPostTransform\b|""" +
+      """Files\.write(?:String)?\([^\n]*quarantineDir\(""").r
+    val outside = scalaFiles(root).filterNot(_.startsWith(lakeDir)).flatMap { f =>
+      val text = read(f)
+      val code = codeOnly(text)
+      val span = exempt.get(f).map { d =>
+        val at = code.indexOf(d)
+        assert(at >= 0, s"exempt function $d not found in $f")
+        at until memberEnd(code, at)
+      }.getOrElse(0 until 0)
+      (publishes.findAllMatchIn(code).filterNot(m => span.contains(m.start)) ++
+        tableWrite.findAllMatchIn(code)).map(m => located(f, text, m.start)).toSeq
+    }
+    assert(outside.isEmpty,
+      s"${outside.size} table write(s) outside graft.lake — go through the " +
+        s"LakeTable writer of that file kind:\n${outside.mkString("\n")}")
+    val inLake = scalaFiles(lakeDir).flatMap { f =>
+      val text = read(f)
+      atomicMove.findAllMatchIn(codeOnly(text)).map(m => located(f, text, m.start)).toSeq
+    }
+    assert(inLake.size == 1,
+      s"lake/ must publish through ONE ATOMIC_MOVE (LakeTable.publish):\n${inLake.mkString("\n")}")
   }
 }
