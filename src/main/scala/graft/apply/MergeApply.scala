@@ -2,7 +2,6 @@ package graft.apply
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 import graft.lake._
@@ -171,12 +170,7 @@ object MergeApply {
     // holds envelope-less rows (its replay dirs carry the synthesized
     // envelope), while presence-probing would misfire on a snapshot payload
     // that legitimately contains a column named `op`.
-    val rows =
-      if (sourceEpoch != FULL_LOAD_EPOCH) rows0
-      else rows0
-        .withColumn(ChangeEvent.LSN, lit(0L))
-        .withColumn(ChangeEvent.TS, batchTimestamp(FULL_LOAD_EPOCH))
-        .withColumn(ChangeEvent.OP, lit(ChangeEvent.INSERT))
+    val rows = if (sourceEpoch != FULL_LOAD_EPOCH) rows0 else snapshotEvents(rows0)
     val replayEpoch = REPLAY_EPOCH_BASE + (sourceEpoch + 2) * 64 + attempt
     // rows re-quarantined from a post-transform source stay post-transform:
     // propagate the marker so the NEXT drain attempt also strips the rules.
@@ -194,6 +188,14 @@ object MergeApply {
     }
   }
 
+  /** Snapshot rows as the INSERT events of a full load: lsn 0 and the
+    * full-load batch timestamp (the rank and SCD2 start date every row of
+    * the original load got). */
+  private[graft] def snapshotEvents(rows: DataFrame): DataFrame =
+    rows.withColumn(ChangeEvent.LSN, lit(0L))
+      .withColumn(ChangeEvent.TS, batchTimestamp(FULL_LOAD_EPOCH))
+      .withColumn(ChangeEvent.OP, lit(ChangeEvent.INSERT))
+
   /** Labels the phase's jobs `merge: <label>` in the UI and to listeners
     * (thread-local, guide §1.5 — one setProperty call, negligible); job
     * attribution by phase keys on this label. */
@@ -209,32 +211,6 @@ object MergeApply {
     * SURVEY §7.4.3): derived from the epoch so replay is byte-stable. */
   def batchTimestamp(epoch: Long): Column =
     timestamp_seconds(lit(1700000000L + epoch))
-
-  /** Null-fill lake-schema columns missing from the (older schema_ver) event frame
-    * and cast widened ones — the reference's per-batch null-fill of missing source
-    * columns (trempy/Tables/Table.py:73-100), done once per batch, columnar.
-    * ONE select, not a withColumn per field: each withColumn stacks another
-    * Project the analyzer re-walks on every per-epoch action — pure plan
-    * bloat on the merge hot path (guide §7.3: analyzer time IS driver wall). */
-  private def alignToSchema(df: DataFrame, target: GraftSchema): DataFrame = {
-    val have = df.columns.toSet
-    val byName = target.fields.map(f => f.name -> f).toMap
-    val needsWork = target.fields.exists(f => !have(f.name) ||
-      df.schema(f.name).dataType != f.dataType)
-    if (!needsWork) df
-    else {
-      val existing = df.schema.fields.toSeq.map { c =>
-        byName.get(c.name) match {
-          case Some(f) if c.dataType != f.dataType =>
-            col(c.name).cast(f.dataType).as(c.name)
-          case _ => col(c.name)
-        }
-      }
-      val missing = target.fields.filterNot(f => have(f.name))
-        .map(f => lit(null).cast(f.dataType).as(f.name))
-      df.select(existing ++ missing: _*)
-    }
-  }
 
   /** Plan-once seam (guide §3.3 "materialising an intermediate truncates the
     * plan"): compile `df`'s physical plan ONCE and hand every further
@@ -506,14 +482,8 @@ object MergeApply {
         (observed.filter(!nullKey), resolve)
       }
 
-    cfg.mode match {
-      case CdcMode.Scd2 =>
-        applyScd2(spark, lake, mergeInput, epoch, cfg, keys, onStats,
-          postStats() ++ extraMetrics)
-      case _ =>
-        applyLww(spark, lake, mergeInput, epoch, cfg, keys, onStats,
-          postStats() ++ extraMetrics)
-    }
+    mergeEvents(spark, lake, mergeInput, epoch, cfg, keys, onStats,
+      postStats() ++ extraMetrics)
   }
 
   /** Adaptive-salt sizing for a copy-on-write rewrite of `affectedC`: merged
@@ -534,9 +504,21 @@ object MergeApply {
     }
   }
 
-  /** default/upsert modes: final state ≡ last-writer-wins fold (reference's literal
-    * replay collapses to LWW after per-key reduction — SURVEY §2.4). */
-  private def applyLww(
+  /**
+   * Both merge modes' prefix: align the events to the table's payload, then
+   * per-key LWW reduction (dedup by (key, lsn), keep the max-lsn record) for
+   * a last-writer-wins table. An SCD2 table keeps every event, each one a
+   * version row: the copy-on-write merge rebuilds the chain of every key in
+   * the affected buckets from the union of stored rows and new events, so a
+   * late event splices into its correct historical position instead of
+   * corrupting the chain (the reference's row-serial close-then-insert,
+   * CDCOperationsHandler.py:216-277, assumes ordered arrival).
+   *
+   * The reduce's groupBy does map-side partial aggregation: a hot key
+   * contributes at most one row per map task to the shuffle (skew-safe
+   * without salting).
+   */
+  private def mergeEvents(
       spark: SparkSession,
       lake: LakeTable,
       events: DataFrame,
@@ -545,99 +527,25 @@ object MergeApply {
       keys: Seq[String],
       onStats: () => (Long, Long, Long),
       extraMetrics: => Map[String, Long]): BatchResult = {
-
     val m = lake.manifest
-    // engine-internal columns (leading underscore, e.g. the stored per-row _lsn)
-    // are never payload — FIXTURES F1
-    val payloadCols = m.currentSchema.fields.map(_.name).filterNot(_.startsWith("_"))
-    val nonKeyPayload = payloadCols.filterNot(keys.contains)
-    val alignSchema =
-      GraftSchema(m.currentSchemaId, m.currentSchema.fields.filterNot(_.name.startsWith("_")))
-    val aligned = alignToSchema(events, alignSchema)
-
-    // ── per-key LWW reduction: dedup by (key, lsn), keep max-lsn record ──
-    // groupBy does map-side partial aggregation: a hot key contributes at
-    // most one row per map task to the shuffle (skew-safe without salting).
-    val packed = struct((Seq(ChangeEvent.OP, ChangeEvent.LSN, ChangeEvent.TS) ++
-      nonKeyPayload).map(col): _*)
-    val reduced = aligned
-      .groupBy(keys.map(col): _*)
-      .agg(max_by(packed, col(ChangeEvent.LSN)).as("_r"))
-      .select(keys.map(col) :+ col("_r.*"): _*)
-      .withColumn("_bucket", lake.bucketExpr(keys, m.buckets))
-
-    // the reduced change set in delta-row shape (a DELETE keeps only its key:
-    // a tombstone's payload is null on every storage strategy)
-    mergeChanges(spark, lake, m, reduced, epoch, cfg, keys, onStats, extraMetrics) {
-      changes =>
-        val cOp = col(ChangeEvent.OP)
-        changes.select(
-          (payloadCols.map { c =>
-            if (keys.contains(c)) col(c)
-            else when(cOp === ChangeEvent.DELETE, lit(null)).otherwise(col(c)).as(c)
-          } :+
-            col(ChangeEvent.LSN).as("_lsn") :+
-            (cOp === ChangeEvent.DELETE).as("_deleted") :+
-            col("_bucket")): _*)
-    }
-  }
-
-  /**
-   * SCD2 mode: every change produces/closes a version row
-   * (reference: CDCOperationsHandler.py:216-277).
-   *
-   * Out-of-order-safe by construction: every version row stores its event's
-   * `_lsn`, DELETEs persist as hidden marker rows (`_deleted`, filtered from
-   * public reads), and each batch REBUILDS the chain of every key in the
-   * affected buckets from the union of existing rows + new events — end_date =
-   * next version's start, current = last-by-LSN unless it is a delete marker.
-   * A late event therefore splices into its correct historical position
-   * instead of silently corrupting the chain (the reference's row-serial
-   * close-then-insert assumes ordered arrival). Cost is the same
-   * affected-bucket CoW rewrite the mode already paid; the rebuild adds no I/O.
-   */
-  private def applyScd2(
-      spark: SparkSession,
-      lake: LakeTable,
-      events: DataFrame,
-      epoch: Long,
-      cfg: JobConfig,
-      naturalKeys: Seq[String],
-      onStats: () => (Long, Long, Long),
-      extraMetrics: => Map[String, Long]): BatchResult = {
-
-    val m = lake.manifest
-    val scd = cfg.scdCols
-    val payloadCols = m.currentSchema.fields.map(_.name)
-      .filterNot(c => c == scd.startDate || c == scd.endDate || c == scd.current)
-      .filterNot(_.startsWith("_"))
-
-    val alignSchema = GraftSchema(m.currentSchemaId,
-      m.currentSchema.fields.filter(f => payloadCols.contains(f.name)))
-    val withBucket = alignToSchema(events, alignSchema)
-      .withColumn("_bucket", lake.bucketExpr(naturalKeys, m.buckets))
-
-    // incoming events as version rows; DELETEs become hidden marker rows.
-    // On merge-on-read they are the delta commit itself: the chain
-    // (end_date/current) is rebuilt at read time / folded by compaction, so
-    // history ingest never rewrites the hot buckets either.
-    mergeChanges(spark, lake, m, withBucket, epoch, cfg, naturalKeys, onStats,
-      extraMetrics) { changes =>
-      changes.select(
-        (payloadCols.map(col) :+
-          col(ChangeEvent.TS).cast(TimestampType).as(scd.startDate) :+
-          lit(null).cast(TimestampType).as(scd.endDate) :+
-          lit(0).as(scd.current) :+
-          col(ChangeEvent.LSN).as("_lsn") :+
-          (col(ChangeEvent.OP) === ChangeEvent.DELETE).as("_deleted") :+
-          col("_bucket")): _*)
-    }
+    val aligned = StoredRows.align(events, m)
+    val changes =
+      if (m.tableMode == Manifest.SCD2) aligned
+      else {
+        val packed = struct(aligned.columns.filterNot(keys.contains).map(col): _*)
+        aligned
+          .groupBy(keys.map(col): _*)
+          .agg(max_by(packed, col(ChangeEvent.LSN)).as("_r"))
+          .select(keys.map(col) :+ col("_r.*"): _*)
+      }
+    val bucketed = changes.withColumn("_bucket", lake.bucketExpr(keys, m.buckets))
+    mergeChanges(spark, lake, m, bucketed, epoch, cfg, keys, onStats, extraMetrics)
   }
 
   /**
    * The tail both modes share after their prefix: `events` is the mode's
-   * bucketed change set (the LWW reduction, or the aligned SCD2 events) and
-   * `toChangeRows` shapes it into stored-row form — the merge-on-read delta
+   * bucketed change set (the LWW reduction, or the aligned SCD2 events), and
+   * its stored rows ([[StoredRows.fromEvents]]) are the merge-on-read delta
    * commit, the copy-on-write change sidecar and the copy-on-write merge's
    * incoming side alike.
    *
@@ -669,8 +577,7 @@ object MergeApply {
       cfg: JobConfig,
       keys: Seq[String],
       onStats: () => (Long, Long, Long),
-      extraMetrics: => Map[String, Long])(
-      toChangeRows: DataFrame => DataFrame): BatchResult = {
+      extraMetrics: => Map[String, Long]): BatchResult = {
     val cached = events.persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // one small job on the cached change set yields op metrics AND affected
@@ -687,7 +594,7 @@ object MergeApply {
       // the compiled change set instead of re-analyzing the whole
       // source→parse→rules tree per action
       val changes = planOnce(spark, cached)
-      def changeRows = toChangeRows(changes)
+      def changeRows = StoredRows.fromEvents(changes, m, keys)
 
       // LAZY, evaluated once, always PRE-commit: onStats blocks on the
       // observation listener, and the shared listener bus lags behind the

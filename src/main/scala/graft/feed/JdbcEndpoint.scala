@@ -306,13 +306,20 @@ object JdbcEndpoint {
     errors
   }
 
-  /** [[fullLoadTo]] with per-row error capture: keyed DDL, then
-    * [[bulkInsertCapturing]] — PK-violating rows come back with messages
-    * instead of failing the load. */
-  def fullLoadToCapturing(df: DataFrame, conn: Conn, table: String,
-      keyCols: Seq[String], batchSize: Int = 10000, varcharLen: Int = 255): DataFrame = {
-    ensureTable(conn, table, df.schema, keyCols, varcharLen)
-    bulkInsertCapturing(df, conn, table, batchSize)
+  /** Per-key LWW collapse of a multi-epoch change window: one winner row per
+    * key (max `_lsn`), payload + `_deleted`. groupBy + max_by does map-side
+    * partial aggregation, so a hot key contributes at most one row per map
+    * task to the shuffle — the same skew-safe shape the lake merge uses
+    * (PlanAuditSpec asserts the partial phase). */
+  def collapseChanges(changes: DataFrame, keyCols: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, max_by, struct}
+    val payloadCols = changes.columns.filterNot(_.startsWith("_")).toSeq
+    val nonKey = payloadCols.filterNot(keyCols.contains)
+    changes
+      .groupBy(keyCols.map(col): _*)
+      .agg(max_by(struct((nonKey :+ "_deleted").map(col): _*), col("_lsn")).as("_w"))
+      .select(keyCols.map(col) ++ nonKey.map(c => col(s"_w.$c").as(c)) :+
+        col("_w._deleted").as("_deleted"): _*)
   }
 
   /**
@@ -331,22 +338,6 @@ object JdbcEndpoint {
    * the same reduced page converges to the same final state — delete+insert
    * of the same keys), like every JDBC writer.
    */
-  /** Per-key LWW collapse of a multi-epoch change window: one winner row per
-    * key (max `_lsn`), payload + `_deleted`. groupBy + max_by does map-side
-    * partial aggregation, so a hot key contributes at most one row per map
-    * task to the shuffle — the same skew-safe shape the lake merge uses
-    * (PlanAuditSpec asserts the partial phase). */
-  def collapseChanges(changes: DataFrame, keyCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, max_by, struct}
-    val payloadCols = changes.columns.filterNot(_.startsWith("_")).toSeq
-    val nonKey = payloadCols.filterNot(keyCols.contains)
-    changes
-      .groupBy(keyCols.map(col): _*)
-      .agg(max_by(struct((nonKey :+ "_deleted").map(col): _*), col("_lsn")).as("_w"))
-      .select(keyCols.map(col) ++ nonKey.map(c => col(s"_w.$c").as(c)) :+
-        col("_w._deleted").as("_deleted"): _*)
-  }
-
   def applyChanges(changes: DataFrame, conn: Conn, table: String,
       keyCols: Seq[String], batchSize: Int = 10000): Unit = {
     require(keyCols.nonEmpty, "applyChanges needs the merge key columns")

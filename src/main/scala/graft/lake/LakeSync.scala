@@ -3,12 +3,11 @@ package graft.lake
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.apply.MergeApply
-import graft.model.{CdcMode, ChangeEvent, JobConfig, MergeStrategy}
+import graft.model.{CdcMode, JobConfig, MergeStrategy}
 
 /**
  * Lake→lake incremental replication: mirror an upstream LWW lake table into a
@@ -290,25 +289,7 @@ object LakeSync {
       return SyncResult(from, head, epoch, rows, bootstrapped = false)
     }
 
-    val changes = source.changeLog(spark, from, head)
-    val payload = changes.columns.filterNot(_.startsWith("_"))
-    // the change-event envelope reserves op/lsn/ts: a payload column sharing
-    // one of those names (constructible via the direct LakeTable API — the
-    // ingest paths cannot produce it) would make this select emit DUPLICATE
-    // column names and wedge every incremental window on AMBIGUOUS_REFERENCE.
-    // Refuse loudly with the remedy instead of a permanent mid-stream wedge.
-    val clash = payload.filter(Set(ChangeEvent.OP, ChangeEvent.LSN, ChangeEvent.TS))
-    require(clash.isEmpty,
-      s"lake→lake sync: source payload column(s) ${clash.mkString(",")} " +
-        "collide with the change-event envelope (op/lsn/ts) — rename the " +
-        "column(s) at the source; this table's change windows cannot be " +
-        "expressed as change events")
-    val events = changes.select(
-      payload.map(col) :+
-        when(col("_deleted"), lit(ChangeEvent.DELETE))
-          .otherwise(lit(ChangeEvent.UPDATE)).as(ChangeEvent.OP) :+
-        col("_lsn").as(ChangeEvent.LSN) :+
-        lit(null).cast("timestamp").as(ChangeEvent.TS): _*)
+    val events = StoredRows.toEvents(source.changeLog(spark, from, head))
 
     val tm = target.manifest
     val epoch = math.max(tm.epochWatermark, -1L) + 1

@@ -2228,11 +2228,6 @@ class LakeTable(val dir: String) {
   def bucketOfKey(key: String, buckets: Int): Int =
     bucketOfRow(Seq((key, StringType)), buckets)
 
-  /** Driver-side bucket of a single integral key — the key COLUMN type picks
-    * the hash kernel (see [[bucketOfRow]]). */
-  def bucketOfNumKey(key: Long, dt: DataType, buckets: Int): Int =
-    bucketOfRow(Seq((key, dt)), buckets)
-
   /** Driver-side hash of one key value with a given seed — must track Spark's
     * xxhash64 kernels exactly (int and long hash differently, so the key
     * COLUMN type, not the lookup value, picks the kernel). */

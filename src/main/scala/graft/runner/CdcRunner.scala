@@ -91,34 +91,13 @@ object CdcRunner {
       deleteRecursively(new java.io.File(cfg.checkpointDir))
     }
     if (!lake.exists) {
-      import org.apache.spark.sql.types._
       val (payload, outKeys) = outputPayloadSchemaAndKeys(cfg)
-      val tableSchema = cfg.job.mode match {
-        case CdcMode.Scd2 =>
-          // per-version _lsn + hidden DELETE markers make the history rebuild
-          // out-of-order-safe (late events splice; see MergeApply.applyScd2)
-          val scd = cfg.job.scdCols
-          StructType(payload.fields ++ Seq(
-            StructField(scd.startDate, TimestampType),
-            StructField(scd.endDate, TimestampType),
-            StructField(scd.current, IntegerType),
-            StructField("_lsn", LongType),
-            StructField("_deleted", BooleanType)))
-        case _ =>
-          // stored per-row LSN + delete tombstones make the upsert merge fully
-          // order-tolerant: a change applies only if its LSN is newer, and a
-          // DELETE leaves a tombstone so an out-of-order older INSERT cannot
-          // resurrect the row. Public reads filter tombstones out.
-          StructType(payload.fields ++ Seq(
-            StructField("_lsn", LongType),
-            StructField("_deleted", BooleanType)))
-      }
       val scd = cfg.job.scdCols
-      lake.create(tableSchema, cfg.job.buckets, keyCols = outKeys,
-        tableMode = if (cfg.job.mode == CdcMode.Scd2) graft.lake.Manifest.SCD2
-                    else graft.lake.Manifest.LWW,
-        scdCols = if (cfg.job.mode == CdcMode.Scd2)
-          Seq(scd.startDate, scd.endDate, scd.current) else Nil)
+      val scdCols =
+        if (cfg.job.mode == CdcMode.Scd2) Seq(scd.startDate, scd.endDate, scd.current) else Nil
+      lake.create(StoredRows.tableSchema(payload, scdCols), cfg.job.buckets, keyCols = outKeys,
+        tableMode = if (scdCols.nonEmpty) Manifest.SCD2 else Manifest.LWW,
+        scdCols = scdCols)
     }
     lake
   }
@@ -187,22 +166,17 @@ object CdcRunner {
             "full-load snapshot")), epoch)
         staged.filter(!nullKey)
       }
-    val withBucket = (job.mode match {
-      case CdcMode.Scd2 =>
-        val scd = job.scdCols
-        snapshot
-          .withColumn(scd.startDate, MergeApply.batchTimestamp(epoch).cast("timestamp"))
-          .withColumn(scd.endDate, lit(null).cast("timestamp"))
-          .withColumn(scd.current, lit(1))
-          .withColumn("_lsn", lit(0L))
-          .withColumn("_deleted", lit(false))
-      case _ => snapshot.withColumn("_lsn", lit(0L)).withColumn("_deleted", lit(false))
-    }).withColumn("_bucket", lake.bucketExpr(keys, m.buckets))
-    // the shared salted epoch writer, not a hand-rolled repartition(bucket):
-    // the full load is the largest single write of the table's life, and a
-    // plain bucket-keyed shuffle turns a hot bucket into one straggler task
-    // (the exact problem writeEpoch's (bucket, salt) key documents)
-    val files = MergeApply.writeEpoch(spark, lake, withBucket, epoch, m)
+    // the snapshot as INSERT events through the merge's own codec, written
+    // as a copy-on-write epoch into an empty table: the fold keeps one row
+    // per key (a snapshot holding a key twice lands once) and sets an SCD2
+    // row's `current`. The shared salted epoch writer, not a hand-rolled
+    // repartition(bucket): the full load is the largest single write of the
+    // table's life, and a plain bucket-keyed shuffle turns a hot bucket into
+    // one straggler task.
+    val rows = StoredRows.fromEvents(
+      StoredRows.align(MergeApply.snapshotEvents(snapshot), m), m, keys)
+      .withColumn("_bucket", lake.bucketExpr(keys, m.buckets))
+    val files = MergeApply.writeEpoch(spark, lake, rows, epoch, m, foldKeys = Some(keys))
     // exact loaded-row count from the written files (LakeTable.writeEpochFiles)
     lake.commit(epoch, files, (0 until m.buckets).toSet,
       Map("full_load_rows" -> files.map(_.rows).sum,
@@ -687,70 +661,6 @@ object CdcRunner {
           readEvictionLedger(spark, s"$stashRoot/evicted=${epoch - 1}", epoch - 1)
             .filter(_._2 > epoch - ledgerRetention)
         val prevXids = ledgerPrev.map(_._1).toSet
-        // ONE aggregate job on the (cached) pending lines yields the row
-        // count AND the expired-xid set together — previously a separate
-        // distinct+collect probe preceded the stash write, and the write ran
-        // even when pending was EMPTY (the steady state: whole txns per
-        // batch), paying a full parquet-committer job to record nothing.
-        // The xid set stays driver-bounded: per-TXN xids of a rare
-        // producer-wedge event, not rows (collect_set drops the when's
-        // nulls, so only aged-out lines contribute). Fresh rows enter at
-        // AGE=0 and maxAge >= 1, so without a carried stash the set is
-        // provably empty — same gate as the old probe, now free.
-        spark.sparkContext.setJobDescription(s"wal: pending stash (epoch $epoch)")
-        val pendingAgg = pending.groupBy().agg(
-          count(lit(1)).as("n"),
-          collect_set(when(col(AGE) >= math.max(maxAge, 1), col("xid")))
-            .as("aged")).head()
-        val nPending = pendingAgg.getLong(0)
-        val expiredXids: Seq[Long] =
-          if (maxAge <= 0 || !prevStashExists) Seq.empty
-          else pendingAgg.getSeq[Long](1).distinct
-            .filterNot(prevXids).sorted.toSeq
-        val ledger = ledgerPrev ++ expiredXids.map(x => (x, epoch))
-        val evictedAll = prevXids ++ expiredXids
-        // written BEFORE the merge, like the stash: a retried batch
-        // re-derives the identical ledger from retained inputs. Not written
-        // when empty — the steady state after retention pruning carries no
-        // ledger and pays nothing.
-        if (ledger.nonEmpty)
-          writeEvictionLedger(spark, s"$stashRoot/evicted=$epoch", ledger)
-        // evicted txns never stash (their lines quarantine the batch they
-        // arrive in); null-xid corrupt markers are already excluded by the
-        // filter above, and pending's xids are non-null so the negated
-        // membership predicate has no three-valued-logic trap.
-        // An EMPTY pending set writes no parquet at all (and on a retry:
-        // emptiness is a pure function of the retained batch + stash(N-1) +
-        // ledger(N-1), so a replayed epoch re-derives it identically). Two
-        // empty shapes:
-        //  - a carried stash DRAINED this epoch: supersede it with a
-        //    driver-side EMPTY-marker dir (two metadata ops, no Spark job) —
-        //    the newest epoch dir must always be the live carry-out, or the
-        //    stale predecessor reads as "txn still circling" one epoch after
-        //    it resolved (the stash specs pin this observable);
-        //  - steady state (no carry-in): write nothing, probe nothing.
-        // The delete is belt-and-braces for dirs from older builds/attempts.
-        if (nPending == 0) {
-          val p = new org.apache.hadoop.fs.Path(s"$stashRoot/epoch=$epoch")
-          if (isHadoopDir(stashFs, p)) stashFs.delete(p, true): Unit
-          if (prevStashExists) {
-            stashFs.mkdirs(p): Unit
-            stashFs.create(
-              new org.apache.hadoop.fs.Path(p, EMPTY_STASH), true).close()
-          }
-        } else {
-          // bounded file count: the carry-over is usually a handful of
-          // straggler lines — one ~500k-line file per task beats one file
-          // per upstream partition (coalesce: no extra shuffle)
-          val stashParts = math.max(1L, math.min(
-            nPending / 500000L + 1L, para.toLong)).toInt
-          (if (evictedAll.nonEmpty)
-            pending.filter(!col("xid").isInCollection(evictedAll))
-           else pending)
-            .withColumn(AGE, col(AGE) + 1)
-            .coalesce(stashParts)
-            .write.mode("overwrite").parquet(s"$stashRoot/epoch=$epoch")
-        }
         // with a schema registry, one stream parses EVERY registered payload
         // version (the wire format carries column names inline): per-row
         // version detection + rename/widen normalization, so a batch mixing
@@ -758,24 +668,95 @@ object CdcRunner {
         // (version-1) payload in that case. Without one it is the plain parse.
         def parseFeed(df: DataFrame) = WalParser.parseVersionedForTable(df,
           cfg.payloadSchema, cfg.schemaRegistry, schemaName, tableName)
-        // ORPHAN EVICTION: every line of an evicted txn in this batch (aged
-        // out of the stash, or a late arrival matching the ledger) re-parses
-        // with a synthesized COMMIT (so the same parse decodes its payload)
-        // but with the op marked so the merge QUARANTINES it — uncommitted
-        // data must never apply, even when the real COMMIT finally shows up
-        // after the eviction. Nothing vanishes and nothing loops: reason +
-        // full payload are browsable under this epoch, and a
-        // replayQuarantine with fix = strip the op prefix re-drives them if
-        // the operator establishes the transaction really committed.
-        // Deterministic on a retried batch (a pure function of raw + the
-        // retained stash/ledger of epoch-1), like the stash write above.
-        // Gate: the dual-parse plan is built only when THIS batch actually
-        // carries lines of an evicted txn — newly expired lines are in the
-        // carried stash by construction; otherwise (a live ledger but a
-        // clean batch, the common case after an eviction) one cheap
-        // membership probe keeps the plan the plain single-parse shape.
-        val evicting = expiredXids.nonEmpty || (prevXids.nonEmpty &&
-          !withPrev.filter(col("xid").isInCollection(prevXids)).isEmpty)
+        // the stash block's jobs carry a `wal:` label, scoped to the block:
+        // the merge and the maintenance tick after it must not inherit it
+        val sc = spark.sparkContext
+        val prevLabel = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(s"wal: pending stash (epoch $epoch)")
+        val (expiredXids, evictedAll, evicting) = try {
+          // ONE aggregate job on the (cached) pending lines yields the row
+          // count AND the expired-xid set together — previously a separate
+          // distinct+collect probe preceded the stash write, and the write ran
+          // even when pending was EMPTY (the steady state: whole txns per
+          // batch), paying a full parquet-committer job to record nothing.
+          // The xid set stays driver-bounded: per-TXN xids of a rare
+          // producer-wedge event, not rows (collect_set drops the when's
+          // nulls, so only aged-out lines contribute). Fresh rows enter at
+          // AGE=0 and maxAge >= 1, so without a carried stash the set is
+          // provably empty — same gate as the old probe, now free.
+          val pendingAgg = pending.groupBy().agg(
+            count(lit(1)).as("n"),
+            collect_set(when(col(AGE) >= math.max(maxAge, 1), col("xid")))
+              .as("aged")).head()
+          val nPending = pendingAgg.getLong(0)
+          val expiredXids: Seq[Long] =
+            if (maxAge <= 0 || !prevStashExists) Seq.empty
+            else pendingAgg.getSeq[Long](1).distinct
+              .filterNot(prevXids).sorted.toSeq
+          val ledger = ledgerPrev ++ expiredXids.map(x => (x, epoch))
+          val evictedAll = prevXids ++ expiredXids
+          // written BEFORE the merge, like the stash: a retried batch
+          // re-derives the identical ledger from retained inputs. Not written
+          // when empty — the steady state after retention pruning carries no
+          // ledger and pays nothing.
+          if (ledger.nonEmpty)
+            writeEvictionLedger(spark, s"$stashRoot/evicted=$epoch", ledger)
+          // evicted txns never stash (their lines quarantine the batch they
+          // arrive in); null-xid corrupt markers are already excluded by the
+          // filter above, and pending's xids are non-null so the negated
+          // membership predicate has no three-valued-logic trap.
+          // An EMPTY pending set writes no parquet at all (and on a retry:
+          // emptiness is a pure function of the retained batch + stash(N-1) +
+          // ledger(N-1), so a replayed epoch re-derives it identically). Two
+          // empty shapes:
+          //  - a carried stash DRAINED this epoch: supersede it with a
+          //    driver-side EMPTY-marker dir (two metadata ops, no Spark job) —
+          //    the newest epoch dir must always be the live carry-out, or the
+          //    stale predecessor reads as "txn still circling" one epoch after
+          //    it resolved (the stash specs pin this observable);
+          //  - steady state (no carry-in): write nothing, probe nothing.
+          // The delete is belt-and-braces for dirs from older builds/attempts.
+          if (nPending == 0) {
+            val p = new org.apache.hadoop.fs.Path(s"$stashRoot/epoch=$epoch")
+            if (isHadoopDir(stashFs, p)) stashFs.delete(p, true): Unit
+            if (prevStashExists) {
+              stashFs.mkdirs(p): Unit
+              stashFs.create(
+                new org.apache.hadoop.fs.Path(p, EMPTY_STASH), true).close()
+            }
+          } else {
+            // bounded file count: the carry-over is usually a handful of
+            // straggler lines — one ~500k-line file per task beats one file
+            // per upstream partition (coalesce: no extra shuffle)
+            val stashParts = math.max(1L, math.min(
+              nPending / 500000L + 1L, para.toLong)).toInt
+            (if (evictedAll.nonEmpty)
+              pending.filter(!col("xid").isInCollection(evictedAll))
+             else pending)
+              .withColumn(AGE, col(AGE) + 1)
+              .coalesce(stashParts)
+              .write.mode("overwrite").parquet(s"$stashRoot/epoch=$epoch")
+          }
+          // ORPHAN EVICTION: every line of an evicted txn in this batch (aged
+          // out of the stash, or a late arrival matching the ledger) re-parses
+          // with a synthesized COMMIT (so the same parse decodes its payload)
+          // but with the op marked so the merge QUARANTINES it — uncommitted
+          // data must never apply, even when the real COMMIT finally shows up
+          // after the eviction. Nothing vanishes and nothing loops: reason +
+          // full payload are browsable under this epoch, and a
+          // replayQuarantine with fix = strip the op prefix re-drives them if
+          // the operator establishes the transaction really committed.
+          // Deterministic on a retried batch (a pure function of raw + the
+          // retained stash/ledger of epoch-1), like the stash write above.
+          // Gate: the dual-parse plan is built only when THIS batch actually
+          // carries lines of an evicted txn — newly expired lines are in the
+          // carried stash by construction; otherwise (a live ledger but a
+          // clean batch, the common case after an eviction) one cheap
+          // membership probe keeps the plan the plain single-parse shape.
+          val evicting = expiredXids.nonEmpty || (prevXids.nonEmpty &&
+            !withPrev.filter(col("xid").isInCollection(prevXids)).isEmpty)
+          (expiredXids, evictedAll, evicting)
+        } finally sc.setJobDescription(prevLabel)
         val parsed = if (!evicting) parseFeed(withPrev) else {
           // isNull keeps the corrupt-row markers on the live path (their
           // quarantine reason is the parse's own, not the orphan mark);
@@ -884,17 +865,15 @@ object CdcRunner {
       // Path normalizes; a raw string with spaces would throw — the ledger
       // path is engine-derived (checkpointDir + fixed names), so keep simple
       new org.apache.hadoop.fs.Path(path).toString)
-    if (uri.getScheme == null) {
-      // scheme-less local path, kept verbatim: fsync + ATOMIC_MOVE. The
-      // process-crash ordering argument (torn ledger ⇒ uncommitted batch ⇒
-      // retry rewrites it) does not cover power loss, where the checkpoint
-      // commit can reach disk while an unforced ledger page does not —
-      // hence the explicit force(true) here. A scheme-QUALIFIED path (even
-      // file:) takes the Hadoop branch below, so that branch has real local
-      // test coverage standing in for hdfs://s3a:// checkpoints.
+    // a local path, scheme-less (kept verbatim) or file:, is written with
+    // fsync + ATOMIC_MOVE. Hadoop's file: FileSystem cannot stand in: its
+    // checksummed stream is not Syncable, so hsync() there is only a flush,
+    // and it leaves a `.<name>.crc` sibling the stash GC never sweeps. The
+    // Hadoop branch below is therefore reached only by remote checkpoints.
+    if (uri.getScheme == null || uri.getScheme == "file") {
       import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
-      Option(new java.io.File(path).getParentFile).foreach(_.mkdirs())
-      val target = Paths.get(path)
+      val target = Paths.get(if (uri.getScheme == null) path else uri.getPath)
+      Option(target.getParent).foreach(Files.createDirectories(_))
       val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
       val ch = java.nio.channels.FileChannel.open(tmp,
         StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
@@ -903,6 +882,9 @@ object CdcRunner {
         ch.write(java.nio.ByteBuffer.wrap(body.getBytes("UTF-8"))): Unit
         ch.force(true)
       } finally ch.close()
+      // a checksum an older build's Hadoop write left beside this name would
+      // not match the new body, and the file: read-back verifies it
+      Files.deleteIfExists(target.resolveSibling(s".${target.getFileName}.crc")): Unit
       Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING): Unit
     } else {

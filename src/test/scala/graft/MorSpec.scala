@@ -169,6 +169,32 @@ class MorSpec extends SparkSpec {
     assert(raw.filter(org.apache.spark.sql.functions.col("_deleted")).count() > 0)
   }
 
+  test("full load of a snapshot holding one key twice lands ONE row for it " +
+    "(CoW and MoR; SCD2 one current version)") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val seed = ChangeFeed.seedSnapshot(spark, 12)
+    val key = seed.select("doc_id").head().getString(0)
+    val snap = seed.unionByName(seed.filter(col("doc_id") === key)
+      .withColumn("source", lit("dup")))
+    for ((mode, merge) <- Seq(CdcMode.Upsert -> MergeStrategy.CopyOnWrite,
+        CdcMode.Upsert -> MergeStrategy.MergeOnRead,
+        CdcMode.Scd2 -> MergeStrategy.CopyOnWrite)) {
+      val root = tmpDir("graft-dupseed")
+      val cfg = RunnerConfig(
+        feedDir = s"$root/feed", tableDir = s"$root/table", checkpointDir = s"$root/cp",
+        job = JobConfig(mode = mode, merge = merge, buckets = 4))
+      val lake = CdcRunner.ensureTable(spark, cfg)
+      CdcRunner.fullLoad(spark, lake, snap, cfg)
+      val rows = lake.read(spark)
+      assert(rows.count() == 12, s"$mode/$merge: ${rows.collect().toSeq}")
+      assert(rows.filter(col("doc_id") === key).count() == 1, s"$mode/$merge")
+      assert(lake.lookup(spark, key).count() == 1, s"$mode/$merge lookup")
+      if (mode == CdcMode.Scd2)
+        assert(rows.filter(col("scd_current") === 1).count() == 12,
+          "every loaded key is one current version")
+    }
+  }
+
   test("MoR tombstone blocks out-of-order resurrection (same contract as CoW)") {
     val root = tmpDir("graft-mor-tomb")
     val cfg = RunnerConfig(

@@ -138,4 +138,21 @@ class NoEngineKnobSpec extends AnyFunSuite {
     assert(inLake.size == 1,
       s"lake/ must publish through ONE ATOMIC_MOVE (LakeTable.publish):\n${inLake.mkString("\n")}")
   }
+
+  /** One stored-row codec: `graft.lake.StoredRows` alone turns change events
+    * into stored rows (the engine columns `_lsn`/`_deleted`). The merge
+    * (`apply/`) and the runners (`runner/`) build none themselves: no
+    * `StructField`, `.as` or `withColumn` naming an engine column. Comment
+    * lines are not scanned. */
+  test("apply/ and runner/ build no stored row; graft.lake.StoredRows owns the layout") {
+    val storedRow =
+      """StructField\("_(?:lsn|deleted)"|\.as\("_(?:lsn|deleted)"\)|withColumn\("_(?:lsn|deleted)"""".r
+    val hits = Seq("apply", "runner").flatMap(d => scalaFiles(root.resolve(d))).flatMap { f =>
+      val text = read(f)
+      storedRow.findAllMatchIn(codeOnly(text)).map(m => located(f, text, m.start)).toSeq
+    }
+    assert(hits.isEmpty,
+      s"${hits.size} stored-row build(s) outside graft.lake.StoredRows:\n${hits.mkString("\n")}")
+    assert(storedRow.findAllMatchIn(read(root.resolve("lake/StoredRows.scala"))).nonEmpty)
+  }
 }

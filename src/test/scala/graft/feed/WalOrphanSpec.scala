@@ -1,5 +1,7 @@
 package graft.feed
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -291,18 +293,20 @@ class WalOrphanSpec extends SparkSpec {
     CdcRunner.writeEvictionLedger(spark, path, ledger)
     assert(CdcRunner.readEvictionLedger(spark, path, 7L) == ledger)
     // the scheme-qualified spelling of the SAME local dir must round-trip
-    // through the Hadoop branch too — that branch is what a cluster
-    // checkpoint (hdfs://, s3a://) exercises, where a java.io.File probe
+    // too: file: is written like the scheme-less path (fsync + ATOMIC_MOVE)
+    // and read back through the path's own Hadoop FileSystem, the probe a
+    // cluster checkpoint (hdfs://, s3a://) takes, where a java.io.File probe
     // would silently read nothing
     val qualified = s"file:$root/stash/evicted=8"
     CdcRunner.writeEvictionLedger(spark, qualified, ledger)
     assert(CdcRunner.readEvictionLedger(spark, qualified, 8L) == ledger)
     assert(CdcRunner.readEvictionLedger(spark, s"$root/stash/evicted=8", 8L)
       == ledger, "scheme-less read of the scheme-qualified write")
-    // the fsync+ATOMIC_MOVE recipe must leave no staging file behind — a
-    // stale .tmp would survive the epoch GC sweep forever
+    // the fsync+ATOMIC_MOVE recipe must leave no staging file and no
+    // Hadoop checksum sibling behind — either would survive the epoch GC
+    // sweep forever
     val residue = new java.io.File(s"$root/stash").listFiles().map(_.getName)
-      .filter(_.endsWith(".tmp"))
+      .filter(n => n.endsWith(".tmp") || n.endsWith(".crc"))
     assert(residue.isEmpty, residue.toSeq.toString)
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       "123 5\ntorn-line-no-space\n".getBytes("UTF-8"))
@@ -310,5 +314,50 @@ class WalOrphanSpec extends SparkSpec {
       CdcRunner.readEvictionLedger(spark, path, 7L))
     assert(e.getMessage.contains("eviction ledger"), e.getMessage)
     assert(e.getMessage.contains("torn-line-no-space"), e.getMessage)
+  }
+
+  test("the wal: pending-stash job label is scoped to the stash block: no " +
+    "job after the batch's first merge: job carries it, the maintenance " +
+    "tick's compaction included") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val root = tmpDir("graft-wallabel")
+    writeFiles(root, Seq(
+      Seq(Row(1L, 30L, "BEGIN 30"), dml(2L, 30L, "d-a", 3), dml(3L, 30L, "d-b", 4),
+        Row(4L, 30L, "COMMIT 30"))))
+    val cfg0 = cfgFor(root)
+    val cfg = cfg0.copy(job = cfg0.job.copy(merge = MergeStrategy.MergeOnRead),
+      autoCompactEveryEpochs = 1, autoCompactMaxDeltaFiles = 1)
+    val sc = spark.sparkContext
+    val marker = s"graft-wallabel-marker-${System.nanoTime()}"
+    val labels = new java.util.concurrent.ConcurrentSkipListMap[Int, String]()
+    @volatile var markerDone = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        labels.put(e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (labels.get(e.jobId) == marker) markerDone = true
+    }
+    sc.addSparkListener(listener)
+    try {
+      CdcRunner.startFromWal(spark, cfg, "corpus", "documents").awaitTermination()
+      // the listener sees events in order: once the marker job posted its
+      // end, every job of the drain has been recorded
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      eventually(timeout(30.seconds))(assert(markerDone))
+    } finally sc.removeSparkListener(listener)
+    val lake = new graft.lake.LakeTable(cfg.tableDir)
+    assert(lake.read(spark).count() == 2)
+    assert(lake.manifest.metrics.getOrElse("compactions", 0L) >= 1L,
+      "the maintenance tick must have compacted the delta commit")
+    val ordered = labels.values.asScala.toSeq.filterNot(_ == marker)
+    assert(ordered.exists(_.startsWith("wal:")), ordered.toString)
+    val firstMerge = ordered.indexWhere(_.startsWith("merge:"))
+    assert(firstMerge >= 0, ordered.toString)
+    val leaked = ordered.drop(firstMerge).filter(_.startsWith("wal:"))
+    assert(leaked.isEmpty, s"jobs after the first merge: job labelled wal: $ordered")
   }
 }
