@@ -37,8 +37,8 @@ object StoredRows {
   private def payload(m: Manifest): Seq[GraftField] =
     m.currentSchema.fields.filterNot(f => f.name.startsWith("_") || m.scdCols.contains(f.name))
 
-  /** Project change events onto `m`'s payload, in table order, plus `op`,
-    * `lsn` and `ts`: a payload column the events lack (an older schema_ver)
+  /** Project change events onto `op`, `lsn`, `ts` and then `m`'s payload in
+    * table order: a payload column the events lack (an older schema_ver)
     * is null-filled, a widened one is cast — the reference's per-batch
     * null-fill of missing source columns (trempy/Tables/Table.py:73-100).
     * ONE select, not a withColumn per field: each withColumn stacks another
@@ -52,7 +52,7 @@ object StoredRows {
         case None => lit(null).cast(f.dataType).as(f.name)
       }
     }
-    events.select(cols ++ Seq(ChangeEvent.OP, ChangeEvent.LSN, ChangeEvent.TS).map(col): _*)
+    events.select(Seq(ChangeEvent.OP, ChangeEvent.LSN, ChangeEvent.TS).map(col) ++ cols: _*)
   }
 
   /** Aligned change events → stored rows of `m`. Last-writer-wins: a DELETE

@@ -661,6 +661,76 @@ object CdcRunner {
           readEvictionLedger(spark, s"$stashRoot/evicted=${epoch - 1}", epoch - 1)
             .filter(_._2 > epoch - ledgerRetention)
         val prevXids = ledgerPrev.map(_._1).toSet
+        // the stash block's jobs (the aggregate below, the stash write and
+        // the eviction probe) carry a `wal:` label; the caller's label is
+        // restored before the merge, so neither the merge's jobs nor the
+        // maintenance tick's inherit it
+        val sc = spark.sparkContext
+        val prevLabel = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(s"wal: pending stash (epoch $epoch)")
+        // ONE aggregate job on the (cached) pending lines yields the row
+        // count AND the expired-xid set together — previously a separate
+        // distinct+collect probe preceded the stash write, and the write ran
+        // even when pending was EMPTY (the steady state: whole txns per
+        // batch), paying a full parquet-committer job to record nothing.
+        // The xid set stays driver-bounded: per-TXN xids of a rare
+        // producer-wedge event, not rows (collect_set drops the when's
+        // nulls, so only aged-out lines contribute). Fresh rows enter at
+        // AGE=0 and maxAge >= 1, so without a carried stash the set is
+        // provably empty — same gate as the old probe, now free.
+        val pendingAgg = pending.groupBy().agg(
+          count(lit(1)).as("n"),
+          collect_set(when(col(AGE) >= math.max(maxAge, 1), col("xid")))
+            .as("aged")).head()
+        val nPending = pendingAgg.getLong(0)
+        val expiredXids: Seq[Long] =
+          if (maxAge <= 0 || !prevStashExists) Seq.empty
+          else pendingAgg.getSeq[Long](1).distinct
+            .filterNot(prevXids).sorted.toSeq
+        val ledger = ledgerPrev ++ expiredXids.map(x => (x, epoch))
+        val evictedAll = prevXids ++ expiredXids
+        // written BEFORE the merge, like the stash: a retried batch
+        // re-derives the identical ledger from retained inputs. Not written
+        // when empty — the steady state after retention pruning carries no
+        // ledger and pays nothing.
+        if (ledger.nonEmpty)
+          writeEvictionLedger(spark, s"$stashRoot/evicted=$epoch", ledger)
+        // evicted txns never stash (their lines quarantine the batch they
+        // arrive in); null-xid corrupt markers are already excluded by the
+        // filter above, and pending's xids are non-null so the negated
+        // membership predicate has no three-valued-logic trap.
+        // An EMPTY pending set writes no parquet at all (and on a retry:
+        // emptiness is a pure function of the retained batch + stash(N-1) +
+        // ledger(N-1), so a replayed epoch re-derives it identically). Two
+        // empty shapes:
+        //  - a carried stash DRAINED this epoch: supersede it with a
+        //    driver-side EMPTY-marker dir (two metadata ops, no Spark job) —
+        //    the newest epoch dir must always be the live carry-out, or the
+        //    stale predecessor reads as "txn still circling" one epoch after
+        //    it resolved (the stash specs pin this observable);
+        //  - steady state (no carry-in): write nothing, probe nothing.
+        // The delete is belt-and-braces for dirs from older builds/attempts.
+        if (nPending == 0) {
+          val p = new org.apache.hadoop.fs.Path(s"$stashRoot/epoch=$epoch")
+          if (isHadoopDir(stashFs, p)) stashFs.delete(p, true): Unit
+          if (prevStashExists) {
+            stashFs.mkdirs(p): Unit
+            stashFs.create(
+              new org.apache.hadoop.fs.Path(p, EMPTY_STASH), true).close()
+          }
+        } else {
+          // bounded file count: the carry-over is usually a handful of
+          // straggler lines — one ~500k-line file per task beats one file
+          // per upstream partition (coalesce: no extra shuffle)
+          val stashParts = math.max(1L, math.min(
+            nPending / 500000L + 1L, para.toLong)).toInt
+          (if (evictedAll.nonEmpty)
+            pending.filter(!col("xid").isInCollection(evictedAll))
+           else pending)
+            .withColumn(AGE, col(AGE) + 1)
+            .coalesce(stashParts)
+            .write.mode("overwrite").parquet(s"$stashRoot/epoch=$epoch")
+        }
         // with a schema registry, one stream parses EVERY registered payload
         // version (the wire format carries column names inline): per-row
         // version detection + rename/widen normalization, so a batch mixing
@@ -668,95 +738,25 @@ object CdcRunner {
         // (version-1) payload in that case. Without one it is the plain parse.
         def parseFeed(df: DataFrame) = WalParser.parseVersionedForTable(df,
           cfg.payloadSchema, cfg.schemaRegistry, schemaName, tableName)
-        // the stash block's jobs carry a `wal:` label, scoped to the block:
-        // the merge and the maintenance tick after it must not inherit it
-        val sc = spark.sparkContext
-        val prevLabel = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(s"wal: pending stash (epoch $epoch)")
-        val (expiredXids, evictedAll, evicting) = try {
-          // ONE aggregate job on the (cached) pending lines yields the row
-          // count AND the expired-xid set together — previously a separate
-          // distinct+collect probe preceded the stash write, and the write ran
-          // even when pending was EMPTY (the steady state: whole txns per
-          // batch), paying a full parquet-committer job to record nothing.
-          // The xid set stays driver-bounded: per-TXN xids of a rare
-          // producer-wedge event, not rows (collect_set drops the when's
-          // nulls, so only aged-out lines contribute). Fresh rows enter at
-          // AGE=0 and maxAge >= 1, so without a carried stash the set is
-          // provably empty — same gate as the old probe, now free.
-          val pendingAgg = pending.groupBy().agg(
-            count(lit(1)).as("n"),
-            collect_set(when(col(AGE) >= math.max(maxAge, 1), col("xid")))
-              .as("aged")).head()
-          val nPending = pendingAgg.getLong(0)
-          val expiredXids: Seq[Long] =
-            if (maxAge <= 0 || !prevStashExists) Seq.empty
-            else pendingAgg.getSeq[Long](1).distinct
-              .filterNot(prevXids).sorted.toSeq
-          val ledger = ledgerPrev ++ expiredXids.map(x => (x, epoch))
-          val evictedAll = prevXids ++ expiredXids
-          // written BEFORE the merge, like the stash: a retried batch
-          // re-derives the identical ledger from retained inputs. Not written
-          // when empty — the steady state after retention pruning carries no
-          // ledger and pays nothing.
-          if (ledger.nonEmpty)
-            writeEvictionLedger(spark, s"$stashRoot/evicted=$epoch", ledger)
-          // evicted txns never stash (their lines quarantine the batch they
-          // arrive in); null-xid corrupt markers are already excluded by the
-          // filter above, and pending's xids are non-null so the negated
-          // membership predicate has no three-valued-logic trap.
-          // An EMPTY pending set writes no parquet at all (and on a retry:
-          // emptiness is a pure function of the retained batch + stash(N-1) +
-          // ledger(N-1), so a replayed epoch re-derives it identically). Two
-          // empty shapes:
-          //  - a carried stash DRAINED this epoch: supersede it with a
-          //    driver-side EMPTY-marker dir (two metadata ops, no Spark job) —
-          //    the newest epoch dir must always be the live carry-out, or the
-          //    stale predecessor reads as "txn still circling" one epoch after
-          //    it resolved (the stash specs pin this observable);
-          //  - steady state (no carry-in): write nothing, probe nothing.
-          // The delete is belt-and-braces for dirs from older builds/attempts.
-          if (nPending == 0) {
-            val p = new org.apache.hadoop.fs.Path(s"$stashRoot/epoch=$epoch")
-            if (isHadoopDir(stashFs, p)) stashFs.delete(p, true): Unit
-            if (prevStashExists) {
-              stashFs.mkdirs(p): Unit
-              stashFs.create(
-                new org.apache.hadoop.fs.Path(p, EMPTY_STASH), true).close()
-            }
-          } else {
-            // bounded file count: the carry-over is usually a handful of
-            // straggler lines — one ~500k-line file per task beats one file
-            // per upstream partition (coalesce: no extra shuffle)
-            val stashParts = math.max(1L, math.min(
-              nPending / 500000L + 1L, para.toLong)).toInt
-            (if (evictedAll.nonEmpty)
-              pending.filter(!col("xid").isInCollection(evictedAll))
-             else pending)
-              .withColumn(AGE, col(AGE) + 1)
-              .coalesce(stashParts)
-              .write.mode("overwrite").parquet(s"$stashRoot/epoch=$epoch")
-          }
-          // ORPHAN EVICTION: every line of an evicted txn in this batch (aged
-          // out of the stash, or a late arrival matching the ledger) re-parses
-          // with a synthesized COMMIT (so the same parse decodes its payload)
-          // but with the op marked so the merge QUARANTINES it — uncommitted
-          // data must never apply, even when the real COMMIT finally shows up
-          // after the eviction. Nothing vanishes and nothing loops: reason +
-          // full payload are browsable under this epoch, and a
-          // replayQuarantine with fix = strip the op prefix re-drives them if
-          // the operator establishes the transaction really committed.
-          // Deterministic on a retried batch (a pure function of raw + the
-          // retained stash/ledger of epoch-1), like the stash write above.
-          // Gate: the dual-parse plan is built only when THIS batch actually
-          // carries lines of an evicted txn — newly expired lines are in the
-          // carried stash by construction; otherwise (a live ledger but a
-          // clean batch, the common case after an eviction) one cheap
-          // membership probe keeps the plan the plain single-parse shape.
-          val evicting = expiredXids.nonEmpty || (prevXids.nonEmpty &&
-            !withPrev.filter(col("xid").isInCollection(prevXids)).isEmpty)
-          (expiredXids, evictedAll, evicting)
-        } finally sc.setJobDescription(prevLabel)
+        // ORPHAN EVICTION: every line of an evicted txn in this batch (aged
+        // out of the stash, or a late arrival matching the ledger) re-parses
+        // with a synthesized COMMIT (so the same parse decodes its payload)
+        // but with the op marked so the merge QUARANTINES it — uncommitted
+        // data must never apply, even when the real COMMIT finally shows up
+        // after the eviction. Nothing vanishes and nothing loops: reason +
+        // full payload are browsable under this epoch, and a
+        // replayQuarantine with fix = strip the op prefix re-drives them if
+        // the operator establishes the transaction really committed.
+        // Deterministic on a retried batch (a pure function of raw + the
+        // retained stash/ledger of epoch-1), like the stash write above.
+        // Gate: the dual-parse plan is built only when THIS batch actually
+        // carries lines of an evicted txn — newly expired lines are in the
+        // carried stash by construction; otherwise (a live ledger but a
+        // clean batch, the common case after an eviction) one cheap
+        // membership probe keeps the plan the plain single-parse shape.
+        val evicting = expiredXids.nonEmpty || (prevXids.nonEmpty &&
+          !withPrev.filter(col("xid").isInCollection(prevXids)).isEmpty)
+        sc.setJobDescription(prevLabel)
         val parsed = if (!evicting) parseFeed(withPrev) else {
           // isNull keeps the corrupt-row markers on the live path (their
           // quarantine reason is the parse's own, not the orphan mark);
