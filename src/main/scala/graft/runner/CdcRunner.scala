@@ -293,7 +293,7 @@ object CdcRunner {
     * shape (parseVersioned folds rename chains and casts widened fields), so
     * the lake must hold the latest schema from the FIRST batch: merging a
     * v1-only batch (every batch before the first v2 row arrives) against a
-    * lake still carrying a renamed column's old name would make alignToSchema
+    * lake still carrying a renamed column's old name would make StoredRows.align
     * null-fill the new name and silently drop all pre-evolution values of that
     * column. Apply ALL registry versions eagerly at stream start — the parse
     * side already committed to the latest shape, so the lake side must too.

@@ -357,7 +357,7 @@ class EnvelopeSpec extends SparkSpec {
   test("rename registry + v1-only first batch: pre-evolution values survive") {
     // Every batch before the first v2 row arrives contains only v1 rows. The
     // versioned parse folds them to the LATEST column names (source→origin),
-    // so the lake must evolve eagerly at stream start — otherwise alignToSchema
+    // so the lake must evolve eagerly at stream start — otherwise StoredRows.align
     // null-fills `origin` and all pre-evolution source values commit as NULL.
     import graft.lake.{AddColumn, RenameColumn}
     def msg(createdAt: Long, ops: String): String =
