@@ -42,12 +42,12 @@ object MergeApply {
   val QUARANTINE_REASON = "_error_reason"
 
   /** Op prefix marking a WAL transaction evicted by timeout
-    * ([[graft.runner.CdcRunner.startFromWal]] orphan eviction). Quarantine IS
-    * the intended destination for these rows, so they are excluded from the
+    * ([[graft.feed.WalTransactions]] orphan eviction). Quarantine IS the
+    * intended destination for these rows, so they are excluded from the
     * `stop_if_*_error` escalation below: eviction is a deterministic function
-    * of the retained stash, and a stop here would re-fail identically on
-    * every restart — permanently wedging the stream the eviction exists to
-    * un-wedge. */
+    * of the operator state the replayed batch restores, and a stop here
+    * would re-fail identically on every restart — permanently wedging the
+    * stream the eviction exists to un-wedge. */
   val ORPHANED_OP_PREFIX = "orphaned_txn:"
 
   /** The full-load snapshot's sentinel epoch ([[graft.runner.CdcRunner

@@ -122,24 +122,30 @@ object WalParser {
     parseCore(raw, payload, _ => lit(schemaVer), tsOfLsn)
 
 
-  /** Distinct xids whose COMMIT line is present. The xid comes from the slot
-    * row's xid column, falling back to the COMMIT line's own text
-    * (`COMMIT 1234` — test_decoding include-xids) when that column is NULL:
-    * a corrupt commit slot row is quarantined as a marker like any other
-    * corrupt line, but the line text is what the decoder emitted and is
-    * authoritative — without the fallback it would silently orphan its
-    * whole transaction (the DML re-stashed forever, never applied, never
-    * quarantined). Shared by the parse's committed-only semi-join and the
-    * runner's pending-stash anti-join so the two joins can never disagree
-    * about which transactions committed. */
-  private[graft] def commitXids(raw: DataFrame): DataFrame = {
+  private val CommitPrefix = "COMMIT"
+
+  /** A COMMIT line: its transaction is complete. */
+  private[graft] def isCommitLine(data: String): Boolean =
+    data != null && data.startsWith(CommitPrefix)
+
+  /** The transaction a slot row belongs to: its xid column, else the xid in
+    * the COMMIT line's own text (`COMMIT 1234`, test_decoding include-xids).
+    * The text is authoritative: without it a corrupt commit row (quarantined
+    * as a marker) would orphan its whole transaction. NULL for any other
+    * NULL-xid line. The one definition behind the parse's committed-only
+    * semi-join ([[commitXids]]) and the grouping key of [[WalTransactions]]. */
+  private[graft] val txnOf: Column = {
     val fromText = regexp_extract(col("data"), "^COMMIT\\s+(\\d+)", 1)
-    raw.filter(col("data").startsWith("COMMIT"))
-      .select(coalesce(col("xid"),
-        when(length(fromText) > 0, fromText.cast(LongType))).as("xid"))
+    coalesce(col("xid"), when(length(fromText) > 0, fromText.cast(LongType)))
+  }
+
+  /** Distinct xids whose COMMIT line is present ([[txnOf]] of each COMMIT
+    * line). */
+  private[graft] def commitXids(raw: DataFrame): DataFrame =
+    raw.filter(col("data").startsWith(CommitPrefix))
+      .select(txnOf.as("xid"))
       .filter(col("xid").isNotNull)
       .distinct()
-  }
 
   private def parseCore(
       raw: DataFrame,
@@ -148,6 +154,9 @@ object WalParser {
       tsOfLsn: Column => Column): DataFrame = {
     // committed transactions: xids that produced a COMMIT line
     val commits = commitXids(raw)
+    // lines of a transaction evicted by timeout ([[WalTransactions]]) parse
+    // like any other, with the op marked so the merge quarantines them
+    val orphan = if (raw.columns.contains("_orphan")) col("_orphan") else lit(false)
     // ONE materialized layer per regex pass, TWO passes per line total
     // (line match + tuple tokenize, both single-expression natives —
     // [[graft.functions.WalLine]] / [[graft.functions.WalTokens]]): the
@@ -175,7 +184,8 @@ object WalParser {
     // the old per-field cleanToken column tree, fused into the same pass.
     val lined = raw
       .select(col("lsn"), col("xid"),
-        graft.functions.WalTokens.wal_line(col("data")).as("_ln"))
+        graft.functions.WalTokens.wal_line(col("data")).as("_ln"),
+        orphan.as("_orphan"))
       .filter(col("_ln").isNotNull)
       .join(commits, Seq("xid"), "left_semi")
     val tokenized = lined.select(
@@ -184,6 +194,7 @@ object WalParser {
       col("_ln.schema").as("_schema"),
       col("_ln.table").as("_table"),
       col("_ln.rest").isNull.as("_truncated"),
+      col("_orphan"),
       graft.functions.WalTokens.wal_tokens(col("_ln.rest")).as("_kv"))
     val kv = col("_kv")
     val typedPayload = payload.fields.toSeq.map { f =>
@@ -197,24 +208,26 @@ object WalParser {
     val truncated = col("_truncated")
     def orNull(c: Column): Column =
       when(truncated, lit(null).cast(StringType)).otherwise(c)
+    def orphanMarked(op: Column): Column =
+      when(col("_orphan"), concat(lit(graft.apply.MergeApply.ORPHANED_OP_PREFIX), op))
+        .otherwise(op)
     val parsed = tokenized.select(Seq(
       col("lsn"),
       col("xid").as(graft.model.ChangeEvent.TXN_ID),
       tsOfLsn(col("lsn")).as(graft.model.ChangeEvent.TS),
-      orNull(upper(col("_op"))).as(graft.model.ChangeEvent.OP),
+      orphanMarked(orNull(upper(col("_op")))).as(graft.model.ChangeEvent.OP),
       verOf(m => map_contains_key(kv, m)).as(graft.model.ChangeEvent.SCHEMA_VER),
       orNull(col("_schema")).as("schema_name"),
       orNull(col("_table")).as("table_name")) ++ typedPayload: _*)
 
     // Slot rows with a NULL xid or NULL data are CORRUPTION — the slot-read
     // shape declares both non-null, but file sources don't enforce
-    // nullability. Every join in this parse (and the runner's pending stash)
-    // keys on xid, where NULL never matches: a bare parse would drop such a
-    // line with no quarantine and no count, the exact silent vanishing the
-    // envelope wire's corrupt-message marker exists to prevent. Same
-    // contract here: one null-op marker row per corrupt line (lsn/xid kept
-    // for inspection) that the merge's quarantine split records as
-    // unknown_op.
+    // nullability. Every join in this parse keys on xid, where NULL never
+    // matches: a bare parse would drop such a line with no quarantine and no
+    // count, the exact silent vanishing the envelope wire's corrupt-message
+    // marker exists to prevent. Same contract here: one null-op marker row
+    // per corrupt line (lsn/xid kept for inspection) that the merge's
+    // quarantine split records as unknown_op.
     val markers = raw.filter(col("xid").isNull || col("data").isNull)
       .select(Seq(
         col("lsn"),

@@ -54,8 +54,8 @@ object TaskSettings {
       autoRescaleMaxGroups: Int,
       /** engine extension (cdc_settings.wal_orphan_epochs): a WAL txn whose
         * COMMIT has not arrived after this many micro-batches is evicted
-        * whole from the pending stash to quarantine (payload parsed,
-        * replay-drainable); 0 stashes forever. */
+        * whole to quarantine (payload parsed, replay-drainable); 0 lets it
+        * wait forever. */
       walOrphanEpochs: Int,
       scdCols: ScdCols,
       errorPolicy: ErrorPolicy,

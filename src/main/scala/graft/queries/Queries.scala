@@ -834,12 +834,12 @@ object Queries {
 
     // §2.1 S2 (DLX): the same corruption contract on the RAW WAL wire — a
     // NULL-xid and a NULL-data slot row (file sources do not enforce the
-    // shape's declared nullability). Both xid joins (the parse's committed
-    // semi-join, the runner's pending-stash anti-join) evaluate NULL ⇒ no
-    // match: a bare parse would neither apply nor quarantine such a line
-    // while the stash re-carried it FOREVER, re-quarantining a fresh copy
-    // every epoch. Two micro-batches (maxFilesPerTrigger=1, txn-aligned
-    // files) drive the stash path; the final state, exactly two unknown_op
+    // shape's declared nullability). The xid join of the parse's committed
+    // semi-join evaluates NULL ⇒ no match, so a bare parse would neither
+    // apply nor quarantine such a line, and a transaction buffer holding it
+    // would re-carry it FOREVER, re-quarantining a fresh copy every epoch.
+    // Two micro-batches (maxFilesPerTrigger=1, txn-aligned files) drive the
+    // transaction operator across batches; the final state, exactly two unknown_op
     // quarantine rows, and events_received are oracle-exact — the SAME
     // oracle as the envelope poison query, because both wires promise the
     // identical contract.
@@ -855,7 +855,7 @@ object Queries {
           "INSERT: doc_id[character varying]:'d-ghost' n_tok[integer]:1"),
         org.apache.spark.sql.Row(9999992L, 999777L, null)), 1), shape)
       // txn-aligned split: eid<1000 ⇔ xid<200, so neither file cuts a txn;
-      // the poison rides file 1, file 2's batch then unions the stash
+      // the poison rides file 1, file 2's batch then visits the operator state
       val firstHalf = col("xid") < 200
       wal.filter(firstHalf).unionByName(poison)
         .coalesce(1).write.parquet(s"$root/feed")
@@ -878,8 +878,8 @@ object Queries {
     }),
 
     // §2.1 S2 (orphan eviction): a transaction whose COMMIT never arrives —
-    // a wedged producer, a lost commit record — must neither loop in the
-    // pending stash forever nor vanish: after walOrphanEpochs micro-batches
+    // a wedged producer, a lost commit record — must neither wait in the
+    // operator state forever nor vanish: after walOrphanEpochs micro-batches
     // it evicts WHOLE to quarantine with its payload fully parsed
     // (replayQuarantine-drainable) and is counted once by the delivery
     // audit. Two orphan INSERTs ride file 1 of a three-file txn-aligned

@@ -45,23 +45,18 @@ case class RunnerConfig(
     /** bucket groups migrated per maintenance tick while a rescale is in
       * flight — bounds one tick's physical rewrite. */
     autoRescaleMaxGroups: Int = 4,
-    /** WAL wire only: a line whose COMMIT has not arrived after this many
-      * micro-batches is EVICTED from the pending stash to quarantine
-      * (reason `unknown_op: orphaned_txn:<op>`, payload fully parsed, so
-      * nothing is lost and replayQuarantine can re-drive it) instead of
-      * being re-copied forever. Eviction is per TRANSACTION and sticky: an
-      * evicted xid is remembered in a ledger, so lines of that txn arriving
-      * in LATER batches — including its COMMIT — also quarantine rather
-      * than tear the txn across lake state and quarantine. Logical decoding
-      * emits whole transactions, so only feed corruption (an unrecoverable
-      * COMMIT slot row) or a producer wedge can orphan lines this long;
-      * size it above the longest legitimate txn-spanning-files window
-      * (default 16 batches ≈ 64 files at the default maxFilesPerTrigger).
-      * Ledger entries expire 64 orphan windows after their eviction —
-      * long past any plausible straggler, far before a wrapped 32-bit xid
-      * could reuse the number. 0 disables NEW evictions; a ledger already
-      * written by earlier runs is still honored (its stickiness guards
-      * transactions already half-quarantined, not current policy). */
+    /** WAL wire only: a transaction whose COMMIT has not arrived after this
+      * many micro-batches is EVICTED whole to quarantine (reason
+      * `unknown_op: orphaned_txn:<op>`, payload fully parsed, so nothing is
+      * lost and replayQuarantine can re-drive it) instead of waiting in the
+      * operator state forever. Eviction is sticky: lines of that txn arriving
+      * LATER, its COMMIT included, quarantine too rather than tear the txn
+      * across lake state and quarantine. Logical decoding emits whole
+      * transactions, so only feed corruption (an unrecoverable COMMIT slot
+      * row) or a producer wedge can orphan lines this long; size it above the
+      * longest legitimate txn-spanning-files window (default 16 batches ≈ 64
+      * files at the default maxFilesPerTrigger). 0 disables NEW evictions;
+      * earlier evictions stay sticky. See [[graft.feed.WalTransactions]]. */
     walOrphanEpochs: Int = 16)
 
 object CdcRunner {
@@ -413,17 +408,28 @@ object CdcRunner {
     * checkpoint, `foreachBatch` and the trigger choice (AvailableNow drain vs
     * the reference's `interval_seconds` cadence as a ProcessingTime trigger).
     * Live progress is Spark's own `StreamingQuery.recentProgress`; the
-    * per-epoch stats are the lineage record every commit writes. */
+    * per-epoch stats are the lineage record every commit writes.
+    *
+    * Every query runs without no-data micro-batches: the WAL transaction
+    * operator's processing-time timeout asks for one on every trigger, each
+    * committing an empty lake epoch, and stateless queries never ask. The
+    * offset log does not record the setting, so it is set at every start. */
   private[runner] def launch(kind: String, source: DataFrame, checkpointDir: String,
       availableNow: Boolean, intervalSeconds: Int)(
-      body: (DataFrame, Long) => Unit): StreamingQuery =
-    source.writeStream
+      body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val conf = source.sparkSession.conf
+    val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+    val callerNoData = conf.getOption(noData)
+    conf.set(noData, "false")
+    try source.writeStream
       .queryName(s"graft-$kind-${java.util.UUID.randomUUID().toString.take(8)}")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(body)
       .trigger(if (availableNow) Trigger.AvailableNow()
                else Trigger.ProcessingTime(s"$intervalSeconds seconds"))
       .start()
+    finally callerNoData.fold(conf.unset(noData))(conf.set(noData, _))
+  }
 
   /** Start the streaming query (continuous tail). `intervalSeconds` is the
     * reference's producer cadence (task/settings.json interval_seconds,
@@ -529,383 +535,65 @@ object CdcRunner {
    * Feed contract: PostgreSQL logical decoding only ever emits committed,
    * complete transactions per slot read, but NO file alignment is assumed —
    * a producer may cut files mid-transaction, and `maxFilesPerTrigger` can
-   * cut a micro-batch between a transaction's files either way. Lines whose
-   * COMMIT has not arrived yet are carried forward in an epoch-keyed stash
-   * under the checkpoint (see the foreachBatch body) and merge with the
-   * batch that completes them; WalStashPropertySpec drives arbitrary splits.
-   * A transaction never completed within `cfg.walOrphanEpochs` micro-batches
-   * is evicted WHOLE to quarantine (payload parsed, reason
-   * `unknown_op: orphaned_txn:<op>`, replayQuarantine-drainable) so a lost
-   * COMMIT can neither wedge the stash forever nor vanish silently; an
-   * evicted xid stays in a carried-forward ledger, so any LATER arrival of
-   * that txn (straggler lines, even the COMMIT itself) joins it in
+   * cut a micro-batch between a transaction's files either way. A line
+   * whose COMMIT has not arrived yet waits in Spark's operator state
+   * ([[graft.feed.WalTransactions]], committed with the offset log) and
+   * merges with the batch that completes its transaction;
+   * WalStashPropertySpec drives arbitrary splits. A transaction never
+   * completed within `cfg.walOrphanEpochs` micro-batches is evicted WHOLE to
+   * quarantine (payload parsed, reason `unknown_op: orphaned_txn:<op>`,
+   * replayQuarantine-drainable) so a lost COMMIT can neither wait forever
+   * nor vanish silently; an evicted xid keeps a mark, so any LATER arrival
+   * of that txn (straggler lines, even the COMMIT itself) joins it in
    * quarantine instead of tearing the transaction in half.
    */
   def startFromWal(
       spark: SparkSession, cfg: RunnerConfig,
       schemaName: String, tableName: String,
       availableNow: Boolean = true, intervalSeconds: Int = 5): StreamingQuery = {
-    import graft.feed.WalParser
+    import graft.feed.{WalParser, WalTransactions}
+    refuseStashCheckpoint(spark, cfg.checkpointDir)
     val (lake, runCfg) = wirePrelude(spark, cfg)
     val stream = spark.readStream
       .schema(WalParser.rawSchema)
       .option("maxFilesPerTrigger", cfg.maxFilesPerTrigger)
       .parquet(cfg.feedDir)
-    val stashRoot = s"${cfg.checkpointDir}/wal-pending"
-    launch("wal", stream, cfg.checkpointDir, availableNow, intervalSeconds) {
-      (raw0: DataFrame, epoch: Long) =>
-        // The WAL parse is CPU-heavy (regex tokenizer per line) and its scan
-        // stage's parallelism is the batch's FILE count — with
-        // maxFilesPerTrigger in the single digits most cores sit idle for
-        // the most expensive stage of the pipeline. Spread the raw lines
-        // across the cluster first (guide: repartition immediately after a
-        // low-split read); the batch is bounded by maxFilesPerTrigger, so
-        // the extra shuffle is one pass over at most a few files' lines,
-        // and sort-before-repartition (default on) keeps the row→partition
-        // assignment deterministic under task retry — required by the
-        // stash/ledger replay contract below. Scale-adaptive BOTH ways:
-        // width derives from the batch's actual BYTES (driver file listing,
-        // ~16 MB of slot text per parse task), capped at the session's core
-        // count — a GB-file batch spreads across every core, while a few-KB
-        // batch skips the shuffle entirely instead of paying a
-        // core-count-wide stage for rows that fit one task (the guide's
-        // "derive from input size, not a constant tuned for either local
-        // mode or the cluster").
-        val para = spark.sparkContext.defaultParallelism
-        val parts0 = raw0.rdd.getNumPartitions
-        val raw = if (parts0 >= math.max(1, para / 2)) raw0 else {
-          val bytes = scala.util.Try(
-            raw0.inputFiles.toSeq.map { f =>
-              val (fs, p) = hadoopFs(spark, f)
-              fs.getFileStatus(p).getLen
-            }.sum).getOrElse(Long.MaxValue) // unknown size: assume big
-          val want = math.min(para.toLong,
-            math.max(1L, bytes / (16L << 20) + 1L)).toInt
-          if (parts0 >= want) raw0 else raw0.repartition(want)
-        }
-        // Transactions SPLIT across micro-batches: test_decoding emits whole
-        // BEGIN..COMMIT blocks, but the file feed (and maxFilesPerTrigger)
-        // can cut a batch mid-transaction — the parser's committed-only
-        // semi-join would then drop the txn's DML FOREVER (its COMMIT lands
-        // in a later batch that no longer carries the rows). Carry
-        // not-yet-committed lines forward in an epoch-keyed stash: batch N
-        // unions stash(N-1), parses the xids whose COMMIT is present, and
-        // stashes the rest as stash(N). Epoch-keyed (not a single rolling
-        // file) so a RETRIED batch re-reads the same carry-in it saw the
-        // first time; written BEFORE the merge so a crash between stash and
-        // commit replays identically.
-        val AGE = "_stash_age" // epochs a stashed line has already waited
-        val rawCols = WalParser.rawSchema.fieldNames.toSeq.map(col)
-        // the stash lives under the streaming CHECKPOINT dir, which on a
-        // cluster is HDFS/object-store: probe through the path's OWN
-        // FileSystem, never java.io.File — a local-File probe on a remote
-        // checkpoint is always false, which would silently disable the
-        // carry-in (every split transaction's DML dropped, no error)
-        val (stashFs, stashRootP) = hadoopFs(spark, stashRoot)
-        val prevStashP =
-          new org.apache.hadoop.fs.Path(s"$stashRoot/epoch=${epoch - 1}")
-        // an EMPTY-marker dir (written below when a carried stash drains to
-        // nothing) reads as "no carry-in": it supersedes the previous
-        // epoch's dir — the newest epoch dir is the observable live
-        // carry-out, which operators and the stash specs read directly —
-        // without paying a Spark parquet job to record zero rows (the
-        // steady-state dir simply doesn't exist and skips both probes)
-        val prevStashExists = isHadoopDir(stashFs, prevStashP) &&
-          !stashFs.exists(new org.apache.hadoop.fs.Path(prevStashP, EMPTY_STASH))
-        val withAge =
-          (if (prevStashExists) {
-            // the stash is self-written parquet: its own schema carries AGE
-            // (a pre-AGE stash from an older checkpoint reads as age 1)
-            val p = spark.read.parquet(prevStashP.toString)
-            raw.withColumn(AGE, lit(0)).unionByName(
-              if (p.columns.contains(AGE)) p else p.withColumn(AGE, lit(1)))
-          } else raw.withColumn(AGE, lit(0)))
-            // read by the stash anti-join AND the parse's own commit
-            // semi-join — without the cache each pays a fresh file scan
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val withPrev = withAge.select(rawCols: _*)
-        // shared with the parse's committed semi-join (incl. the corrupt-
-        // COMMIT xid fallback) so the two joins can never disagree
-        val commits = WalParser.commitXids(withPrev)
-        // corrupt slot rows (null xid/data — see WalParser's marker) never
-        // match a COMMIT, so the bare anti-join would re-stash them FOREVER;
-        // the parse below quarantines them THIS epoch, so stashing them too
-        // would re-quarantine a fresh copy every subsequent batch
-        val pending = withAge.filter(col("xid").isNotNull && col("data").isNotNull)
-          .join(commits, Seq("xid"), "left_anti")
-        // eviction is per TRANSACTION — a txn whose oldest line aged out
-        // leaves the stash WHOLE: evicting lines individually could leave a
-        // late-committing giant txn half-applied, half-quarantined
-        val maxAge = cfg.walOrphanEpochs
-        // evicted-xid LEDGER: a txn outliving the window can still emit
-        // lines (or its COMMIT itself) in LATER batches — half of it already
-        // sits in quarantine, so applying the late arrivals would tear the
-        // transaction silently across lake state and quarantine. The ledger
-        // ((xid, evictedAtEpoch) pairs, carried forward like the stash)
-        // routes every later arrival of an evicted txn to the same
-        // quarantine, keeping the txn whole and replay-drainable as a unit.
-        // It is driver-side state (a tiny text file, one eviction per line,
-        // rewritten without a Spark job) and PRUNED: an entry expires
-        // `ledgerRetention` epochs after its eviction. Unbounded retention
-        // would be wrong twice over — every future batch would pay the
-        // ledger predicate forever, and PostgreSQL xids are 32-bit and WRAP,
-        // so a stale entry would eventually quarantine an unrelated
-        // committed transaction that reused the xid. Retention must exceed
-        // the longest plausible straggler lateness (epochs, not wall time)
-        // and stay far below xid wrap; 64 orphan windows does both.
-        // An existing ledger is honored even with eviction disabled
-        // (maxAge=0): stickiness is a correctness invariant of PAST
-        // evictions, not of the current eviction policy.
-        val ledgerRetention = if (maxAge > 0) maxAge.toLong * 64 else 1024L
-        val ledgerPrev: Seq[(Long, Long)] =
-          readEvictionLedger(spark, s"$stashRoot/evicted=${epoch - 1}", epoch - 1)
-            .filter(_._2 > epoch - ledgerRetention)
-        val prevXids = ledgerPrev.map(_._1).toSet
-        // the stash block's jobs (the aggregate below, the stash write and
-        // the eviction probe) carry a `wal:` label; the caller's label is
-        // restored before the merge, so neither the merge's jobs nor the
-        // maintenance tick's inherit it
-        val sc = spark.sparkContext
-        val prevLabel = sc.getLocalProperty("spark.job.description")
-        sc.setJobDescription(s"wal: pending stash (epoch $epoch)")
-        // ONE aggregate job on the (cached) pending lines yields the row
-        // count AND the expired-xid set together — previously a separate
-        // distinct+collect probe preceded the stash write, and the write ran
-        // even when pending was EMPTY (the steady state: whole txns per
-        // batch), paying a full parquet-committer job to record nothing.
-        // The xid set stays driver-bounded: per-TXN xids of a rare
-        // producer-wedge event, not rows (collect_set drops the when's
-        // nulls, so only aged-out lines contribute). Fresh rows enter at
-        // AGE=0 and maxAge >= 1, so without a carried stash the set is
-        // provably empty — same gate as the old probe, now free.
-        val pendingAgg = pending.groupBy().agg(
-          count(lit(1)).as("n"),
-          collect_set(when(col(AGE) >= math.max(maxAge, 1), col("xid")))
-            .as("aged")).head()
-        val nPending = pendingAgg.getLong(0)
-        val expiredXids: Seq[Long] =
-          if (maxAge <= 0 || !prevStashExists) Seq.empty
-          else pendingAgg.getSeq[Long](1).distinct
-            .filterNot(prevXids).sorted.toSeq
-        val ledger = ledgerPrev ++ expiredXids.map(x => (x, epoch))
-        val evictedAll = prevXids ++ expiredXids
-        // written BEFORE the merge, like the stash: a retried batch
-        // re-derives the identical ledger from retained inputs. Not written
-        // when empty — the steady state after retention pruning carries no
-        // ledger and pays nothing.
-        if (ledger.nonEmpty)
-          writeEvictionLedger(spark, s"$stashRoot/evicted=$epoch", ledger)
-        // evicted txns never stash (their lines quarantine the batch they
-        // arrive in); null-xid corrupt markers are already excluded by the
-        // filter above, and pending's xids are non-null so the negated
-        // membership predicate has no three-valued-logic trap.
-        // An EMPTY pending set writes no parquet at all (and on a retry:
-        // emptiness is a pure function of the retained batch + stash(N-1) +
-        // ledger(N-1), so a replayed epoch re-derives it identically). Two
-        // empty shapes:
-        //  - a carried stash DRAINED this epoch: supersede it with a
-        //    driver-side EMPTY-marker dir (two metadata ops, no Spark job) —
-        //    the newest epoch dir must always be the live carry-out, or the
-        //    stale predecessor reads as "txn still circling" one epoch after
-        //    it resolved (the stash specs pin this observable);
-        //  - steady state (no carry-in): write nothing, probe nothing.
-        // The delete is belt-and-braces for dirs from older builds/attempts.
-        if (nPending == 0) {
-          val p = new org.apache.hadoop.fs.Path(s"$stashRoot/epoch=$epoch")
-          if (isHadoopDir(stashFs, p)) stashFs.delete(p, true): Unit
-          if (prevStashExists) {
-            stashFs.mkdirs(p): Unit
-            stashFs.create(
-              new org.apache.hadoop.fs.Path(p, EMPTY_STASH), true).close()
-          }
-        } else {
-          // bounded file count: the carry-over is usually a handful of
-          // straggler lines — one ~500k-line file per task beats one file
-          // per upstream partition (coalesce: no extra shuffle)
-          val stashParts = math.max(1L, math.min(
-            nPending / 500000L + 1L, para.toLong)).toInt
-          (if (evictedAll.nonEmpty)
-            pending.filter(!col("xid").isInCollection(evictedAll))
-           else pending)
-            .withColumn(AGE, col(AGE) + 1)
-            .coalesce(stashParts)
-            .write.mode("overwrite").parquet(s"$stashRoot/epoch=$epoch")
-        }
-        // with a schema registry, one stream parses EVERY registered payload
-        // version (the wire format carries column names inline): per-row
-        // version detection + rename/widen normalization, so a batch mixing
-        // v1 and v2 rows needs no restart — cfg.payloadSchema is the BASE
-        // (version-1) payload in that case. Without one it is the plain parse.
-        def parseFeed(df: DataFrame) = WalParser.parseVersionedForTable(df,
-          cfg.payloadSchema, cfg.schemaRegistry, schemaName, tableName)
-        // ORPHAN EVICTION: every line of an evicted txn in this batch (aged
-        // out of the stash, or a late arrival matching the ledger) re-parses
-        // with a synthesized COMMIT (so the same parse decodes its payload)
-        // but with the op marked so the merge QUARANTINES it — uncommitted
-        // data must never apply, even when the real COMMIT finally shows up
-        // after the eviction. Nothing vanishes and nothing loops: reason +
-        // full payload are browsable under this epoch, and a
-        // replayQuarantine with fix = strip the op prefix re-drives them if
-        // the operator establishes the transaction really committed.
-        // Deterministic on a retried batch (a pure function of raw + the
-        // retained stash/ledger of epoch-1), like the stash write above.
-        // Gate: the dual-parse plan is built only when THIS batch actually
-        // carries lines of an evicted txn — newly expired lines are in the
-        // carried stash by construction; otherwise (a live ledger but a
-        // clean batch, the common case after an eviction) one cheap
-        // membership probe keeps the plan the plain single-parse shape.
-        val evicting = expiredXids.nonEmpty || (prevXids.nonEmpty &&
-          !withPrev.filter(col("xid").isInCollection(prevXids)).isEmpty)
-        sc.setJobDescription(prevLabel)
-        val parsed = if (!evicting) parseFeed(withPrev) else {
-          // isNull keeps the corrupt-row markers on the live path (their
-          // quarantine reason is the parse's own, not the orphan mark);
-          // a bare negated isInCollection would three-value them away
-          val live = withPrev.filter(
-            col("xid").isNull || !col("xid").isInCollection(evictedAll))
-          val orphanLines = withPrev.filter(
-            col("xid").isNotNull && col("xid").isInCollection(evictedAll))
-          val synth = orphanLines.select(col("xid")).distinct().select(
-            lit(-1L).as("lsn"), col("xid"),
-            concat(lit("COMMIT "), col("xid")).as("data"))
-          val opCol = graft.model.ChangeEvent.OP
-          val orphans = parseFeed(orphanLines.unionByName(synth))
-            .withColumn(opCol,
-              concat(lit(MergeApply.ORPHANED_OP_PREFIX), col(opCol)))
-          parseFeed(live).unionByName(orphans)
-        }
-        try processBatch(spark, lake, runCfg)(parsed, epoch)
-        finally { withAge.unpersist(); () }
-        // the retry window only ever replays the LAST epoch: GC stashes and
-        // ledgers older than epoch-1 (best-effort, idempotent on retry; the
-        // ledger is cumulative, so only the newest copy matters)
-        (try stashFs.listStatus(stashRootP).toSeq
-         catch { case _: java.io.FileNotFoundException => Seq.empty }
-        ).foreach { st =>
-          val name = st.getPath.getName
-          val pref = Seq("epoch=", "evicted=").find(name.startsWith)
-          val tail = pref.map(name.stripPrefix)
-          if (tail.flatMap(t => scala.util.Try(t.toLong).toOption)
-              .exists(_ < epoch - 1)) {
-            stashFs.delete(st.getPath, true): Unit
-          }
-        }
+    launch("wal", WalTransactions.assemble(stream, cfg.walOrphanEpochs),
+        cfg.checkpointDir, availableNow, intervalSeconds) {
+      (lines: DataFrame, epoch: Long) =>
+        // the frame runs the stateful operator, which must run exactly once
+        // per epoch: persisted for the parse's several reads, and run even
+        // for an epoch the lake already committed (a crash between the lake
+        // commit and Spark's), or Spark refuses the state-store commit
+        val kept = lines.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          if (lake.isCommitted(epoch)) kept.count(): Unit
+          // with a schema registry, one stream parses EVERY registered
+          // payload version (the wire format carries column names inline):
+          // per-row version detection + rename/widen normalization, so a
+          // batch mixing v1 and v2 rows needs no restart — cfg.payloadSchema
+          // is the BASE (version-1) payload in that case
+          processBatch(spark, lake, runCfg)(WalParser.parseVersionedForTable(kept,
+            cfg.payloadSchema, cfg.schemaRegistry, schemaName, tableName), epoch)
+        } finally { kept.unpersist(); () }
     }
   }
 
-  /** The Hadoop FileSystem owning `path` (plus the parsed Path): checkpoint
-    * state must be probed through the path's own scheme — a java.io.File
-    * probe on an hdfs://s3a:// checkpoint is always false, silently
-    * disabling whatever the probe guards. FileSystem instances are cached
-    * by (scheme, authority), so this is cheap per batch. */
-  private[graft] def hadoopFs(spark: SparkSession, path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
-
-  private def isHadoopDir(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): Boolean =
-    try fs.getFileStatus(p).isDirectory
-    catch { case _: java.io.FileNotFoundException => false }
-
-  /** Marker file of a stash epoch dir recording "the carry-in drained to
-    * nothing here" — written driver-side instead of paying a Spark parquet
-    * job for zero rows; the carry-in probe treats such a dir as absent. */
-  private val EMPTY_STASH = "_EMPTY_STASH"
-
-  /** Read the evicted-xid ledger carried under the WAL pending stash:
-    * a plain text file of `xid evictedAtEpoch` lines ([[writeEvictionLedger]]).
-    * A ledger left by a pre-retention checkpoint is a parquet DIRECTORY of
-    * bare xids: read it once via Spark and stamp every entry as evicted at
-    * `fallbackEpoch` (the newest possible time — it then lives a full
-    * retention window, the safe direction). */
-  private[graft] def readEvictionLedger(
-      spark: SparkSession, path: String, fallbackEpoch: Long): Seq[(Long, Long)] = {
-    val (fs, p) = hadoopFs(spark, path)
-    val status =
-      try Some(fs.getFileStatus(p))
-      catch { case _: java.io.FileNotFoundException => None }
-    status match {
-      case Some(st) if st.isFile =>
-        val in = fs.open(p)
-        val src = scala.io.Source.fromInputStream(in, "UTF-8")
-        try src.getLines().filter(_.nonEmpty).map { l =>
-          l.split(" ", 2) match {
-            case Array(x, e) => (x.toLong, e.toLong)
-            // loud, named failure: silently skipping a line would drop a past
-            // eviction and tear that transaction across lake and quarantine
-            case _ => sys.error(s"corrupt eviction ledger $path: line '$l' " +
-              "(expected 'xid evictedAtEpoch'); restore or delete the ledger " +
-              "after verifying no evicted transaction is still in flight")
-          }
-        }.toList
-        finally { src.close(); in.close() }
-      case Some(st) if st.isDirectory =>
-        spark.read.parquet(path).select("xid").collect()
-          .map(r => (r.getLong(0), fallbackEpoch)).sortBy(_._1).toSeq
-      case _ => Seq.empty
-    }
-  }
-
-  /** Overwrite the epoch's ledger file — driver-side, no Spark job (the
-    * ledger is per-txn xids of a rare wedge event, not row-scale data).
-    * fsync + ATOMIC_MOVE: a torn ledger line would crash
-    * [[readEvictionLedger]] on every restart and wedge the stream — the
-    * exact failure class the ledger exists to prevent. The ledger lives in
-    * the streaming checkpoint (possibly remote), so it keeps this writer
-    * rather than `LakeTable.publish`, which fsyncs nothing. The
-    * process-crash ordering argument (torn ledger ⇒ uncommitted batch ⇒
-    * retry rewrites it) does not cover power loss, where the checkpoint
-    * commit can reach disk while an unforced ledger page does not. */
-  private[graft] def writeEvictionLedger(spark: SparkSession, path: String,
-      ledger: Seq[(Long, Long)]): Unit = {
-    val body = ledger.map { case (x, e) => s"$x $e" }.mkString("", "\n", "\n")
-    val uri = java.net.URI.create(
-      // Path normalizes; a raw string with spaces would throw — the ledger
-      // path is engine-derived (checkpointDir + fixed names), so keep simple
-      new org.apache.hadoop.fs.Path(path).toString)
-    // a local path, scheme-less (kept verbatim) or file:, is written with
-    // fsync + ATOMIC_MOVE. Hadoop's file: FileSystem cannot stand in: its
-    // checksummed stream is not Syncable, so hsync() there is only a flush,
-    // and it leaves a `.<name>.crc` sibling the stash GC never sweeps. The
-    // Hadoop branch below is therefore reached only by remote checkpoints.
-    if (uri.getScheme == null || uri.getScheme == "file") {
-      import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
-      val target = Paths.get(if (uri.getScheme == null) path else uri.getPath)
-      Option(target.getParent).foreach(Files.createDirectories(_))
-      val tmp = target.resolveSibling(target.getFileName.toString + ".tmp")
-      val ch = java.nio.channels.FileChannel.open(tmp,
-        StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-        StandardOpenOption.WRITE)
-      try {
-        ch.write(java.nio.ByteBuffer.wrap(body.getBytes("UTF-8"))): Unit
-        ch.force(true)
-      } finally ch.close()
-      // a checksum an older build's Hadoop write left beside this name would
-      // not match the new body, and the file: read-back verifies it
-      Files.deleteIfExists(target.resolveSibling(s".${target.getFileName}.crc")): Unit
-      Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING): Unit
-    } else {
-      // remote checkpoint (hdfs/s3a/…): same tmp-then-rename shape through
-      // the path's own FileSystem — hsync is fsync on HDFS; object stores
-      // make the PUT visible atomically on close. FileContext rename with
-      // OVERWRITE is the atomic-replace primitive (FileSystem.rename
-      // refuses an existing target on HDFS).
-      val (fs, target) = hadoopFs(spark, path)
-      val tmp = new org.apache.hadoop.fs.Path(
-        target.getParent, target.getName + ".tmp")
-      fs.mkdirs(target.getParent): Unit
-      val out = fs.create(tmp, true)
-      try {
-        out.write(body.getBytes("UTF-8"))
-        out.hsync()
-      } finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        target.toUri, spark.sessionState.newHadoopConf())
-      fc.rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
+  /** Refuse, by name, a WAL checkpoint of a build before the state-store
+    * operator (a `wal-pending/` stash, or committed batches and no `state/`):
+    * Spark would fail its first batch on a missing state file. */
+  private def refuseStashCheckpoint(spark: SparkSession, checkpointDir: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(checkpointDir)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def under(name: String) = new org.apache.hadoop.fs.Path(checkpointDir, name)
+    val stateless = fs.exists(under("commits")) && !fs.exists(under("state")) &&
+      fs.listStatus(under("commits")).exists(!_.getPath.getName.startsWith("."))
+    if (fs.exists(under("wal-pending")) || stateless)
+      throw new IllegalStateException(s"WAL checkpoint $checkpointDir was written " +
+        "by an earlier build that kept pending transactions outside Spark's state " +
+        "store (a hand-kept wal-pending/ stash) and cannot be resumed: " +
+        "restart the stream with reload (a fresh table and checkpoint), or finish " +
+        "it on the previous build")
   }
 
   private[graft] def deleteRecursively(f: java.io.File): Unit = {

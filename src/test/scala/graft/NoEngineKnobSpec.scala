@@ -103,15 +103,12 @@ class NoEngineKnobSpec extends AnyFunSuite {
     * file by atomic move or link, writes parquet into a table's data or
     * quarantine dir, or writes into a quarantine dir (the post-transform
     * marker included) — `LakeTable` owns each of those writes, and
-    * `LakeTable.publish` holds the one `ATOMIC_MOVE` inside `lake/`. Two
-    * atomic moves write no table and are exempt: the WAL eviction ledger
-    * (streaming checkpoint) and the feed writer's staged-file renames.
-    * Comment lines are not scanned. */
+    * `LakeTable.publish` holds the one `ATOMIC_MOVE` inside `lake/`. One
+    * atomic move writes no table and is exempt: the feed writer's
+    * staged-file renames. Comment lines are not scanned. */
   test("table files are written only inside graft.lake; lake/ holds one ATOMIC_MOVE") {
     val lakeDir = root.resolve("lake")
-    val exempt = Map(
-      root.resolve("runner/CdcRunner.scala") -> "def writeEvictionLedger(",
-      root.resolve("feed/ChangeFeed.scala") -> "def writeFeed(")
+    val exempt = Map(root.resolve("feed/ChangeFeed.scala") -> "def writeFeed(")
     val atomicMove = """StandardCopyOption\.ATOMIC_MOVE""".r
     val publishes = """StandardCopyOption\.ATOMIC_MOVE|Files\.createLink\b""".r
     val tableWrite = ("""\.parquet\([^\n]*(?:dataDir|quarantineDir)\(|""" +
@@ -154,5 +151,36 @@ class NoEngineKnobSpec extends AnyFunSuite {
     assert(hits.isEmpty,
       s"${hits.size} stored-row build(s) outside graft.lake.StoredRows:\n${hits.mkString("\n")}")
     assert(storedRow.findAllMatchIn(read(root.resolve("lake/StoredRows.scala"))).nonEmpty)
+  }
+
+  /** Stream state is Spark's: the runners and sources keep none of their own
+    * under the streaming checkpoint. `launch` hands the checkpoint dir to
+    * Spark as its `checkpointLocation` option; the one other use is the
+    * guard in `CdcRunner` that refuses, by name, a WAL checkpoint of the
+    * earlier hand-kept stash. Comment lines are not scanned. */
+  test("runner/ and feed/ build no path under the streaming checkpoint dir") {
+    val underCheckpoint = ("""checkpointDir\s*\}\s*/|checkpointDir\s*\+\s*"|""" +
+      """(?:Path|File|Paths\.get|Path\.of)\(\s*[\w.]*checkpointDir\s*,|""" +
+      """checkpointDir\s*\)\s*\.resolve\(""").r
+    val guardFile = root.resolve("runner/CdcRunner.scala")
+    val guard = "def refuseStashCheckpoint("
+    val hits = Seq("runner", "feed").flatMap(d => scalaFiles(root.resolve(d))).flatMap { f =>
+      val text = read(f)
+      val code = codeOnly(text)
+      val span =
+        if (f != guardFile) 0 until 0
+        else {
+          val at = code.indexOf(guard)
+          assert(at >= 0, s"$guard not found in $f")
+          at until memberEnd(code, at)
+        }
+      underCheckpoint.findAllMatchIn(code).filterNot(m => span.contains(m.start))
+        .map(m => located(f, text, m.start)).toSeq
+    }
+    assert(hits.isEmpty,
+      s"${hits.size} path(s) built under the checkpoint dir — keep stream state in " +
+        s"Spark's operator state:\n${hits.mkString("\n")}")
+    assert(underCheckpoint.findAllMatchIn(codeOnly(read(guardFile))).nonEmpty,
+      "the scan no longer sees the guard's own checkpoint paths")
   }
 }

@@ -1,7 +1,5 @@
 package graft.feed
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -11,19 +9,18 @@ import graft.model._
 import graft.runner.{CdcRunner, RunnerConfig}
 
 /**
- * The two halves of the "a transaction must never wedge the pending stash"
- * contract:
+ * The two halves of the "a transaction must never wait forever" contract:
  *
  *  1. a CORRUPT COMMIT slot row (NULL xid, line text intact) must not orphan
  *     its transaction — the xid is recovered from the `COMMIT 1234` text
- *     itself (WalParser.commitXids, shared by the parse's semi-join and the
- *     stash's anti-join), the txn applies, and the corrupt row quarantines
- *     once like any other marker;
+ *     itself (WalParser.txnOf, shared by the parse's semi-join and the
+ *     transaction operator's grouping key), the txn applies, and the corrupt
+ *     row quarantines once like any other marker;
  *  2. a transaction whose COMMIT never arrives at all (producer wedge, an
  *     unrecoverable commit row) is EVICTED whole after `walOrphanEpochs`
  *     micro-batches — payload parsed, browsable under the eviction epoch,
- *     replayQuarantine-drainable — instead of being re-copied forever and
- *     silently never applying.
+ *     replayQuarantine-drainable — instead of waiting forever and silently
+ *     never applying.
  */
 class WalOrphanSpec extends SparkSpec {
 
@@ -58,6 +55,12 @@ class WalOrphanSpec extends SparkSpec {
       "^" + java.util.regex.Pattern.quote(
         graft.apply.MergeApply.ORPHANED_OP_PREFIX), ""))
 
+  /** xids still waiting for their COMMIT in the WAL operator's state. */
+  private def pendingXids(checkpointDir: String): Set[Long] =
+    spark.read.format("statestore").load(checkpointDir)
+      .filter(!col("value.groupState.evicted")).select("key.value")
+      .collect().map(_.getLong(0)).toSet
+
   private def cfgFor(root: String, orphanEpochs: Int = 16) = RunnerConfig(
     feedDir = s"$root/feed", tableDir = s"$root/table",
     checkpointDir = s"$root/cp",
@@ -72,7 +75,7 @@ class WalOrphanSpec extends SparkSpec {
     writeFiles(root, Seq(
       Seq(Row(1L, 10L, "BEGIN 10"), dml(2L, 10L, "d-a", 3)),
       // the COMMIT slot row arrives CORRUPT in the next micro-batch — both
-      // xid joins would see NULL and the stash would re-carry txn 10 forever
+      // xid joins would see NULL and txn 10 would wait forever
       Seq(Row(3L, null, "COMMIT 10"),
         Row(4L, 11L, "BEGIN 11"), dml(5L, 11L, "d-b", 7),
         Row(6L, 11L, "COMMIT 11"))))
@@ -87,16 +90,9 @@ class WalOrphanSpec extends SparkSpec {
     assert(q.length == 1 && q(0).getAs[String](
       graft.apply.MergeApply.QUARANTINE_REASON).startsWith("unknown_op"),
       s"exactly the corrupt commit row quarantines, once: ${q.mkString(";")}")
-    // and nothing of txn 10 is left circling the stash: the LAST stash
-    // epoch must not carry it (epoch=0's stash legitimately held it — the
-    // COMMIT had not arrived yet)
-    val last = Option(new java.io.File(s"${cfg.checkpointDir}/wal-pending")
-      .listFiles()).getOrElse(Array.empty).filter(_.isDirectory)
-      .maxBy(_.getName.stripPrefix("epoch=").toLong)
-    val stale = scala.util.Try(
-      spark.read.parquet(last.getPath).filter(col("xid") === 10L).count())
-      .getOrElse(0L)
-    assert(stale == 0L, s"txn 10 still stashed in ${last.getName}")
+    // and nothing of txn 10 is left waiting in the operator state (after
+    // epoch 0 it legitimately waited — the COMMIT had not arrived yet)
+    assert(!pendingXids(cfg.checkpointDir).contains(10L), "txn 10 still pending")
   }
 
   test("a txn whose COMMIT never arrives evicts WHOLE after walOrphanEpochs: " +
@@ -128,16 +124,8 @@ class WalOrphanSpec extends SparkSpec {
     // counted once in the delivery audit: 3 committed DML + 2 orphans
     assert(lake.manifest.metrics("events_received") == 5L,
       s"received ${lake.manifest.metrics("events_received")}")
-    // the stash no longer carries txn 20 after the eviction epoch
-    Seq(2L, 3L).foreach { e =>
-      val d = new java.io.File(s"${cfg.checkpointDir}/wal-pending/epoch=$e")
-      if (d.isDirectory) {
-        val rows = scala.util.Try(
-          spark.read.parquet(d.getPath).filter(col("xid") === 20L).count())
-          .getOrElse(0L)
-        assert(rows == 0L, s"txn 20 still stashed in epoch=$e")
-      }
-    }
+    // the operator state no longer holds txn 20's lines after the eviction
+    assert(!pendingXids(cfg.checkpointDir).contains(20L), "txn 20 still pending")
     // the operator establishes txn 20 really committed: strip the op mark
     // and re-drive the eviction epoch — rows apply under their original LSNs
     val res = graft.apply.MergeApply.replayQuarantine(spark, lake, 2L, cfg.job,
@@ -209,35 +197,6 @@ class WalOrphanSpec extends SparkSpec {
       s"the whole txn sits in quarantine: ${q.toSeq}")
   }
 
-  test("a pre-retention checkpoint's parquet-directory ledger is still " +
-    "honored: upgraded streams keep their evicted txns sticky") {
-    val root = tmpDir("graft-walledgercompat")
-    writeFiles(root, Seq(
-      Seq(Row(1L, 70L, "BEGIN 70"), dml(2L, 70L, "d-p1", 1)),
-      Seq(Row(10L, 71L, "BEGIN 71"), dml(11L, 71L, "d-j", 4), Row(12L, 71L, "COMMIT 71")),
-      Seq(Row(20L, 72L, "BEGIN 72"), dml(21L, 72L, "d-k", 5), Row(22L, 72L, "COMMIT 72"))))
-    val cfg = cfgFor(root, orphanEpochs = 1)
-    CdcRunner.startFromWal(spark, cfg, "corpus", "documents").awaitTermination()
-    // rewrite the newest ledger in the OLD format: a parquet directory of
-    // bare xids, as a pre-retention checkpoint would have left it
-    val stash = new java.io.File(s"${cfg.checkpointDir}/wal-pending")
-    val newest = stash.listFiles().filter(_.getName.startsWith("evicted="))
-      .maxBy(_.getName.stripPrefix("evicted=").toLong)
-    assert(newest.isFile, s"expected the new text-file ledger at $newest")
-    val path = newest.getPath
-    assert(newest.delete())
-    import spark.implicits._
-    Seq(70L).toDF("xid").coalesce(1).write.parquet(path)
-    writeFiles(root, Seq(Seq(dml(30L, 70L, "d-p2", 2), Row(31L, 70L, "COMMIT 70"))))
-    CdcRunner.startFromWal(spark, cfg, "corpus", "documents").awaitTermination()
-    val lake = new graft.lake.LakeTable(cfg.tableDir)
-    val state = lake.read(spark).select("doc_id").collect().map(_.getString(0)).sorted
-    assert(state.sameElements(Array("d-j", "d-k")), state.toSeq.toString)
-    val q = lake.quarantine(spark).select("doc_id").collect().map(_.getString(0)).sorted
-    assert(q.sameElements(Array("d-p1", "d-p2")),
-      s"the parquet-ledger txn stays whole in quarantine: ${q.toSeq}")
-  }
-
   test("orphan eviction under stop_if_insert_error quarantines and CONTINUES: " +
     "a deterministic timeout eviction must not wedge the stream forever") {
     val root = tmpDir("graft-walstop")
@@ -282,82 +241,5 @@ class WalOrphanSpec extends SparkSpec {
     assert(newOnes.size == 1)
     assert(second(newOnes.head) > first.values.max,
       "appended chunk must arrive strictly after every existing one")
-  }
-
-  test("eviction ledger: atomic round-trip, no tmp residue, and a corrupt " +
-    "line fails LOUDLY (silently skipping one would drop a past eviction " +
-    "and tear that transaction across lake state and quarantine)") {
-    val root = tmpDir("graft-walledger")
-    val path = s"$root/stash/evicted=7"
-    val ledger = Seq((4100000000L, 5L), (42L, 7L)) // past-wrap-sized xid too
-    CdcRunner.writeEvictionLedger(spark, path, ledger)
-    assert(CdcRunner.readEvictionLedger(spark, path, 7L) == ledger)
-    // the scheme-qualified spelling of the SAME local dir must round-trip
-    // too: file: is written like the scheme-less path (fsync + ATOMIC_MOVE)
-    // and read back through the path's own Hadoop FileSystem, the probe a
-    // cluster checkpoint (hdfs://, s3a://) takes, where a java.io.File probe
-    // would silently read nothing
-    val qualified = s"file:$root/stash/evicted=8"
-    CdcRunner.writeEvictionLedger(spark, qualified, ledger)
-    assert(CdcRunner.readEvictionLedger(spark, qualified, 8L) == ledger)
-    assert(CdcRunner.readEvictionLedger(spark, s"$root/stash/evicted=8", 8L)
-      == ledger, "scheme-less read of the scheme-qualified write")
-    // the fsync+ATOMIC_MOVE recipe must leave no staging file and no
-    // Hadoop checksum sibling behind — either would survive the epoch GC
-    // sweep forever
-    val residue = new java.io.File(s"$root/stash").listFiles().map(_.getName)
-      .filter(n => n.endsWith(".tmp") || n.endsWith(".crc"))
-    assert(residue.isEmpty, residue.toSeq.toString)
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      "123 5\ntorn-line-no-space\n".getBytes("UTF-8"))
-    val e = intercept[RuntimeException](
-      CdcRunner.readEvictionLedger(spark, path, 7L))
-    assert(e.getMessage.contains("eviction ledger"), e.getMessage)
-    assert(e.getMessage.contains("torn-line-no-space"), e.getMessage)
-  }
-
-  test("the wal: pending-stash job label is scoped to the stash block: no " +
-    "job after the batch's first merge: job carries it, the maintenance " +
-    "tick's compaction included") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-    import org.scalatest.concurrent.Eventually._
-    import org.scalatest.time.SpanSugar._
-    val root = tmpDir("graft-wallabel")
-    writeFiles(root, Seq(
-      Seq(Row(1L, 30L, "BEGIN 30"), dml(2L, 30L, "d-a", 3), dml(3L, 30L, "d-b", 4),
-        Row(4L, 30L, "COMMIT 30"))))
-    val cfg0 = cfgFor(root)
-    val cfg = cfg0.copy(job = cfg0.job.copy(merge = MergeStrategy.MergeOnRead),
-      autoCompactEveryEpochs = 1, autoCompactMaxDeltaFiles = 1)
-    val sc = spark.sparkContext
-    val marker = s"graft-wallabel-marker-${System.nanoTime()}"
-    val labels = new java.util.concurrent.ConcurrentSkipListMap[Int, String]()
-    @volatile var markerDone = false
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        labels.put(e.jobId, Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (labels.get(e.jobId) == marker) markerDone = true
-    }
-    sc.addSparkListener(listener)
-    try {
-      CdcRunner.startFromWal(spark, cfg, "corpus", "documents").awaitTermination()
-      // the listener sees events in order: once the marker job posted its
-      // end, every job of the drain has been recorded
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      eventually(timeout(30.seconds))(assert(markerDone))
-    } finally sc.removeSparkListener(listener)
-    val lake = new graft.lake.LakeTable(cfg.tableDir)
-    assert(lake.read(spark).count() == 2)
-    assert(lake.manifest.metrics.getOrElse("compactions", 0L) >= 1L,
-      "the maintenance tick must have compacted the delta commit")
-    val ordered = labels.values.asScala.toSeq.filterNot(_ == marker)
-    assert(ordered.exists(_.startsWith("wal:")), ordered.toString)
-    val firstMerge = ordered.indexWhere(_.startsWith("merge:"))
-    assert(firstMerge >= 0, ordered.toString)
-    val leaked = ordered.drop(firstMerge).filter(_.startsWith("wal:"))
-    assert(leaked.isEmpty, s"jobs after the first merge: job labelled wal: $ordered")
   }
 }

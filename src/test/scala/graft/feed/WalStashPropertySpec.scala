@@ -159,15 +159,10 @@ class WalStashPropertySpec extends SparkSpec {
           .select(ChangeEvent.LSN, ChangeEvent.TXN_ID, ChangeEvent.DOC_ID, "n_tok")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getInt(3)))
       val quarXids = quar.map(_._2).toSet
-      // final pending stash = the newest epoch dir (older ones are GC'd)
-      val stashXids = Option(
-        new java.io.File(s"${cfg.checkpointDir}/wal-pending").listFiles())
-        .getOrElse(Array.empty).filter(f => f.getName.startsWith("epoch="))
-        .sortBy(_.getName.stripPrefix("epoch=").toLong).lastOption
-        .map(d => scala.util.Try(
-          spark.read.parquet(d.getPath).select("xid").na.drop()
-            .collect().map(_.getLong(0)).toSet).getOrElse(Set.empty[Long]))
-        .getOrElse(Set.empty[Long])
+      // still pending = the operator state's un-evicted xids
+      val stashXids = spark.read.format("statestore").load(cfg.checkpointDir)
+        .filter(!org.apache.spark.sql.functions.col("value.groupState.evicted"))
+        .select("key.value").collect().map(_.getLong(0)).toSet
       assert((quarXids & stashXids).isEmpty,
         s"$ctx: txns BOTH quarantined and still stashed: ${quarXids & stashXids}")
       val applied = txns.map(_.xid).toSet -- quarXids -- stashXids
